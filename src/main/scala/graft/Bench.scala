@@ -189,12 +189,16 @@ object Bench {
             catch { case e: Throwable => fail(name, e) }
         }
       }
-      // sub-second extra samples, interleaved the same way
+      // sub-second extra samples, interleaved the same way. The set is
+      // fixed after the first `runs` passes, exactly as the sequential
+      // path decides it: re-testing the growing median each pass would
+      // let a query drift in or out and take a different sample count.
+      val subSecond = selected.keys.filter(name =>
+        samples.get(name).exists(median(_) < subSecondThreshold)).toVector
       (1 to (extraRuns - runs).max(0)).foreach { _ =>
-        selected.foreach { case (name, fn) =>
-          if (samples.contains(name) &&
-              median(samples(name)) < subSecondThreshold)
-            try samples(name) = samples(name) :+ timeOnce(fn)
+        subSecond.foreach { name =>
+          if (samples.contains(name))
+            try samples(name) = samples(name) :+ timeOnce(selected(name))
             catch { case e: Throwable => fail(name, e) }
         }
       }

@@ -415,13 +415,12 @@ object Similarity {
       // layout + side tables write CONCURRENTLY (round 16, guide §2.6):
       // each lands in its own subdirectory, so the four commits are
       // independent and the save pays the slowest write instead of the
-      // sum of four sequential job latencies
-      // overwriting the layout may change the id type, and the previous
-      // life's tombstones / crashed-compaction tmp dir must not carry
-      // into the new snapshot (ADVICE r16 + round 17)
-      resetSnapshotSideState(spark, path)
+      // sum of four sequential job latencies. The layout is written
+      // WITHOUT its tombstoned rows, so deletions survive into the new
+      // snapshot (which carries no tombstone table of its own).
       ioParallel(Seq(
-        () => writeLayout(indexed, s"$path/layout", overwrite = true),
+        () => writeLayout(antiTombstones(indexed, tombstones, tombstoneCount),
+          s"$path/layout", overwrite = true),
         () => centroids.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
           .toDF("c", "vec")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
@@ -431,7 +430,7 @@ object Similarity {
         // the verified layout assignment rule travels too (appends must
         // place rows exactly as the layout did)
         () => saveAssignRule(spark, path, assignTwoLevel, assignSpill)))
-      ()
+      resetSnapshotSideState(spark, path)
     }
 
     /** Probe the `nprobe` nearest cells per query and rank exact cosines
@@ -563,16 +562,6 @@ object Similarity {
       sampleQueries: Int, neighborsPerQuery: Int,
       stepForLog: Long = 1L): Int = {
       val nlist = centroids.length
-      // stage timing for estimator-cost diagnosis (stderr), env-gated
-      // like the build phases
-      val timing = sys.env.contains("SPARK_GRAFT_IVF_TIMING")
-      var tPhase = System.nanoTime()
-      def phase(label: String): Unit = if (timing) {
-        val now = System.nanoTime()
-        System.err.println(
-          f"[graft] calibWidthOn phase $label: ${(now - tPhase) / 1e9}%.1f s")
-        tPhase = now
-      }
       // pseudo-queries collect ONCE (sampleQueries x dim doubles): the
       // pre-r14 shape evaluated this orderBy twice (broadcast build +
       // qVecs collect) and — far worse — cross-joined the slice against
@@ -592,7 +581,6 @@ object Similarity {
       val qIds = qRows.map(_.getLong(0))
       val qMat = qRows.map(_.getSeq[Number](1).map(_.doubleValue()).toArray)
       val qNorms = qRows.map(_.getDouble(2))
-      phase("query-collect")
       // assign ONLY the sampled slice (<= ~maxSampleRows rows) to its
       // cell. The cell rides the top-k heap DIRECTLY as the entry id
       // (the heap keeps raw (score, id) pairs, no dedup), which works
@@ -618,14 +606,12 @@ object Similarity {
           (col("col") / (element_at(lit(qNorms), col("pos") + 1) * col("vn")))
             .as("cos"),
           col("c").cast("long").as("cell"))
-      phase("plan")
       val ranksPerQuery = scored.groupBy("pos")
         .agg(TopKFunctions.topKByScore(col("cos"), col("cell"), neighborsPerQuery)
           .as("_n"))
         .select(col("pos"), explode(col("_n.id")).as("cell"))
         .collect()
         .map(r => qIds(r.getInt(0)) -> r.getLong(1).toInt)
-      phase("neighbor-scan")
       if (ranksPerQuery.isEmpty) {
         System.err.println("[graft] calibrateNprobe: EMPTY neighbor sample " +
           s"(step $stepForLog, $sampleQueries pseudo-queries) — " +
@@ -1076,13 +1062,18 @@ object Similarity {
     layoutIdTypeMemo.remove(layoutMemoKey(spark, path)); ()
   }
 
-  /** Reset a snapshot root's MUTABLE side state before a full re-save
+  /** Reset a snapshot root's MUTABLE side state after a full re-save
     * (round 17): `save()` defines a complete new snapshot, but the
     * tombstone table and a crashed compaction's tmp layout belong to
     * the PREVIOUS life of the path — left in place, the old tombstones
     * would silently delete the new index's rows on the first load, and
     * a stale manifest would "recover" a compaction against the new
-    * layout. Both are driver-side directory deletes (no Spark job). */
+    * layout. Both are driver-side directory deletes (no Spark job). It
+    * runs only once every write of the save has succeeded: a save that
+    * fails part-way leaves the previous tombstones in force, and the
+    * layout it did write already excludes the tombstoned rows. The
+    * layout id-type memo is evicted too (the overwrite may change the
+    * type — ADVICE r16). */
   private def resetSnapshotSideState(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     evictLayoutIdType(spark, path)
@@ -1495,8 +1486,8 @@ object Similarity {
     // length/null guard carries an interpreted higher-order `exists`,
     // and the mini-batch loop re-filters per iteration — with the
     // predicate re-evaluated over the cached corpus every time, it
-    // measured ~60 of the 77 s/iteration at 10M/nlist=790 (r11
-    // IvfBuildProfile). A cached boolean costs one byte per row.
+    // measured ~60 of the 77 s/iteration at 10M/nlist=790 (r11 build
+    // profile). A cached boolean costs one byte per row.
     val data = corpus.select(col(idCol).as("id"), nativeVec(corpus, vecCol).as("v"))
       .withColumn("_wf", size(col("v")) === lit(dim) && !exists(col("v"), _.isNull))
       .cache()
@@ -1594,16 +1585,6 @@ object Similarity {
     // path additionally stops early once the per-iteration centroid
     // shift converges (see trainStopShift above). The unsampled path
     // keeps the caller's `iters` untouched.
-    // phase timing for build diagnosis (stderr), enabled via env
-    val timing = sys.env.contains("SPARK_GRAFT_IVF_TIMING")
-    var tPhase = System.nanoTime()
-    def phase(label: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[graft] buildIvf phase $label: ${(now - tPhase) / 1e9}%.1f s")
-      tPhase = now
-    }
-    phase("init-collect")
-
     val effIters = if (sampled) math.max(iters, 10) else iters
     // Mini-batch EARLY STOP (VERDICT r11 item 3): the running-mean
     // accumulator's per-iteration centroid movement decays as the
@@ -1622,42 +1603,21 @@ object Similarity {
     val trainMinIters = corpus.sparkSession.conf
       .getOption("spark.graft.ann.trainMinIters").map(_.trim.toInt)
       .getOrElse(4)
-    // Assignment-CHURN early stop (VERDICT r12 item 3) — built, measured,
-    // and DISABLED BY DEFAULT (`trainStopChurn` > 0 opts in), because
-    // measurement refuted it as a recall proxy: on 10M uniform the
-    // held-out assignment churn plateaus under 2% by iteration ~5, yet
-    // the calibrated probe width at that point is nprobe ~102 of 256 —
-    // against nprobe=1 from full 10-iteration training at the SAME
-    // recall 1.0. Assignment stability is not what the calibration
-    // estimator measures: on structureless data the cells' DIRECTIONS
-    // keep sharpening with accumulated training mass (the running-mean
-    // noise shrinks ~1/sqrt(mass)) long after per-row assignments stop
-    // flipping, and the c1-vs-c102 cliff rides exactly on that
-    // sharpness. Stopping at the churn plateau trades a ~100x probe-
-    // width explosion for a ~30% build cut — a terrible trade at
-    // build-once/probe-many. The honest per-iteration stop for
-    // structureless data is a calibration-sample CELL-RECALL plateau
-    // (estimate the width per iteration, stop when it stops shrinking);
-    // until that ships, uniform-like corpora honestly run all 10
-    // iterations (the r12 shift-criterion behavior, unchanged).
-    // Cost when enabled: one ~trainStabilitySample-row assignment job
-    // per iteration (cached slice, collect of (id, cell) pairs).
-    val trainStopChurn = corpus.sparkSession.conf
-      .getOption("spark.graft.ann.trainStopChurn").map(_.trim.toDouble)
-      .getOrElse(0.0)
+    // size of the held-out slice the two-level kernel is verified on
     val stabRows = corpus.sparkSession.conf
       .getOption("spark.graft.ann.trainStabilitySample").map(_.trim.toLong)
       .getOrElse(20000L)
-    val churnOn = miniBatch && trainStopChurn > 0
-    // Calibration-width PLATEAU early stop (VERDICT r13 item 4) — the
-    // honest replacement for the refuted churn stop above: per
+    // Calibration-width PLATEAU early stop (VERDICT r13 item 4): per
     // iteration, the REAL nprobe calibration estimator ([[calibWidthOn]]
     // — the same deterministic hash slice, pseudo-queries, and quantile
     // the post-build calibrateNprobe uses) is re-evaluated under the new
     // centroids, and training stops after `trainStopPlateau` consecutive
-    // iterations with no width improvement. This tracks the quantity the
-    // churn refutation proved matters — cell-direction sharpness exactly
-    // as calibration measures it — not per-row assignment stability.
+    // iterations with no width improvement. This tracks cell-direction
+    // sharpness exactly as calibration measures it — not per-row
+    // assignment stability, which measurement refuted as a stop signal
+    // (10M uniform: held-out assignment churn plateaus under 2% by
+    // iteration ~5 while the calibrated width there is ~102 of 256,
+    // against 1 after full training).
     // A bounded 20k-row DRIVER-SIDE mirror was built and measured FIRST
     // and refuted: on uniform 10M its width reads a flat 356-388 of 790
     // across all 10 iterations while the real estimator's width
@@ -1686,7 +1646,6 @@ object Similarity {
     val trainStopPlateau = corpus.sparkSession.conf
       .getOption("spark.graft.ann.trainStopPlateau").map(_.trim.toInt)
       .getOrElse(2)
-    val plateauLogOnly = sys.env.contains("SPARK_GRAFT_IVF_PLATEAU_LOG")
     val plateauOn = miniBatch && trainStopPlateau > 0
     val plateauSampleRows = corpus.sparkSession.conf
       .getOption("spark.graft.ann.trainPlateauSample").map(_.trim.toLong)
@@ -1696,25 +1655,24 @@ object Similarity {
     // assignment this index ever does (training, layout, calibration,
     // appends after reload) uses this value, never the live conf again
     val chosenSpill = twoLevelSpill(corpus.sparkSession)
-    // the held-out slice serves three measurements: per-iteration churn,
-    // the init-time training-kernel verification, and the final layout
-    // verification — cached once, released after training
+    // the held-out slice serves two measurements: the init-time
+    // training-kernel verification and the final layout verification —
+    // cached once, released after training
     val stab =
-      if (churnOn || twoLevelWanted)
+      if (twoLevelWanted)
         data.filter(col("_wf") &&
             pmod(xxhash64(col("id"), lit("ivfstab")),
               lit(math.max(1L, nWellFormed / math.max(1L, stabRows)))) === 0)
           .select(col("id").cast("long").as("id"), col("v"))
           .cache()
       else null
-    var prevAssign: Map[Long, Int] = null
     // the plateau stop's calibration slice: the estimator's OWN hash
     // slice (centroid-independent — a pure function of the ids), so the
     // per-iteration width is the real calibrateNprobe quantity, and the
     // final iteration's width equals what a post-build calibration at
     // the same sample size measures
     val calSlice =
-      if (plateauOn || plateauLogOnly)
+      if (plateauOn)
         calibSliceOf(
           data.filter(col("_wf"))
             .select(col("id"), col("v"), l2Norm(col("v")).as("vn"))
@@ -1843,23 +1801,10 @@ object Similarity {
           }
         }
         val rel = math.sqrt(num / math.max(den, java.lang.Double.MIN_NORMAL))
-        // held-out assignment churn under the NEW centroids (the same
-        // assignCells rule the final layout will use)
-        var churn = 1.0
-        if (churnOn) {
-          val cur = stab
-            .select(col("id"), assignExpr(col("v"), updated).as("c"))
-            .filter(col("c").isNotNull)
-            .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-          if (prevAssign != null && cur.nonEmpty)
-            churn = cur.count { case (id, cc) =>
-              prevAssign.get(id).forall(_ != cc) }.toDouble / cur.size
-          prevAssign = cur
-        }
         // plateau width estimate under the NEW centroids (the state the
-        // next iteration would train from — mirrors the churn hook)
+        // next iteration would train from)
         var width = -1
-        if (plateauOn || plateauLogOnly) {
+        if (plateauOn) {
           // the REAL estimator under the new centroids, with the
           // training loop's verified kernel decision (the final layout
           // re-verifies and re-calibrates under its own pinned rule)
@@ -1869,19 +1814,16 @@ object Similarity {
           else plateauStale += 1
         }
         if (it >= trainMinIters &&
-            (rel < trainStopShift || (churnOn && churn < trainStopChurn) ||
-              (plateauOn && plateauStale >= trainStopPlateau)))
+            (rel < trainStopShift || (plateauOn && plateauStale >= trainStopPlateau)))
           converged = true
         System.err.println(f"[graft] buildIvf mini-batch iter $it/$effIters: " +
           f"centroid shift $rel%.5f" +
-          (if (churnOn) f", assignment churn $churn%.5f" else "") +
           (if (width >= 0)
             s", est cal width $width (best $plateauBest, stale $plateauStale)"
            else "") +
           (if (converged) " — converged, stopping" else ""))
       }
       centroids = updated
-      phase(s"iter-$it")
       it += 1
     }
 
@@ -1910,7 +1852,6 @@ object Similarity {
         (if (ok) "two-level layout" else "FLAT layout fallback"))
       ok
     }
-    phase("assign-verify")
 
     // Training is over (the collect loops above materialized the cache);
     // the static-sample and stability caches are internal and released
@@ -2861,13 +2802,11 @@ object Similarity {
       // §2.6): each lands in its own subdirectory, so the commits are
       // independent and the save pays the slowest write instead of the
       // sum of seven sequential job latencies (~1.5 s of pure driver
-      // round-trips per save at any scale)
-      // overwriting the layout may change the id type, and the previous
-      // life's tombstones / crashed-compaction tmp dir must not carry
-      // into the new snapshot (ADVICE r16 + round 17)
-      resetSnapshotSideState(spark, path)
+      // round-trips per save at any scale). The layout is written WITHOUT
+      // its tombstoned rows, as in IvfIndex.save.
       ioParallel(Seq(
-        () => writeLayout(coded, s"$path/layout", overwrite = true),
+        () => writeLayout(antiTombstones(coded, tombstones, tombstoneCount),
+          s"$path/layout", overwrite = true),
         () => unitCentroids.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
           .toDF("c", "vec")
           .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
@@ -2890,7 +2829,7 @@ object Similarity {
         () => saveCalibration(spark, path, calibrationEntries),
         // the verified layout assignment rule travels too
         () => saveAssignRule(spark, path, assignTwoLevel, assignSpill)))
-      ()
+      resetSnapshotSideState(spark, path)
     }
   }
 
@@ -3032,14 +2971,6 @@ object Similarity {
     val (ivf, cached) = buildIvfCached(units, "id", "u", dim, nlist, ivfIters,
       trainPointsPerCentroid)
     try {
-      val timing = sys.env.contains("SPARK_GRAFT_IVF_TIMING")
-      var tPhase = System.nanoTime()
-      def phase(label: String): Unit = if (timing) {
-        val now = System.nanoTime()
-        System.err.println(
-          f"[graft] buildIvfPq phase $label: ${(now - tPhase) / 1e9}%.1f s")
-        tPhase = now
-      }
       // normalized centroids: the scoring decomposition needs UNIT cell
       // directions (a centroid is a mean of unit vectors — inside the
       // sphere, not on it). A degenerate zero-norm centroid (empty cell)
@@ -3187,7 +3118,6 @@ object Similarity {
           else pqTrainOn(sampleResid, dim, mR, ksubR, pqIters,
             trainPointsPerCodeword = 256)
         } finally if (probeOpq) sampleResid.unpersist(blocking = false)
-      phase("pq-train")
       // ONE fused full-corpus pass — assign + residual + encode — from
       // the retained cache straight into the persisted coded layout
       // (MATERIALIZED here: an index build's product is its layout;
@@ -3200,7 +3130,6 @@ object Similarity {
         .filter(col("codes").isNotNull)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       coded.count()
-      phase("encode")
       // widths the code-size probe already earned transfer to the built
       // index (same centroids, same assignment rule, same pool rows) —
       // a probe-time `nprobe=auto` on this build hits the memo instead

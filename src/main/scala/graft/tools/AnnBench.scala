@@ -6,105 +6,291 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /**
- * ANN scale grid: synthesize an embedding corpus at 100-5000x the
- * driver testdata and run every similarity path — exact brute force,
- * IVF, PQ, BQ, IVF+PQ — measuring build time, probe time, and
+ * ANN measurements at scale, on the synthetic [[AnnData]] corpora
+ * (d=64, recall@10 of a 50-query batch).
+ *
+ * With no sub-command (`AnnBench [N ...]`) it runs the scale GRID:
+ * every similarity path — exact brute force, IVF, PQ, BQ, IVF+PQ — per
+ * distribution and tier, measuring build time, probe time, and
  * recall@10 against the exact ranking. Distributions:
  *
  *  - `uniform`: i.i.d. coordinates — hostile to POSITIONAL structure
  *    (no clusters), but in d=64 the norms concentrate, so a
- *    directionally-trained coarse quantizer partitions it well — the
- *    round-11 trainer/calibration work exposed this: full-quality
- *    centroids + calibrated nprobe reach recall 1.0 at a ~1-cell scan.
+ *    directionally-trained coarse quantizer partitions it well:
+ *    full-quality centroids + calibrated nprobe reach recall 1.0 at a
+ *    ~1-cell scan.
  *  - `clustered`: 64 sign-pattern centers + 0.15 noise — the shape
  *    real embedding corpora actually have, and the WIDE-CLUSTER stress
  *    for the refine depth (a query's ~156k-row cluster at n=10M).
- *  - `aniso` (n=1M only, round 11): clustered latents with per-dim
- *    decaying scales, Hadamard-mixed — ANISOTROPIC residuals, the
- *    regime OPQ's learned rotation exists for (Ge et al. CVPR'13);
- *    the paired opq0/opq8 rows put the rotation's win IN the grid
- *    instead of only in a unit spec.
+ *  - `aniso` (n=1M only): clustered latents with per-dim decaying
+ *    scales, Hadamard-mixed — ANISOTROPIC residuals, the regime OPQ's
+ *    learned rotation exists for (Ge et al. CVPR'13); the paired
+ *    opq0/opq8 rows put the rotation's win IN the grid instead of only
+ *    in a unit spec.
  *
- * Round 11: coarse training uses the AUTO budget everywhere
+ * Coarse training uses the AUTO budget everywhere
  * (trainPointsPerCentroid = 0 -> full training at or under ~1.25M
- * rows — bit-identical to the r9/r10 unsampled tiers — and the
- * MINI-BATCH trainer above it, which recovers full-training recall at
- * a per-iteration cost constant in n; the r10 one-sample t256 commit
- * had regressed uniform 10M recall to 0.91). Each 10M tier also
- * carries a CALIBRATED-nprobe row ([[graft.operators.Similarity.IvfIndex.calibrateNprobe]]
- * at target 0.95) next to the fixed-fraction row, and the m=16 auto
- * refine depth past the 65536 heap ceiling now runs on the spill-safe
- * rank engine instead of clamping (r10's clustered-0.82 cap).
+ * rows, the MINI-BATCH trainer above it, early-stopping on centroid
+ * shift). Each 10M tier also carries a CALIBRATED-nprobe row
+ * ([[graft.operators.Similarity.IvfIndex.calibrateNprobe]] at target
+ * 0.95) next to the fixed-fraction row, an `nlist=auto` row on uniform,
+ * and an `ivfpq[conf-auto,...]` row — the fully self-tuning conf surface
+ * driven through the same annBuildIvfPq path annTopK runs, with build_s
+ * the one-shot cost including calibration. The grid writes one JSON
+ * artifact (SPARK_GRAFT_ANNBENCH_OUT, default ANNBENCH_r13.json). Build
+ * = index construction (amortized per corpus snapshot in production);
+ * probe = one 50-query batch end to end (collect).
+ *
+ * Sub-commands measure one step of the build-once/probe-many lifecycle
+ * on the clustered corpus of size N, each in its own JVM so the long
+ * steps at n=1e8 can run detached and restart cheaply:
+ *
+ *  - `oracle N`      the exact top-K pairs of the 50-query batch,
+ *                    PERSISTED (`<tmpdir>/annbench/oracle_clustered_<N>_k10.parquet`)
+ *                    so every recall row reuses one oracle scan.
+ *  - `auto N`        the FULL zero-knowledge conf path (every knob auto,
+ *                    including the m/ksub code-size rule): build, park
+ *                    the snapshot at `<tmpdir>/annbench/park_clustered_<N>_auto`,
+ *                    probe the park; recall vs the persisted oracle.
+ *  - `probe N PARK [np] [sl] [reps]`
+ *                    probe a parked snapshot; sl <= 0 = auto depth.
+ *  - `delete N PARK frac [np]`
+ *                    tombstone `frac` of the ids (at 1e8 and frac=0.1
+ *                    that is the bloom anti-join regime), probe with the
+ *                    tombstones live (asserting no deleted id surfaces),
+ *                    compact, probe again (asserting equal results).
+ *                    Deletion mutates the snapshot — run it on a COPY.
+ *
+ * `np` defaults to 27, the calibrated width at n=1e8. Sub-command rows
+ * APPEND to a JSONL log (SPARK_GRAFT_ANNBENCH_OUT, default
+ * diagnostics/annbench.jsonl) with an explicit `kind` (build / probe /
+ * oracle) and both environment yardsticks (`spin_s`, `eff_cores`);
+ * tools/assemble_annbench.py folds a log into an ANNBENCH artifact.
  *
  * Corpora are materialized to parquet (the synthesis expression would
  * otherwise ride into every downstream plan) and reused ONLY when the
  * generator fingerprint stamp matches — a changed synthesis
  * regenerates instead of silently measuring stale data.
- *
- * Round 12: the 10M uniform tier adds an `nlist=auto` row (buildIvf's
- * 0 sentinel — ~sqrt(n)/4 cells) next to the hand-tuned 256-cell row,
- * and the mini-batch trainer early-stops on centroid-shift
- * convergence (both VERDICT r11 items).
- *
- * Round 13: each 10M tier adds a `ivfpq[conf-auto,...]` row — the
- * fully self-tuning conf surface (every sizing knob auto) driven
- * through the same annBuildIvfPq path annTopK runs, with build_s the
- * one-shot cost including calibration; assignment at nlist >= 256
- * runs the two-level kernel where the per-index verification keeps it
- * (flat fallback above 1% disagreement). An assignment-churn early
- * stop exists but ships DISABLED by default (trainStopChurn=0) — r13
- * measurement refuted churn as a calibration-width proxy — so the
- * grid does not run with it.
- *
- * Emits one JSON line per (dist, n, algo) and writes the whole grid to
- * ANNBENCH_r12.json (override via SPARK_GRAFT_ANNBENCH_OUT). Build =
- * index construction (amortized per corpus snapshot in production);
- * probe = one 50-query batch end to end (collect).
  */
 object AnnBench {
+  private val D = 64
+  private val K = 10
+  private val Usage = "usage: AnnBench [N ...] | oracle N | auto N | " +
+    "probe N PARK [np] [sl] [reps] | delete N PARK frac [np]"
+
   private case class Entry(dist: String, n: Long, algo: String,
       buildS: Double, probeS: Double, recall: Double)
 
+  private def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  private def pairsOf(df: DataFrame): Set[(Long, Long)] =
+    df.select("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def recOf(exact: Set[(Long, Long)], s: Set[(Long, Long)]): Double =
+    if (exact.isEmpty) 1.0 else (s & exact).size.toDouble / exact.size
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  private val AnnKeys =
+    Seq("algo", "nlist", "nprobe", "tppc", "shortlist", "m", "ksub", "opqIters")
+
+  /** Run `f` with the given `spark.graft.ann.*` keys set; every ANN key
+    * is unset afterwards, so one measurement's conf never leaks into
+    * the next. */
+  private def withConf[T](spark: SparkSession, kv: (String, String)*)(f: => T): T =
+    try {
+      kv.foreach { case (k, v) => spark.conf.set(s"spark.graft.ann.$k", v) }
+      f
+    } finally AnnKeys.foreach(k => spark.conf.unset(s"spark.graft.ann.$k"))
+
+  private def oraclePath(n: Long) =
+    s"${AnnData.Root}/oracle_clustered_${n}_k$K.parquet"
+
+  private def parquetFiles(dir: String): Long = {
+    def walk(f: java.io.File): Long =
+      if (f.isDirectory) f.listFiles().map(walk).sum
+      else if (f.getName.endsWith(".parquet")) 1L else 0L
+    walk(new java.io.File(dir))
+  }
+
+  private def fmt(p: String, v: Double): String =
+    String.format(java.util.Locale.ROOT, p, Double.box(v))
+
+  /** Append one sub-command row to the JSONL log, stamped with the
+    * environment yardsticks measured just before the step. */
+  private def emit(kind: String, n: Long, algo: String, env: (Double, Double),
+      fields: Seq[(String, Double)]): Unit = {
+    val fj = fields.map { case (k, v) => s""","$k":${fmt("%.4f", v)}""" }.mkString
+    val line =
+      s"""{"dist":"clustered","n":$n,"d":$D,"k":$K,"kind":"$kind","algo":"$algo",""" +
+        s""""spin_s":${fmt("%.3f", env._1)},"eff_cores":${fmt("%.2f", env._2)}$fj}""" +
+        "\n"
+    val out = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_ANNBENCH_OUT", "diagnostics/annbench.jsonl"))
+    Option(out.toAbsolutePath.getParent).foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.write(out, line.getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    System.err.println(s"[annbench] $line")
+  }
+
+  private def envNow(): (Double, Double) =
+    (graft.EnvProbe.spinSeconds(), graft.EnvProbe.effectiveCores())
+
   def main(args: Array[String]): Unit = {
-    val ns = if (args.nonEmpty) args.map(_.toLong).toSeq
-      else Seq(200000L, 1000000L, 10000000L)
-    val spark = SparkSession.builder().master("local[32]")
+    val builder = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the 1e8 probe's re-rank shuffle+sort spill can exceed a small root
+    // disk; SPARK_GRAFT_LOCAL_DIR points the spill at a roomier volume
+    sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach(d =>
+      builder.config("spark.local.dir", d))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val d = 64
-    val k = 10
-    val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
+    def arg(i: Int): Option[String] = args.lift(i)
+    def n: Long = arg(1).map(_.toLong)
+      .getOrElse(throw new IllegalArgumentException(Usage))
+    def park: String = arg(2).getOrElse(throw new IllegalArgumentException(Usage))
+    try args.headOption match {
+      case Some("oracle") => oracle(spark, n)
+      case Some("auto") => auto(spark, n)
+      case Some("probe") =>
+        probe(spark, n, park, arg(3).fold(27)(_.toInt), arg(4).fold(-1)(_.toInt),
+          arg(5).fold(3)(_.toInt))
+      case Some("delete") =>
+        delete(spark, n, park,
+          arg(3).map(_.toDouble).getOrElse(throw new IllegalArgumentException(Usage)),
+          arg(4).fold(27)(_.toInt))
+      case Some(a) if !a.forall(_.isDigit) => throw new IllegalArgumentException(Usage)
+      case _ =>
+        grid(spark, if (args.nonEmpty) args.map(_.toLong).toSeq
+          else Seq(200000L, 1000000L, 10000000L))
+    } finally spark.stop()
+  }
 
-    // corpus synthesis + parquet cache: shared with AnnBenchR14 so
-    // targeted r14 rows measure on bit-identical data
-    def corpusOf(dist: String, n: Long): DataFrame =
-      AnnData.synthCorpus(spark, dist, n, d)
+  private def clusteredCorpus(spark: SparkSession, n: Long): (DataFrame, DataFrame) = {
+    val corpus = AnnData.synthCorpus(spark, "clustered", n, D)
+    (corpus, corpus.filter(col("vec_id") < 50))
+  }
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
+  /** `reps` probes of `idx` at (np, sl): the last result and the
+    * per-rep seconds. */
+  private def probeReps(idx: Similarity.IvfPqIndex, corpus: DataFrame,
+      queries: DataFrame, np: Int, sl: Int, reps: Int): (Set[(Long, Long)], Seq[Double]) = {
+    val runs = (1 to reps).map(_ => timed(pairsOf(
+      idx.topK(queries, "vec_id", "embedding", K, np, sl, corpus))))
+    (runs.last._1, runs.map(_._2))
+  }
+
+  private def timing(ts: Seq[Double]): Seq[(String, Double)] =
+    Seq("probe_s" -> median(ts), "probe_min" -> ts.min, "probe_max" -> ts.max)
+
+  private def oracle(spark: SparkSession, n: Long): Unit = {
+    val (corpus, queries) = clusteredCorpus(spark, n)
+    val env = envNow()
+    val (res, t) = timed(
+      Similarity.topK(corpus, queries, "vec_id", "embedding", K)
+        .select("query_id", "neighbor_id").localCheckpoint())
+    res.write.mode("overwrite").parquet(oraclePath(n))
+    emit("oracle", n, "exact[50q,persisted]", env,
+      Seq("scan_s" -> t, "pairs" -> res.count().toDouble))
+  }
+
+  private def auto(spark: SparkSession, n: Long): Unit = {
+    val (corpus, queries) = clusteredCorpus(spark, n)
+    val exact = pairsOf(spark.read.parquet(oraclePath(n)))
+    val envB = envNow()
+    val ((idx, np, sl), tBuild) = withConf(spark,
+      "algo" -> "ivfpq", "nlist" -> "auto", "nprobe" -> "auto",
+      "tppc" -> "auto", "shortlist" -> "auto") {
+      timed(Similarity.annBuildIvfPq(corpus, "vec_id", "embedding", D))
     }
+    val nlist = idx.assignCentroids.length
+    val code = s"${idx.model.m}x${idx.model.ksub}"
+    val park = s"${AnnData.Root}/park_clustered_${n}_auto"
+    val (_, tSave) = timed(idx.save(park))
+    idx.unpersist()
+    emit("build", n, s"ivfpq[conf-auto,a$nlist/c$np,auto->$code]", envB,
+      Seq("build_s" -> tBuild, "save_s" -> tSave,
+        "files" -> parquetFiles(s"$park/layout").toDouble,
+        "m" -> idx.model.m.toDouble, "ksub" -> idx.model.ksub.toDouble))
+    val envP = envNow()
+    val (res, ts) = probeReps(Similarity.loadIvfPq(spark, park), corpus, queries,
+      np, sl, reps = 3)
+    emit("probe", n, s"ivfpq[parked,a$nlist/c$np,$code]", envP,
+      timing(ts) :+ ("recall" -> recOf(exact, res)))
+  }
 
-    def pairsOf(df: DataFrame): Set[(Long, Long)] =
-      df.select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+  private def probe(spark: SparkSession, n: Long, park: String, np: Int,
+      sl: Int, reps: Int): Unit = {
+    val (corpus, queries) = clusteredCorpus(spark, n)
+    val exact = pairsOf(spark.read.parquet(oraclePath(n)))
+    val env = envNow()
+    val loaded = Similarity.loadIvfPq(spark, park)
+    val (res, ts) = probeReps(loaded, corpus, queries, np, sl, reps)
+    emit("probe", n,
+      s"ivfpq[parked,a${loaded.assignCentroids.length}/c$np," +
+        s"${loaded.model.m}x${loaded.model.ksub},sl=$sl]",
+      env, timing(ts) ++ Seq("recall" -> recOf(exact, res),
+        "files" -> parquetFiles(s"$park/layout").toDouble))
+  }
 
+  private def delete(spark: SparkSession, n: Long, park: String, frac: Double,
+      np: Int): Unit = {
+    val (corpus, queries) = clusteredCorpus(spark, n)
+    // removal set: every id == 1 (mod `mod`) — about `frac` of the corpus
+    val mod = math.max(2L, math.round(1.0 / frac))
+    val removals = corpus.select(col("vec_id"))
+      .filter(pmod(col("vec_id"), lit(mod)) === lit(1L))
+    val env = envNow()
+    val (nDel, tDel) = timed(
+      Similarity.deleteFromIndex(spark, park, removals, "vec_id"))
+    emit("build", n, s"ivfpq[delete,mod$mod]", env,
+      Seq("delete_s" -> tDel, "tombstones" -> nDel.toDouble))
+    // probe with the tombstones live (bloom anti-join regime at > 1M)
+    val (res, ts) = probeReps(Similarity.loadIvfPq(spark, park), corpus,
+      queries, np, sl = -1, reps = 3)
+    val ghost = res.count { case (_, nb) => nb % mod == 1 }
+    require(ghost == 0, s"deleted ids surfaced in probe: $ghost pairs")
+    emit("probe", n, s"ivfpq[tombstoned,mod$mod,c$np]", env,
+      timing(ts) :+ ("ghosts" -> ghost.toDouble))
+    // compact: rewrite the affected cells, clear the tombstones
+    val (removed, tCompact) = timed(Similarity.compactIndex(spark, park))
+    val env2 = envNow()
+    val (res2, ts2) = probeReps(Similarity.loadIvfPq(spark, park), corpus,
+      queries, np, sl = -1, reps = 3)
+    require(res2 == res,
+      s"compaction changed probe results: ${(res diff res2).take(3)}")
+    emit("build", n, s"ivfpq[compact,mod$mod]", env2,
+      Seq("compact_s" -> tCompact, "removed" -> removed.toDouble,
+        "files" -> parquetFiles(s"$park/layout").toDouble))
+    emit("probe", n, s"ivfpq[compacted,mod$mod,c$np]", env2,
+      timing(ts2) :+ ("equal_to_tombstoned" -> 1.0))
+  }
+
+  private def grid(spark: SparkSession, ns: Seq[Long]): Unit = {
+    val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
     val dists = Seq("uniform", "clustered", "aniso")
     for (dist <- dists; n <- ns
          if !(dist == "aniso" && n != 1000000L)) { // aniso: the 1M OPQ tier only
       val big = n > 2000000L
-      val corpus = corpusOf(dist, n).persist()
+      val corpus = AnnData.synthCorpus(spark, dist, n, D).persist()
       corpus.count()
       val queries = corpus.filter(col("vec_id") < 50)
 
       val (exact, tExact) = timed(pairsOf(
-        Similarity.topK(corpus, queries, "vec_id", "embedding", k)))
+        Similarity.topK(corpus, queries, "vec_id", "embedding", K)))
       entries += Entry(dist, n, "exact", 0.0, tExact, 1.0)
-      def rec(s: Set[(Long, Long)]): Double =
-        if (exact.isEmpty) 1.0 else (s & exact).size.toDouble / exact.size
+      def rec(s: Set[(Long, Long)]): Double = recOf(exact, s)
 
       // nlist: <=1M tiers keep the r9/r10 sqrt(n)/4-capped-at-256 shape
       // so rows stay comparable across rounds. At 10M the two regimes
@@ -130,14 +316,14 @@ object AnnBench {
       // build time includes materializing the layout (persist+count) —
       // the production build-once/probe-many contract
       val (ivf, tIvfBuild) = timed {
-        val i = Similarity.buildIvf(corpus, "vec_id", "embedding", d, nlist,
+        val i = Similarity.buildIvf(corpus, "vec_id", "embedding", D, nlist,
           iters = 3, trainPointsPerCentroid = tppc)
         i.persist()
         i.topWidths(1) // any action over the layout fills the persisted blocks
         i
       }
       val (ivfRes, tIvfProbe) = timed(pairsOf(
-        ivf.topK(queries, "vec_id", "embedding", k, nprobe)))
+        ivf.topK(queries, "vec_id", "embedding", K, nprobe)))
       entries += Entry(dist, n, s"ivf[$nlist/$nprobe,auto]", tIvfBuild, tIvfProbe, rec(ivfRes))
 
       // calibrated probe width (round 11): nprobe from a MEASURED
@@ -146,7 +332,7 @@ object AnnBench {
       if (big) {
         val (cal, tCal) = timed(ivf.calibrateNprobe(0.95))
         val (calRes, tCalProbe) = timed(pairsOf(
-          ivf.topK(queries, "vec_id", "embedding", k, cal)))
+          ivf.topK(queries, "vec_id", "embedding", K, cal)))
         entries += Entry(dist, n, s"ivf[$nlist/c$cal,auto]", tCal, tCalProbe, rec(calRes))
       }
       ivf.unpersist()
@@ -157,7 +343,7 @@ object AnnBench {
       // carries the row where the rule actually deviates (790 vs 256).
       if (big && dist == "uniform") {
         val (aivf, tABuild) = timed {
-          val i = Similarity.buildIvf(corpus, "vec_id", "embedding", d,
+          val i = Similarity.buildIvf(corpus, "vec_id", "embedding", D,
             nlist = 0, iters = 3, trainPointsPerCentroid = 0)
           i.persist()
           i.topWidths(1)
@@ -166,7 +352,7 @@ object AnnBench {
         val anl = aivf.centroids.length
         val (acal, _) = timed(aivf.calibrateNprobe(0.95))
         val (aRes, tAProbe) = timed(pairsOf(
-          aivf.topK(queries, "vec_id", "embedding", k, acal)))
+          aivf.topK(queries, "vec_id", "embedding", K, acal)))
         entries += Entry(dist, n, s"ivf[a$anl/c$acal,auto]", tABuild, tAProbe, rec(aRes))
         aivf.unpersist()
       }
@@ -174,15 +360,15 @@ object AnnBench {
       if (!big) {
         // PQ: m=16 x 256 codewords, shortlist 2k
         val (pqModel, tPqBuild) = timed(
-          Similarity.pqTrain(corpus, "vec_id", "embedding", d, m = 16, ksub = 256))
+          Similarity.pqTrain(corpus, "vec_id", "embedding", D, m = 16, ksub = 256))
         val (pqRes, tPqProbe) = timed(pairsOf(
-          Similarity.pqTopK(corpus, queries, "vec_id", "embedding", k, pqModel,
+          Similarity.pqTopK(corpus, queries, "vec_id", "embedding", K, pqModel,
             shortlist = 2000)))
         entries += Entry(dist, n, "pq[16x256]", tPqBuild, tPqProbe, rec(pqRes))
 
         // BQ: training-free, shortlist 2k
         val (bqRes, tBqProbe) = timed(pairsOf(
-          Similarity.bqTopK(corpus, queries, "vec_id", "embedding", k, d, shortlist = 2000)))
+          Similarity.bqTopK(corpus, queries, "vec_id", "embedding", K, D, shortlist = 2000)))
         entries += Entry(dist, n, "bq", 0.0, tBqProbe, rec(bqRes))
       }
 
@@ -194,7 +380,7 @@ object AnnBench {
           calibrate: Boolean = false): Unit = {
         val tag = if (opqIters > 0) s",opq$opqIters" else ""
         val (ivfpq, tBuild) = timed {
-          val idx = Similarity.buildIvfPq(corpus, "vec_id", "embedding", d,
+          val idx = Similarity.buildIvfPq(corpus, "vec_id", "embedding", D,
             nlist = nlist, ivfIters = 3, m = m, ksub = 256, pqIters = 3,
             opqIters = opqIters, trainPointsPerCentroid = tppc)
           idx.coded.persist().count() // materialize like a snapshot would
@@ -212,7 +398,7 @@ object AnnBench {
         } else Seq.empty)
         allProbes.foreach { case ((np, label, s), bS) =>
           val (res, tProbe) = timed(pairsOf(
-            ivfpq.topK(queries, "vec_id", "embedding", k, np, s, corpus)))
+            ivfpq.topK(queries, "vec_id", "embedding", K, np, s, corpus)))
           entries += Entry(dist, n, s"ivfpq[$nlist/$np,${m}x256$tag,$label]",
             bS, tProbe, rec(res))
         }
@@ -247,25 +433,19 @@ object AnnBench {
         // (annBuildIvfPq — exactly what annTopK runs), so build_s is
         // the honest one-shot cost INCLUDING calibration and probe_s
         // is one query batch at the resolved width/depth.
-        val confKeys = Seq("algo", "nlist", "nprobe", "tppc", "shortlist",
-          "m", "ksub")
-        try {
-          spark.conf.set("spark.graft.ann.algo", "ivfpq")
-          Seq("nlist", "nprobe", "tppc", "shortlist")
-            .foreach(kk => spark.conf.set(s"spark.graft.ann.$kk", "auto"))
-          spark.conf.set("spark.graft.ann.m", "16")
-          spark.conf.set("spark.graft.ann.ksub", "256")
+        withConf(spark, "algo" -> "ivfpq", "nlist" -> "auto", "nprobe" -> "auto",
+            "tppc" -> "auto", "shortlist" -> "auto", "m" -> "16", "ksub" -> "256") {
           val (built, tCBuild) = timed(
-            Similarity.annBuildIvfPq(corpus, "vec_id", "embedding", d))
+            Similarity.annBuildIvfPq(corpus, "vec_id", "embedding", D))
           val (cIdx, cNp, cSl) = built
           try {
             val anl = cIdx.assignCentroids.length
             val (cRes, tCProbe) = timed(pairsOf(
-              cIdx.topK(queries, "vec_id", "embedding", k, cNp, cSl, corpus)))
+              cIdx.topK(queries, "vec_id", "embedding", K, cNp, cSl, corpus)))
             entries += Entry(dist, n, s"ivfpq[conf-auto,a$anl/c$cNp,16x256]",
               tCBuild, tCProbe, rec(cRes))
           } finally cIdx.unpersist() // a probe failure must not leak the pinned layout
-        } finally confKeys.foreach(kk => spark.conf.unset(s"spark.graft.ann.$kk"))
+        }
       }
 
       entries.filter(e => e.dist == dist && e.n == n).foreach { e =>
@@ -276,7 +456,7 @@ object AnnBench {
     }
 
     val json = entries.map { e =>
-      f"""{"dist":"${e.dist}","n":${e.n},"d":$d,"k":$k,"algo":"${e.algo}",""" +
+      f"""{"dist":"${e.dist}","n":${e.n},"d":$D,"k":$K,"algo":"${e.algo}",""" +
         f""""build_s":${"%.2f".format(e.buildS)},"probe_s":${"%.2f".format(e.probeS)},""" +
         f""""recall":${"%.4f".format(e.recall)}}"""
     }.mkString(",\n  ")
@@ -285,6 +465,5 @@ object AnnBench {
     java.nio.file.Files.write(java.nio.file.Paths.get(outName),
       out.getBytes("UTF-8"))
     println(s"[annbench] wrote $outName with ${entries.size} entries")
-    spark.stop()
   }
 }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Shared synthetic-corpus generator for the ANN measurement tools
- * ([[AnnBench]] grid, [[AnnBenchR14]] targeted rows): one synthesis
- * expression, one parquet cache, one generator-fingerprint rule, so a
- * row measured by any tool is measured on bit-identical data.
+ * Synthetic-corpus generator for [[AnnBench]] (the grid and its
+ * sub-commands): one synthesis expression, one parquet cache, one
+ * generator-fingerprint rule, so every row is measured on
+ * bit-identical data.
  *
  * Distributions (see AnnBench's header for the full rationale):
  * `uniform` (i.i.d. coords), `clustered` (64 sign-pattern centers +
@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
 private[tools] object AnnData {
   val GenVer = 2 // bump when any synthesis expression changes
 
+  /** Cache root for corpora, oracles and parked snapshots. */
+  val Root: String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "annbench").toString
+
   /** H_d/sqrt(d): the orthogonal mixing matrix for the aniso corpus. */
   private def hadamard(d: Int): Array[Array[Double]] = {
     def sign(i: Int, j: Int): Int = Integer.bitCount(i & j) % 2 * -2 + 1
@@ -32,7 +36,7 @@ private[tools] object AnnData {
     // not force regeneration of the (unchanged) others
     val synthVer = Map("aniso" -> 2).getOrElse(dist, 1)
     val params = s"""{"dist":"$dist","n":$n,"d":$d,"genver":$GenVer,"synth":$synthVer}"""
-    val path = s"/tmp/annbench/${dist}_${n}_d${d}_v${GenVer}s$synthVer.parquet"
+    val path = s"$Root/${dist}_${n}_d${d}_v${GenVer}s$synthVer.parquet"
     val stamp = new java.io.File(s"$path/_params.json")
     val fresh = new java.io.File(path, "_SUCCESS").exists() &&
       stamp.exists() &&
@@ -70,13 +74,4 @@ private[tools] object AnnData {
     }
     spark.read.parquet(path).select("vec_id", "embedding")
   }
-
-  /** The shared environment fingerprint (single implementation in
-    * [[graft.EnvProbe]] since r15 — ADVICE r14: the Bench and AnnData
-    * copies could drift and desynchronize the yardstick). */
-  def spinSeconds(): Double = graft.EnvProbe.spinSeconds()
-
-  /** Parallel-spin effective cores — the r14 blind spot's fix; see
-    * [[graft.EnvProbe.effectiveCores]]. */
-  def effectiveCores(): Double = graft.EnvProbe.effectiveCores()
 }

@@ -175,6 +175,53 @@ class AnnDeleteSpec extends AnyFunSuite {
     assert(Similarity.compactIndex(spark, path) == 0L)
   }
 
+  test("save after delete: a re-saved snapshot keeps deleted ids deleted (IVF and IVFPQ)") {
+    // save() of a tombstoned index must write the SURVIVING layout: the
+    // new snapshot has no tombstone table, so an unfiltered layout would
+    // bring every deleted id back on load
+    val removeIds = embs.filter(col("vec_id") % 6 === 2).select("vec_id")
+    val nRemove = removeIds.count()
+    val nSurvive = embs.count() - nRemove
+    val queries = embs.filter(col("vec_id") < 20)
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    def tombstoned(prefix: String)(save: String => Unit): String = {
+      val path = tmp(prefix)
+      save(path)
+      assert(Similarity.deleteFromIndex(spark, path, removeIds, "vec_id") == nRemove)
+      path
+    }
+    def assertSurvivorsOnly(kind: String, dst: String, probe: Set[(Long, Long)]): Unit = {
+      val layout = spark.read.parquet(s"$dst/layout")
+      assert(layout.count() == nSurvive, s"$kind: re-saved layout must hold only survivors")
+      assert(layout.filter(col("id") % 6 === 2).isEmpty,
+        s"$kind: deleted ids resurrected in the re-saved layout")
+      assert(probe.nonEmpty && !probe.exists(_._2 % 6 == 2),
+        s"$kind: a deleted id was returned after save + reload")
+    }
+
+    val ivfSrc = tombstoned("ivf-resave-src-") { p =>
+      val b = Similarity.buildIvf(embs, "vec_id", "embedding", dim = 64, nlist = 16, iters = 3)
+      b.save(p)
+      b.unpersist()
+    }
+    val ivfDst = tmp("ivf-resave-dst-")
+    Similarity.loadIvf(spark, ivfSrc).save(ivfDst)
+    assertSurvivorsOnly("IVF", ivfDst, pairsOf(Similarity.loadIvf(spark, ivfDst)
+      .topK(queries, "vec_id", "embedding", k = 5, nprobe = 16)))
+
+    val pqSrc = tombstoned("ivfpq-resave-src-") { p =>
+      val b = Similarity.buildIvfPq(embs, "vec_id", "embedding", dim = 64,
+        nlist = 16, ivfIters = 3, m = 16, ksub = 32, pqIters = 3)
+      b.save(p)
+      b.unpersist()
+    }
+    val pqDst = tmp("ivfpq-resave-dst-")
+    Similarity.loadIvfPq(spark, pqSrc).save(pqDst)
+    assertSurvivorsOnly("IVFPQ", pqDst, pairsOf(Similarity.loadIvfPq(spark, pqDst)
+      .topK(queries, "vec_id", "embedding", k = 5, nprobe = 16, shortlist = 200,
+        corpus = embs)))
+  }
+
   test("save writes ONE file per cell — the layout write clusters by cell before partitioning") {
     // without the cluster-by-cell repartition, a save emits one file
     // per (source task, cell) pair — measured 487,500 files at

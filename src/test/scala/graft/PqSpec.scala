@@ -638,11 +638,10 @@ class PqSpec extends AnyFunSuite {
       nlist = 4, iters = 2, trainPointsPerCentroid = 0)
     def cents(i: Similarity.IvfIndex) = i.centroids.map(_.toSeq).toSeq
     val keys = Seq("autoTrainFloor", "trainStopShift", "trainMinIters",
-      "trainStopChurn", "trainStopPlateau")
+      "trainStopPlateau")
     try {
       spark.conf.set("spark.graft.ann.autoTrainFloor", "64")
-      // churn + plateau stops off: this test pins the SHIFT criterion
-      spark.conf.set("spark.graft.ann.trainStopChurn", "0")
+      // plateau stop off: this test pins the SHIFT criterion
       spark.conf.set("spark.graft.ann.trainStopPlateau", "0")
       // a huge threshold converges at the minimum-iterations floor ...
       spark.conf.set("spark.graft.ann.trainStopShift", "1e9")
@@ -671,47 +670,10 @@ class PqSpec extends AnyFunSuite {
     } finally keys.foreach(k => spark.conf.unset(s"spark.graft.ann.$k"))
   }
 
-  test("assignment-churn early stop: fires where the shift criterion cannot, deterministically") {
-    import spark.implicits._
-    // same mini-batch corpus shape as the shift test; shift threshold 0
-    // disables the shift stop so any early exit is the CHURN criterion's
-    val corpus = (0L until 3000L).map { i =>
-      (i, Array.tabulate(8)(j => math.sin(i * 0.7 + j * 1.3).toFloat))
-    }.toDF("vec_id", "embedding")
-    def build() = Similarity.buildIvf(corpus, "vec_id", "embedding", dim = 8,
-      nlist = 4, iters = 2, trainPointsPerCentroid = 0)
-    def cents(i: Similarity.IvfIndex) = i.centroids.map(_.toSeq).toSeq
-    val keys = Seq("autoTrainFloor", "trainStopShift", "trainMinIters",
-      "trainStopChurn", "trainStopPlateau")
-    try {
-      spark.conf.set("spark.graft.ann.autoTrainFloor", "64")
-      spark.conf.set("spark.graft.ann.trainStopShift", "0")
-      spark.conf.set("spark.graft.ann.trainStopPlateau", "0")
-      spark.conf.set("spark.graft.ann.trainMinIters", "1")
-      // an always-met churn threshold (> 1.0 covers even the first
-      // measurable iteration) stops at the minimum-iterations floor
-      spark.conf.set("spark.graft.ann.trainStopChurn", "2.0")
-      val one = build()
-      // churn disabled -> the full 10 sampled iterations (r11 behavior)
-      spark.conf.set("spark.graft.ann.trainStopChurn", "0")
-      val never = build()
-      assert(cents(one) != cents(never),
-        "an always-met churn threshold must stop training before 10 iterations")
-      assert(cents(never) == cents(build()),
-        "churn-stop logic must stay deterministic")
-      // layout contract unaffected by where training stopped
-      val q = corpus.filter(col("vec_id") < 5)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet
-      assert(rows(one.topK(q, "vec_id", "embedding", 3, 4)) ==
-        rows(Similarity.topK(corpus, q, "vec_id", "embedding", 3)))
-    } finally keys.foreach(k => spark.conf.unset(s"spark.graft.ann.$k"))
-  }
-
   test("calibration-width plateau early stop: fires on a stale width, deterministically") {
     import spark.implicits._
-    // same mini-batch corpus shape as the shift/churn tests; shift and
-    // churn stops disabled so any early exit is the PLATEAU criterion's
+    // same mini-batch corpus shape as the shift test; shift stop
+    // disabled so any early exit is the PLATEAU criterion's
     val corpus = (0L until 3000L).map { i =>
       (i, Array.tabulate(8)(j => math.sin(i * 0.7 + j * 1.3).toFloat))
     }.toDF("vec_id", "embedding")
@@ -719,11 +681,10 @@ class PqSpec extends AnyFunSuite {
       nlist = 4, iters = 2, trainPointsPerCentroid = 0)
     def cents(i: Similarity.IvfIndex) = i.centroids.map(_.toSeq).toSeq
     val keys = Seq("autoTrainFloor", "trainStopShift", "trainMinIters",
-      "trainStopChurn", "trainStopPlateau")
+      "trainStopPlateau")
     try {
       spark.conf.set("spark.graft.ann.autoTrainFloor", "64")
       spark.conf.set("spark.graft.ann.trainStopShift", "0")
-      spark.conf.set("spark.graft.ann.trainStopChurn", "0")
       spark.conf.set("spark.graft.ann.trainMinIters", "1")
       // patience 1: stop at the first iteration whose estimated
       // calibration width fails to improve on the best seen — at
