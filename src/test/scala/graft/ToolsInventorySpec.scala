@@ -22,11 +22,8 @@ class ToolsInventorySpec extends AnyFunSuite {
       .flatMap { f =>
         val src = new String(Files.readAllBytes(f), "UTF-8")
         val starts = objectDecl.findAllMatchIn(src).toSeq
-        starts.zipWithIndex.collect {
-          case (m, i) if {
-            val end = starts.lift(i + 1).map(_.start).getOrElse(src.length)
-            src.substring(m.start, end).contains("def main(")
-          } => m.group(1)
+        starts.zip(starts.drop(1).map(_.start) :+ src.length).collect {
+          case (m, end) if src.substring(m.start, end).contains("def main(") => m.group(1)
         }
       }.toSet
   }
