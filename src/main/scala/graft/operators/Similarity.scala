@@ -418,7 +418,7 @@ object Similarity {
       // sum of four sequential job latencies. The layout is written
       // WITHOUT its tombstoned rows, so deletions survive into the new
       // snapshot (which carries no tombstone table of its own).
-      ioParallel(Seq(
+      writeSnapshot(spark, path, Seq(
         () => writeLayout(antiTombstones(indexed, tombstones, tombstoneCount),
           s"$path/layout", overwrite = true),
         () => centroids.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
@@ -430,7 +430,6 @@ object Similarity {
         // the verified layout assignment rule travels too (appends must
         // place rows exactly as the layout did)
         () => saveAssignRule(spark, path, assignTwoLevel, assignSpill)))
-      resetSnapshotSideState(spark, path)
     }
 
     /** Probe the `nprobe` nearest cells per query and rank exact cosines
@@ -1062,25 +1061,22 @@ object Similarity {
     layoutIdTypeMemo.remove(layoutMemoKey(spark, path)); ()
   }
 
-  /** Reset a snapshot root's MUTABLE side state after a full re-save
-    * (round 17): `save()` defines a complete new snapshot, but the
-    * tombstone table and a crashed compaction's tmp layout belong to
-    * the PREVIOUS life of the path — left in place, the old tombstones
-    * would silently delete the new index's rows on the first load, and
-    * a stale manifest would "recover" a compaction against the new
-    * layout. Both are driver-side directory deletes (no Spark job). It
-    * runs only once every write of the save has succeeded: a save that
-    * fails part-way leaves the previous tombstones in force, and the
-    * layout it did write already excludes the tombstoned rows. The
-    * layout id-type memo is evicted too (the overwrite may change the
-    * type — ADVICE r16). */
-  private def resetSnapshotSideState(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+  /** Run a full snapshot's `writes` concurrently, clearing the side
+    * state of the path's previous life around them (driver-side
+    * deletes, no Spark job). A crashed compaction's tmp layout goes
+    * first: it never belongs to the index being saved, and a stale
+    * committed manifest would "recover" old cells into the new layout.
+    * The tombstones go only after every write succeeded, so a failed
+    * save leaves them in force. The id-type memo is evicted too (the
+    * overwrite may change the type — ADVICE r16). */
+  private def writeSnapshot(spark: org.apache.spark.sql.SparkSession,
+      path: String, writes: Seq[() => Unit]): Unit = {
     evictLayoutIdType(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/layout_compacting"), true)
+    ioParallel(writes)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
     ()
   }
 
@@ -2804,7 +2800,7 @@ object Similarity {
       // sum of seven sequential job latencies (~1.5 s of pure driver
       // round-trips per save at any scale). The layout is written WITHOUT
       // its tombstoned rows, as in IvfIndex.save.
-      ioParallel(Seq(
+      writeSnapshot(spark, path, Seq(
         () => writeLayout(antiTombstones(coded, tombstones, tombstoneCount),
           s"$path/layout", overwrite = true),
         () => unitCentroids.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
@@ -2829,7 +2825,6 @@ object Similarity {
         () => saveCalibration(spark, path, calibrationEntries),
         // the verified layout assignment rule travels too
         () => saveAssignRule(spark, path, assignTwoLevel, assignSpill)))
-      resetSnapshotSideState(spark, path)
     }
   }
 

@@ -62,8 +62,8 @@ import graft.operators.Similarity
  *                    Deletion mutates the snapshot — run it on a COPY.
  *
  * `np` defaults to 27, the calibrated width at n=1e8. Sub-command rows
- * APPEND to a JSONL log (SPARK_GRAFT_ANNBENCH_OUT, default
- * diagnostics/annbench.jsonl) with an explicit `kind` (build / probe /
+ * APPEND to the JSONL log diagnostics/annbench.jsonl with an explicit
+ * `kind` (build / probe /
  * oracle) and both environment yardsticks (`spin_s`, `eff_cores`);
  * tools/assemble_annbench.py folds a log into an ANNBENCH artifact.
  *
@@ -125,6 +125,8 @@ object AnnBench {
   private def fmt(p: String, v: Double): String =
     String.format(java.util.Locale.ROOT, p, Double.box(v))
 
+  private val OutJsonl = "diagnostics/annbench.jsonl"
+
   /** Append one sub-command row to the JSONL log, stamped with the
     * environment yardsticks measured just before the step. */
   private def emit(kind: String, n: Long, algo: String, env: (Double, Double),
@@ -134,8 +136,7 @@ object AnnBench {
       s"""{"dist":"clustered","n":$n,"d":$D,"k":$K,"kind":"$kind","algo":"$algo",""" +
         s""""spin_s":${fmt("%.3f", env._1)},"eff_cores":${fmt("%.2f", env._2)}$fj}""" +
         "\n"
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_ANNBENCH_OUT", "diagnostics/annbench.jsonl"))
+    val out = java.nio.file.Paths.get(OutJsonl)
     Option(out.toAbsolutePath.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.write(out, line.getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE,

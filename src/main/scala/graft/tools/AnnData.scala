@@ -22,8 +22,7 @@ private[tools] object AnnData {
   val GenVer = 2 // bump when any synthesis expression changes
 
   /** Cache root for corpora, oracles and parked snapshots. */
-  val Root: String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "annbench").toString
+  val Root = "/tmp/annbench"
 
   /** H_d/sqrt(d): the orthogonal mixing matrix for the aniso corpus. */
   private def hadamard(d: Int): Array[Array[Double]] = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -175,6 +175,19 @@ class AnnDeleteSpec extends AnyFunSuite {
     assert(Similarity.compactIndex(spark, path) == 0L)
   }
 
+  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+  private def buildIvfAt(rows: DataFrame, path: String): Unit = {
+    val b = Similarity.buildIvf(rows, "vec_id", "embedding", dim = 64, nlist = 16, iters = 3)
+    b.save(path)
+    b.unpersist()
+  }
+  private def buildIvfPqAt(rows: DataFrame, path: String): Unit = {
+    val b = Similarity.buildIvfPq(rows, "vec_id", "embedding", dim = 64,
+      nlist = 16, ivfIters = 3, m = 16, ksub = 32, pqIters = 3)
+    b.save(path)
+    b.unpersist()
+  }
+
   test("save after delete: a re-saved snapshot keeps deleted ids deleted (IVF and IVFPQ)") {
     // save() of a tombstoned index must write the SURVIVING layout: the
     // new snapshot has no tombstone table, so an unfiltered layout would
@@ -183,10 +196,9 @@ class AnnDeleteSpec extends AnyFunSuite {
     val nRemove = removeIds.count()
     val nSurvive = embs.count() - nRemove
     val queries = embs.filter(col("vec_id") < 20)
-    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
-    def tombstoned(prefix: String)(save: String => Unit): String = {
+    def tombstoned(prefix: String, build: (DataFrame, String) => Unit): String = {
       val path = tmp(prefix)
-      save(path)
+      build(embs, path)
       assert(Similarity.deleteFromIndex(spark, path, removeIds, "vec_id") == nRemove)
       path
     }
@@ -199,27 +211,61 @@ class AnnDeleteSpec extends AnyFunSuite {
         s"$kind: a deleted id was returned after save + reload")
     }
 
-    val ivfSrc = tombstoned("ivf-resave-src-") { p =>
-      val b = Similarity.buildIvf(embs, "vec_id", "embedding", dim = 64, nlist = 16, iters = 3)
-      b.save(p)
-      b.unpersist()
-    }
     val ivfDst = tmp("ivf-resave-dst-")
-    Similarity.loadIvf(spark, ivfSrc).save(ivfDst)
+    Similarity.loadIvf(spark, tombstoned("ivf-resave-src-", buildIvfAt)).save(ivfDst)
     assertSurvivorsOnly("IVF", ivfDst, pairsOf(Similarity.loadIvf(spark, ivfDst)
       .topK(queries, "vec_id", "embedding", k = 5, nprobe = 16)))
 
-    val pqSrc = tombstoned("ivfpq-resave-src-") { p =>
-      val b = Similarity.buildIvfPq(embs, "vec_id", "embedding", dim = 64,
-        nlist = 16, ivfIters = 3, m = 16, ksub = 32, pqIters = 3)
-      b.save(p)
-      b.unpersist()
-    }
     val pqDst = tmp("ivfpq-resave-dst-")
-    Similarity.loadIvfPq(spark, pqSrc).save(pqDst)
+    Similarity.loadIvfPq(spark, tombstoned("ivfpq-resave-src-", buildIvfPqAt)).save(pqDst)
     assertSurvivorsOnly("IVFPQ", pqDst, pairsOf(Similarity.loadIvfPq(spark, pqDst)
       .topK(queries, "vec_id", "embedding", k = 5, nprobe = 16, shortlist = 200,
         corpus = embs)))
+  }
+
+  test("a failed save leaves no stale compaction manifest behind (IVF and IVFPQ)") {
+    // the destination's previous index (even ids) left a committed
+    // compaction manifest; the new index (odd ids) writes its layout but
+    // fails a side-table write. The next entry point must not "recover"
+    // the old index's cells into the new layout.
+    val newRows = embs.filter(col("vec_id") % 2 === 1)
+    val nNew = newRows.count()
+    def check(kind: String, build: (DataFrame, String) => Unit,
+        failingSave: String => Unit, reload: String => Unit): Unit = {
+      val dst = tmp(s"$kind-failed-save-")
+      build(embs.filter(col("vec_id") % 2 === 0), dst)
+      val tmpDir = s"$dst/layout_compacting"
+      spark.read.parquet(s"$dst/layout").repartition(1)
+        .write.partitionBy("c").parquet(tmpDir)
+      val cells = spark.read.parquet(tmpDir).select("c").distinct()
+        .collect().map(_.getInt(0))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmpDir/_MANIFEST"),
+        cells.map(c => s"$c 1").mkString("\n").getBytes("UTF-8"))
+      intercept[Exception](failingSave(dst))
+      reload(dst)
+      val ids = spark.read.parquet(s"$dst/layout").select(col("id").cast("long"))
+        .collect().map(_.getLong(0))
+      val stale = ids.count(_ % 2 == 0)
+      assert(ids.length == nNew && stale == 0,
+        s"$kind: the layout after a failed save must hold only the new index's " +
+          s"$nNew rows, got ${ids.length} with $stale of the old index's")
+    }
+
+    val ivfNew = tmp("ivf-failed-save-src-")
+    buildIvfAt(newRows, ivfNew)
+    check("ivf", buildIvfAt, { dst =>
+      val idx = Similarity.loadIvf(spark, ivfNew)
+      idx.centroids(0) = null // fails the centroids write, not the layout's
+      idx.save(dst)
+    }, dst => Similarity.loadIvf(spark, dst))
+
+    val pqNew = tmp("ivfpq-failed-save-src-")
+    buildIvfPqAt(newRows, pqNew)
+    check("ivfpq", buildIvfPqAt, { dst =>
+      val idx = Similarity.loadIvfPq(spark, pqNew)
+      idx.unitCentroids(0) = null
+      idx.save(dst)
+    }, dst => Similarity.loadIvfPq(spark, dst))
   }
 
   test("save writes ONE file per cell — the layout write clusters by cell before partitioning") {
