@@ -7,6 +7,14 @@ sealed abstract class Direction(val isMin: Boolean) extends Serializable
 object Direction {
   case object Min extends Direction(true)
   case object Max extends Direction(false)
+
+  /** The direction a `min` / `max` token names (any case, surrounding
+    * blanks ignored); None for any other token. */
+  def of(token: String): Option[Direction] = token.trim.toLowerCase match {
+    case "min" => Some(Min)
+    case "max" => Some(Max)
+    case _ => None
+  }
 }
 
 /**
@@ -256,6 +264,12 @@ object SkylineCore {
     }
   }
 
+  /** Most occupied cells [[keptOccupiedKeys]] accepts. The prune is an
+    * O(|occupied|^2 * d) driver-side loop; 2^16 cells => <= ~4e9 cheap
+    * comparisons, still sub-second-ish, and the driver-side collect of
+    * the keys stays at 512 KB. Beyond that the caller should coarsen b. */
+  val MaxOccupiedGridCells: Int = 1 << 16
+
   /**
    * Sound dominated-cell prune: among the cells that actually contain
    * points, keep those not strictly dominated by another occupied cell.
@@ -268,11 +282,7 @@ object SkylineCore {
    */
   def keptOccupiedKeys(minDir: Array[Boolean], b: Int, occupied: Seq[Long]): Seq[Long] = {
     val d = minDir.length
-    // The prune is an O(|occupied|^2 * d) driver-side loop; cap it so a
-    // too-fine grid fails loudly instead of hanging the driver. 2^16
-    // occupied cells => <= ~4e9 cheap comparisons, still sub-second-ish;
-    // beyond that the caller should coarsen b.
-    require(occupied.size <= (1 << 16),
+    require(occupied.size <= MaxOccupiedGridCells,
       s"${occupied.size} occupied grid cells — too many for the dominated-cell " +
         "prune; use a smaller grid base b")
     val digits = occupied.map(k => k -> decimalToBaseLong(k, b, d)).toMap

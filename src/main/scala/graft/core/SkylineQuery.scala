@@ -30,12 +30,8 @@ object SkylineQuery {
     val dims = body.split(",").toSeq.map { part =>
       val toks = part.trim.split("\\s+")
       require(toks.length == 2, s"each dimension must be '<col> MIN|MAX', got: '${part.trim}'")
-      val dir = toks(1).toLowerCase match {
-        case "min" => Direction.Min
-        case "max" => Direction.Max
-        case other => throw new IllegalArgumentException(s"unknown direction '$other' in '$part'")
-      }
-      (toks(0), dir)
+      (toks(0), Direction.of(toks(1)).getOrElse(throw new IllegalArgumentException(
+        s"unknown direction '${toks(1).toLowerCase}' in '$part'")))
     }
     require(dims.nonEmpty, "empty dimension list")
     dims

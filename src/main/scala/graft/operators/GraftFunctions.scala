@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
+import graft.core.Direction
+
 /**
  * SQL-surface registration: exposes the skyline aggregate to
  * `spark.sql(...)` so the whole engine is reachable without the Scala
@@ -27,29 +29,40 @@ import org.apache.spark.sql.types.{DoubleType, StringType}
  */
 object GraftFunctions {
 
+  /** `fn`'s directions literal: a comma-separated min/max list, one
+    * entry per dimension column; true = MIN. */
+  private def directions(fn: String, arg: Expression, nDims: Int): Array[Boolean] = {
+    val minDir = arg match {
+      case Literal(s, StringType) if s != null =>
+        s.toString.split(",").map(t => Direction.of(t).getOrElse(throw new IllegalArgumentException(
+          s"$fn direction must be min or max, got '${t.trim.toLowerCase}'")).isMin)
+      case other => throw new IllegalArgumentException(
+        s"$fn's first argument must be a string literal of directions, got $other")
+    }
+    require(minDir.length == nDims, s"$fn: ${minDir.length} directions for $nDims dimension columns")
+    minDir
+  }
+
+  /** The value of an integer-literal argument; `what` names it in the error. */
+  private def intLiteral(what: String, arg: Expression): Int = arg match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
+  }
+
+  /** The buffer cap of the skyline-family aggregates. Builders run at
+    * analysis time, so the active session's cap applies (the default
+    * outside a session). */
+  private def sessionCap: Int =
+    try SkylineAggExpr.configuredCap(SparkSession.active)
+    catch { case _: IllegalStateException => SkylineAggExpr.DefaultMaxBuffer }
+
   private def buildSkylineAgg(exprs: Seq[Expression]): Expression = {
     require(exprs.length >= 2,
       "skyline_agg(directions, dim1, ...) needs a directions literal and at least one dimension")
-    val minDir = exprs.head match {
-      case Literal(s, StringType) if s != null =>
-        s.toString.split(",").map(_.trim.toLowerCase).map {
-          case "min" => true
-          case "max" => false
-          case other => throw new IllegalArgumentException(
-            s"skyline_agg direction must be min or max, got '$other'")
-        }
-      case other => throw new IllegalArgumentException(
-        s"skyline_agg's first argument must be a string literal of directions, got $other")
-    }
-    require(minDir.length == exprs.length - 1,
-      s"skyline_agg: ${minDir.length} directions for ${exprs.length - 1} dimension columns")
+    val minDir = directions("skyline_agg", exprs.head, exprs.length - 1)
     // Cast every dimension to double like the DSL path does — without it
     // an int64 column would ClassCastException inside update() at runtime.
-    // The builder runs at analysis time, so the active session's buffer
-    // cap applies (falling back to the default outside a session).
-    val cap = try SkylineAggExpr.configuredCap(SparkSession.active)
-              catch { case _: IllegalStateException => SkylineAggExpr.DefaultMaxBuffer }
-    SkylineAggExpr(exprs.tail.map(Cast(_, DoubleType)), minDir, cap).toAggregateExpression()
+    SkylineAggExpr(exprs.tail.map(Cast(_, DoubleType)), minDir, sessionCap).toAggregateExpression()
   }
 
   private def arity(name: String, n: Int)(
@@ -65,11 +78,7 @@ object GraftFunctions {
   private def buildTopKAgg(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3 || exprs.length == 4,
       s"topk_agg(score, id, k[, largest]) takes 3-4 arguments, got ${exprs.length}")
-    val k = exprs(2) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"topk_agg's k must be an integer literal, got $other")
-    }
+    val k = intLiteral("topk_agg's k", exprs(2))
     val largest = exprs.lift(3) match {
       case None => true
       case Some(Literal(b: Boolean, _)) => b
@@ -87,27 +96,9 @@ object GraftFunctions {
   private def buildKSkybandAgg(exprs: Seq[Expression]): Expression = {
     require(exprs.length >= 3,
       "kskyband_agg(directions, k, dim1, ...) needs a directions literal, k, and at least one dimension")
-    val minDir = exprs.head match {
-      case Literal(s, StringType) if s != null =>
-        s.toString.split(",").map(_.trim.toLowerCase).map {
-          case "min" => true
-          case "max" => false
-          case other => throw new IllegalArgumentException(
-            s"kskyband_agg direction must be min or max, got '$other'")
-        }
-      case other => throw new IllegalArgumentException(
-        s"kskyband_agg's first argument must be a string literal of directions, got $other")
-    }
-    val k = exprs(1) match {
-      case Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"kskyband_agg's k must be an integer literal, got $other")
-    }
-    require(minDir.length == exprs.length - 2,
-      s"kskyband_agg: ${minDir.length} directions for ${exprs.length - 2} dimension columns")
-    val cap = try SkylineAggExpr.configuredCap(SparkSession.active)
-              catch { case _: IllegalStateException => SkylineAggExpr.DefaultMaxBuffer }
-    KSkybandAggExpr(exprs.drop(2).map(Cast(_, DoubleType)), minDir, k, cap)
+    val minDir = directions("kskyband_agg", exprs.head, exprs.length - 2)
+    val k = intLiteral("kskyband_agg's k", exprs(1))
+    KSkybandAggExpr(exprs.drop(2).map(Cast(_, DoubleType)), minDir, k, sessionCap)
       .toAggregateExpression()
   }
 
@@ -135,14 +126,8 @@ object GraftFunctions {
       arity("vector_gram", 1)(
         exprs => VectorGramAggExpr(exprs.head).toAggregateExpression()),
     "interleave_bits" ->
-      arity("interleave_bits", 2)(exprs => {
-        val d = exprs(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"interleave_bits' dimension count must be an integer literal, got $other")
-        }
-        graft.functions.InterleaveBits(exprs.head, d)
-      }))
+      arity("interleave_bits", 2)(exprs => graft.functions.InterleaveBits(
+        exprs.head, intLiteral("interleave_bits' dimension count", exprs(1)))))
 
   /** Register graft's SQL functions on the session (idempotent). */
   def register(spark: SparkSession): Unit = {

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.ByteBuffer
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -57,12 +55,9 @@ case class KSkybandAggExpr(
   override def createAggregationBuffer(): KSkybandBuffer = new KSkybandBuffer
 
   private def checkCap(buf: KSkybandBuffer): KSkybandBuffer = {
-    if (buf.points.length > maxBuffer) {
-      throw new IllegalStateException(
-        s"k-skyband buffer exceeded $maxBuffer points " +
-          "(spark.graft.skyline.maxBufferPoints): the band of this data is too large " +
-          "to aggregate safely — reduce k or dimensions, or raise the cap.")
-    }
+    if (buf.points.length > maxBuffer) throw SkylineAggExpr.capTrip("k-skyband", maxBuffer,
+      "the band of this data is too large to aggregate safely — reduce k or dimensions, " +
+        "or raise the cap.")
     buf
   }
 
@@ -91,42 +86,20 @@ case class KSkybandAggExpr(
 
   override def eval(buf: KSkybandBuffer): Any = {
     val band = SkylineCore.kSkybandCounts(buf.points, minDir, k)
-    val ord: Ordering[(Array[Double], Int)] = (x, y) => {
-      var i = 0
-      var cmp = 0
-      while (cmp == 0 && i < x._1.length) {
-        cmp = java.lang.Double.compare(x._1(i), y._1(i)); i += 1
-      }
-      cmp
-    }
-    new GenericArrayData(band.sorted(ord).map { case (p, c) =>
+    new GenericArrayData(band.sortBy(_._1)(SkylineAggExpr.lexOrder).map { case (p, c) =>
       new GenericInternalRow(Array[Any](new GenericArrayData(p): ArrayData, c)): AnyRef
     }.toArray)
   }
 
-  override def serialize(buf: KSkybandBuffer): Array[Byte] = {
-    val d = dims.length
-    val bb = ByteBuffer.allocate(8 + buf.points.length * d * 8)
-    bb.putInt(buf.points.length).putInt(d)
-    buf.points.foreach(p => p.foreach(bb.putDouble))
-    bb.array()
-  }
+  override def serialize(buf: KSkybandBuffer): Array[Byte] =
+    SkylineAggExpr.writePoints(buf.points, dims.length)
 
   override def deserialize(bytes: Array[Byte]): KSkybandBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val d = bb.getInt()
     val buf = new KSkybandBuffer
-    var i = 0
-    while (i < n) {
-      val p = new Array[Double](d)
-      var j = 0
-      while (j < d) { p(j) = bb.getDouble(); j += 1 }
-      // re-inserting recomputes running counts within the buffer; the
-      // incoming buffer is already duplicate-free and candidate-pruned
-      SkylineCore.kSkybandInsert(buf.points, buf.counts, p, minDir, k)
-      i += 1
-    }
+    // re-inserting recomputes running counts within the buffer; the
+    // incoming buffer is already duplicate-free and candidate-pruned
+    SkylineAggExpr.readPoints(bytes)(
+      SkylineCore.kSkybandInsert(buf.points, buf.counts, _, minDir, k))
     buf
   }
 

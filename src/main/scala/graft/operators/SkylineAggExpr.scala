@@ -13,17 +13,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import graft.core.SkylineCore
 
 /**
- * The skyline aggregate as a native [[TypedImperativeAggregate]] — the
- * production form of [[SkylineAggregator]].
- *
- * Versus the `functions.udaf`-wrapped typed Aggregator, this consumes
- * the dimension expressions directly per input row: no `array(...)`
- * column packing, no encoder round-trip, no `Seq[Double]` boxing —
- * `update` evaluates d child expressions into a primitive array and
- * runs the BNL insert. Spark still performs partial aggregation (the
- * reference's map-side local skylines) and merges buffers at the final
- * stage; only skyline buffers ever cross the wire, serialized as a
- * flat double payload.
+ * The skyline aggregate as a native [[TypedImperativeAggregate]]. It
+ * consumes the dimension expressions directly per input row: no
+ * `array(...)` column packing, no encoder round-trip, no `Seq[Double]`
+ * boxing — `update` evaluates d child expressions into a primitive
+ * array and runs the BNL insert. Spark still performs partial
+ * aggregation (the reference's map-side local skylines) and merges
+ * buffers at the final stage; only skyline buffers ever cross the wire,
+ * serialized as a flat double payload.
  *
  * Output: array<array<double>> of the skyline points, sorted
  * lexicographically for determinism.
@@ -49,14 +46,11 @@ case class SkylineAggExpr(
     * opaque OOM mid-shuffle. A bounded buffer turns that into an
     * immediate, diagnosable failure with remedies attached. */
   private def checkCap(buf: ArrayBuffer[Array[Double]]): ArrayBuffer[Array[Double]] = {
-    if (buf.length > maxBuffer) {
-      throw new IllegalStateException(
-        s"skyline buffer exceeded $maxBuffer points (spark.graft.skyline.maxBufferPoints): " +
-          "the Pareto frontier of this data is too large to aggregate safely — at high " +
-          "dimensionality or on anti-correlated data the skyline approaches the input size. " +
-          "Raise the cap if the result genuinely fits in executor memory, reduce dimensions, " +
-          "or pre-filter; a result this size is rarely a useful frontier.")
-    }
+    if (buf.length > maxBuffer) throw SkylineAggExpr.capTrip("skyline", maxBuffer,
+      "the Pareto frontier of this data is too large to aggregate safely — at high " +
+        "dimensionality or on anti-correlated data the skyline approaches the input size. " +
+        "Raise the cap if the result genuinely fits in executor memory, reduce dimensions, " +
+        "or pre-filter; a result this size is rarely a useful frontier.")
     buf
   }
 
@@ -81,41 +75,16 @@ case class SkylineAggExpr(
     checkCap(SkylineCore.merge(a, b, minDir))
 
   override def eval(buf: ArrayBuffer[Array[Double]]): Any = {
-    // Double.compare, not <: the IEEE operators are not a strict weak
-    // order when NaN is present (NaN points are incomparable under
-    // dominance, so they can reach the buffer) and TimSort would throw
-    // "Comparison method violates its general contract!".
-    val ord: Ordering[Array[Double]] = (x: Array[Double], y: Array[Double]) => {
-      var i = 0
-      var cmp = 0
-      while (cmp == 0 && i < x.length) { cmp = java.lang.Double.compare(x(i), y(i)); i += 1 }
-      cmp
-    }
-    val sorted = buf.sorted(ord)
+    val sorted = buf.sorted(SkylineAggExpr.lexOrder)
     new GenericArrayData(sorted.map(p => new GenericArrayData(p): ArrayData).toArray)
   }
 
-  override def serialize(buf: ArrayBuffer[Array[Double]]): Array[Byte] = {
-    val d = dims.length
-    val bb = ByteBuffer.allocate(8 + buf.length * d * 8)
-    bb.putInt(buf.length).putInt(d)
-    buf.foreach(p => p.foreach(bb.putDouble))
-    bb.array()
-  }
+  override def serialize(buf: ArrayBuffer[Array[Double]]): Array[Byte] =
+    SkylineAggExpr.writePoints(buf, dims.length)
 
   override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Double]] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val d = bb.getInt()
-    val buf = new ArrayBuffer[Array[Double]](n)
-    var i = 0
-    while (i < n) {
-      val p = new Array[Double](d)
-      var j = 0
-      while (j < d) { p(j) = bb.getDouble(); j += 1 }
-      buf += p
-      i += 1
-    }
+    val buf = ArrayBuffer.empty[Array[Double]]
+    SkylineAggExpr.readPoints(bytes)(buf += _)
     buf
   }
 
@@ -142,4 +111,46 @@ object SkylineAggExpr {
   def configuredCap(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.getOption("spark.graft.skyline.maxBufferPoints")
       .map(_.toInt).getOrElse(DefaultMaxBuffer)
+
+  /** The loud cap trip of both aggregates. The message names the conf
+    * key, which [[SkylineOps.isBufferCapTrip]] matches on. */
+  private[operators] def capTrip(what: String, maxBuffer: Int, why: String): IllegalStateException =
+    new IllegalStateException(
+      s"$what buffer exceeded $maxBuffer points (spark.graft.skyline.maxBufferPoints): $why")
+
+  /** Lexicographic point order of the sorted outputs. Double.compare,
+    * not <: the IEEE operators are not a strict weak order when NaN is
+    * present (NaN points are incomparable under dominance, so they can
+    * reach the buffer) and TimSort would throw "Comparison method
+    * violates its general contract!". */
+  private[operators] val lexOrder: Ordering[Array[Double]] = (x: Array[Double], y: Array[Double]) => {
+    var i = 0
+    var cmp = 0
+    while (cmp == 0 && i < x.length) { cmp = java.lang.Double.compare(x(i), y(i)); i += 1 }
+    cmp
+  }
+
+  /** The buffer codec of both aggregates: an (n, d) int header, then n
+    * points of d doubles. Only points cross the wire. */
+  private[operators] def writePoints(points: collection.Seq[Array[Double]], d: Int): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 + points.length * d * 8)
+    bb.putInt(points.length).putInt(d)
+    points.foreach(p => p.foreach(bb.putDouble))
+    bb.array()
+  }
+
+  /** Decodes [[writePoints]]' payload, handing each point to `add` in order. */
+  private[operators] def readPoints(bytes: Array[Byte])(add: Array[Double] => Unit): Unit = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt()
+    val d = bb.getInt()
+    var i = 0
+    while (i < n) {
+      val p = new Array[Double](d)
+      var j = 0
+      while (j < d) { p(j) = bb.getDouble(); j += 1 }
+      add(p)
+      i += 1
+    }
+  }
 }

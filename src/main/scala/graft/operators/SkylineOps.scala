@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Direction, SkylineCore, SkylineQuery}
+import graft.functions.DominanceFunctions
 import org.apache.spark.sql.graft.ColumnShim
 
 /**
@@ -39,18 +40,6 @@ final case class AngleHint(p: Int) extends PartitionHint
  * functions.py:40,51).
  */
 object SkylineOps {
-
-  /** Default occupied-grid-cell cap for [[GridHint]]'s plan-time prune:
-    * 2^20 cells ≈ 8 MB of Long keys on the driver — far beyond any grid a
-    * sane hint produces (b <= 12 in practice ⇒ thousands of cells), small
-    * enough that the pre-pass collect can never OOM the driver. Override
-    * per session with `spark.graft.skyline.maxGridCells`. */
-  val DefaultMaxGridCells: Int = 1 << 20
-
-  private[operators] def configuredMaxGridCells(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.skyline.maxGridCells")
-      .map(_.toInt).getOrElse(DefaultMaxGridCells)
 
   /** Run directories `skylineExternal` has written this JVM. The
     * returned DataFrame reads its result run LAZILY, so there is no safe
@@ -153,6 +142,10 @@ object SkylineOps {
         .cast(IntegerType))
   }
 
+  /** Internal column aliases of the keyed aggregates; `_d{i}` (the
+    * projected dimensions) is reserved as a prefix. */
+  private val ReservedAliases = Set("_sky", "_pt", "_band", "_e")
+
   implicit class DataFrameSkyline(val df: DataFrame) {
 
     def skyline(query: String): DataFrame = skyline(SkylineQuery.parse(query))
@@ -164,42 +157,9 @@ object SkylineOps {
      * computes per-task per-group local skylines, the shuffle carries
      * only (key, skyline-buffer) pairs.
      */
-    def skylineBy(keyCols: Seq[String], dims: Seq[(String, Direction)],
-        presort: Option[Boolean] = None): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
-      require(keyCols.nonEmpty, "skylineBy needs at least one key column (use skyline otherwise)")
-      val overlap = keyCols.toSet.intersect(dims.map(_._1).toSet)
-      require(overlap.isEmpty, s"key and dimension columns overlap: $overlap")
-      val reserved = keyCols.filter(k => k.startsWith("_d") || k == "_sky" || k == "_pt")
-      require(reserved.isEmpty, s"key column names collide with internal aliases: $reserved")
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
-      val minDir = dims.map(_._2.isMin).toArray
-      val fwd = dims.zip(types).map { case ((name, _), dt) => toDouble(col(name), dt) }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      val projected = df.filter(nonNull).select(
-        keyCols.map(col) ++ fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-      // SFS presort applies per group too: hash aggregation feeds each
-      // group's buffer in partition order, and a subsequence of a
-      // score-sorted partition is still score-sorted — so one partition-
-      // local sort serves every group at once. Same d >= 5 heuristic as
-      // the global path.
-      val pts = if (!presort.getOrElse(dims.length >= 5)) projected else {
-        val sfsScore = dims.indices
-          .map(i => if (minDir(i)) col(s"_d$i") else -col(s"_d$i"))
-          .reduce(_ + _)
-        projected.sortWithinPartitions(sfsScore.asc)
-      }
-      val skyCol = ColumnShim.column(SkylineAggExpr(
-        dims.indices.map(i => ColumnShim.expression(col(s"_d$i"))), minDir,
-        SkylineAggExpr.configuredCap(df.sparkSession))
-        .toAggregateExpression())
-      pts.groupBy(keyCols.map(col): _*)
-        .agg(skyCol.as("_sky"))
-        .select(keyCols.map(col) :+ explode(col("_sky")).as("_pt"): _*)
-        .select(keyCols.map(col) ++ dims.zip(types).zipWithIndex.map {
-          case (((name, _), dt), i) => fromDouble(element_at(col("_pt"), i + 1), dt).as(name)
-        }: _*)
+    def skylineBy(keyCols: Seq[String], dims: Seq[(String, Direction)]): DataFrame = {
+      requireKeys("skylineBy", keyCols, dims)
+      skylineKeyed(keyCols, dims, NoHint, None)
     }
 
     /**
@@ -212,83 +172,19 @@ object SkylineOps {
      * execution shape as the skyline: partial candidate buffers map-side,
      * buffers-only shuffle, final merge ([[KSkybandAggExpr]]).
      */
-    def kSkyband(dims: Seq[(String, Direction)], k: Int,
-        presort: Option[Boolean] = None): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
+    def kSkyband(dims: Seq[(String, Direction)], k: Int): DataFrame = {
       require(k >= 1, s"k must be >= 1, got $k")
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
-      val minDir = dims.map(_._2.isMin).toArray
-      val fwd = dims.zip(types).map { case ((name, _), dt) => toDouble(col(name), dt) }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      val projected = df.filter(nonNull)
-        .select(fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-      // SFS presort, same d >= 5 heuristic as the skyline. For the band
-      // it pays twice: under score order an arriving point can dominate
-      // no incumbent (its score would have to be smaller), so inserts
-      // never run the eviction sweep, and a >= k-dominated point is
-      // rejected the moment it arrives — the candidate buffer stays near
-      // the true band, which also shrinks the O(|buf|^2) emission
-      // recount. Exactness is order-independent (see the core proof), so
-      // the presort is purely a pruning accelerator.
-      val pts = if (!presort.getOrElse(dims.length >= 5)) projected else {
-        val sfsScore = dims.indices
-          .map(i => if (minDir(i)) col(s"_d$i") else -col(s"_d$i"))
-          .reduce(_ + _)
-        projected.sortWithinPartitions(sfsScore.asc)
-      }
-      val bandCol = ColumnShim.column(KSkybandAggExpr(
-        dims.indices.map(i => ColumnShim.expression(col(s"_d$i"))), minDir, k,
-        SkylineAggExpr.configuredCap(df.sparkSession))
-        .toAggregateExpression())
-      pts.agg(bandCol.as("_band"))
-        .select(explode(col("_band")).as("_e"))
-        .select(dims.zip(types).zipWithIndex.map {
-          case (((name, _), dt), i) =>
-            fromDouble(element_at(col("_e.p"), i + 1), dt).as(name)
-        } :+ col("_e.c").cast(LongType).as("n_dominators"): _*)
+      kSkybandKeyed(Nil, dims, k)
     }
 
     /** Per-group k-skybands: [[kSkyband]] composed with groupBy — the
       * relaxed frontier per key tuple, with exact per-point dominator
       * counts WITHIN the group. Same shuffle shape as [[skylineBy]]:
       * only (key, candidate-buffer) pairs cross the wire. */
-    def kSkybandBy(keyCols: Seq[String], dims: Seq[(String, Direction)],
-        k: Int, presort: Option[Boolean] = None): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
-      require(keyCols.nonEmpty, "kSkybandBy needs at least one key column (use kSkyband otherwise)")
+    def kSkybandBy(keyCols: Seq[String], dims: Seq[(String, Direction)], k: Int): DataFrame = {
+      requireKeys("kSkybandBy", keyCols, dims)
       require(k >= 1, s"k must be >= 1, got $k")
-      val overlap = keyCols.toSet.intersect(dims.map(_._1).toSet)
-      require(overlap.isEmpty, s"key and dimension columns overlap: $overlap")
-      val reserved = keyCols.filter(c => c.startsWith("_d") || c == "_band" || c == "_e")
-      require(reserved.isEmpty, s"key column names collide with internal aliases: $reserved")
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
-      val minDir = dims.map(_._2.isMin).toArray
-      val fwd = dims.zip(types).map { case ((name, _), dt) => toDouble(col(name), dt) }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      val projected = df.filter(nonNull).select(
-        keyCols.map(col) ++ fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-      // per-group SFS: one partition-local sort serves every group (a
-      // subsequence of a score-sorted partition is still score-sorted);
-      // see kSkyband for why score order accelerates band pruning
-      val pts = if (!presort.getOrElse(dims.length >= 5)) projected else {
-        val sfsScore = dims.indices
-          .map(i => if (minDir(i)) col(s"_d$i") else -col(s"_d$i"))
-          .reduce(_ + _)
-        projected.sortWithinPartitions(sfsScore.asc)
-      }
-      val bandCol = ColumnShim.column(KSkybandAggExpr(
-        dims.indices.map(i => ColumnShim.expression(col(s"_d$i"))), minDir, k,
-        SkylineAggExpr.configuredCap(df.sparkSession))
-        .toAggregateExpression())
-      pts.groupBy(keyCols.map(col): _*)
-        .agg(bandCol.as("_band"))
-        .select(keyCols.map(col) :+ explode(col("_band")).as("_e"): _*)
-        .select(keyCols.map(col) ++ dims.zip(types).zipWithIndex.map {
-          case (((name, _), dt), i) =>
-            fromDouble(element_at(col("_e.p"), i + 1), dt).as(name)
-        } :+ col("_e.c").cast(LongType).as("n_dominators"): _*)
+      kSkybandKeyed(keyCols, dims, k)
     }
 
     /**
@@ -334,59 +230,14 @@ object SkylineOps {
     def kSkybandJoin(dims: Seq[(String, Direction)], k: Int,
         sampleSize: Int = 8192, maxCandidates: Int = 1 << 20,
         seed: Long = 42L): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
       require(k >= 1, s"k must be >= 1, got $k")
       require(sampleSize >= 1, s"sampleSize must be >= 1, got $sampleSize")
-      val spark = df.sparkSession
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
-      val d = dims.length
-      val fwd = dims.zip(types).map { case ((name, dir), dt) =>
-        val v = toDouble(col(name), dt)
-        if (dir.isMin) v else -v
-      }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      val projected = df.filter(nonNull)
-        .select(fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-        .distinct()
-        .persist()
-      try {
-        val ptCol = array(dims.indices.map(i => col(s"_d$i")): _*)
-        val nAll = projected.count()
-        val refs: Array[Array[Double]] =
-          if (nAll == 0) Array.empty
-          else projected
-            .sample(withReplacement = false,
-              math.min(1.0, sampleSize.toDouble / nAll), seed)
-            .collect().map(r => Array.tabulate(d)(r.getDouble))
-        val pruned = projected.filter(
-          graft.functions.DominanceFunctions.dominatorCountUpTo(ptCol, refs, d, k) < k)
-        val candRows = pruned.limit(maxCandidates + 1).collect()
-        if (candRows.length > maxCandidates) throw new IllegalArgumentException(
-          s"kSkybandJoin: more than $maxCandidates candidates survive the " +
-            s"sample prune (band ≈ input at k=$k) — raise maxCandidates if " +
-            "the driver can hold them, or use the kSkyband aggregate with a " +
-            "deliberate spark.graft.skyline.maxBufferPoints cap")
-        val cands = candRows.map(r => Array.tabulate(d)(r.getDouble))
-        val counts = projected
-          .select(explode(
-            graft.functions.DominanceFunctions.dominatedIndices(ptCol, cands, d))
-            .as("_ci"))
-          .groupBy(col("_ci")).agg(count(lit(1)).as("_cnt"))
-        import spark.implicits._
-        val candDf = cands.zipWithIndex
-          .map { case (p, i) => (i, p.toSeq) }.toSeq.toDF("_ci", "_p")
-        val out = candDf.join(counts, Seq("_ci"), "left")
-          .select(dims.zip(types).zipWithIndex.map { case (((name, dir), dt), i) =>
-            val v = element_at(col("_p"), i + 1)
-            fromDouble(if (dir.isMin) v else -v, dt).as(name)
-          } :+ coalesce(col("_cnt"), lit(0L)).as("n_dominators"): _*)
-          .filter(col("n_dominators") < k)
-          .persist()
-        try out.count()
-        catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-        out
-      } finally projected.unpersist(blocking = false)
+      dominanceCounted(dims, k, sampleSize, maxCandidates, seed, negated = false, "n_dominators",
+        s"kSkybandJoin: more than $maxCandidates candidates survive the " +
+          s"sample prune (band ≈ input at k=$k) — raise maxCandidates if " +
+          "the driver can hold them, or use the kSkyband aggregate with a " +
+          "deliberate spark.graft.skyline.maxBufferPoints cap")(
+        _.filter(col("n_dominators") < k))
     }
 
     /**
@@ -409,9 +260,9 @@ object SkylineOps {
      * try-cheap-then-complete shape as the external skyline cascade.
      */
     def kSkybandAuto(dims: Seq[(String, Direction)], k: Int,
-        presort: Option[Boolean] = None, sampleSize: Int = 8192,
-        maxCandidates: Int = 1 << 20, seed: Long = 42L): DataFrame = {
-      val agg = kSkyband(dims, k, presort).persist()
+        sampleSize: Int = 8192, maxCandidates: Int = 1 << 20,
+        seed: Long = 42L): DataFrame = {
+      val agg = kSkyband(dims, k).persist()
       try { agg.count(); agg }
       catch {
         case e: Throwable if SkylineOps.isBufferCapTrip(e) =>
@@ -459,63 +310,13 @@ object SkylineOps {
     def topKDominating(dims: Seq[(String, Direction)], k: Int,
         sampleSize: Int = 8192, maxCandidates: Int = 1 << 20,
         seed: Long = 42L): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
       require(k >= 1, s"k must be >= 1, got $k")
-      val spark = df.sparkSession
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
-      val d = dims.length
-      val fwd = dims.zip(types).map { case ((name, dir), dt) =>
-        val v = toDouble(col(name), dt)
-        if (dir.isMin) v else -v
-      }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      val projected = df.filter(nonNull)
-        .select(fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-        .distinct()
-        .persist()
-      try {
-        val ptCol = array(dims.indices.map(i => col(s"_d$i")): _*)
-        val negPtCol = array(dims.indices.map(i => -col(s"_d$i")): _*)
-        val nAll = projected.count()
-        val refs: Array[Array[Double]] =
-          if (nAll == 0) Array.empty
-          else projected
-            .sample(withReplacement = false,
-              math.min(1.0, sampleSize.toDouble / nAll), seed)
-            .collect().map(r => Array.tabulate(d)(r.getDouble))
-        val pruned = projected.filter(
-          graft.functions.DominanceFunctions.dominatorCountUpTo(ptCol, refs, d, k) < k)
-        val candRows = pruned.limit(maxCandidates + 1).collect()
-        if (candRows.length > maxCandidates) throw new IllegalArgumentException(
-          s"topKDominating: more than $maxCandidates candidates survive the " +
-            s"sample prune (k-skyband ≈ input at k=$k) — raise maxCandidates " +
-            "if the driver can hold them")
-        val cands = candRows.map(r => Array.tabulate(d)(r.getDouble))
-        // NaN is already incomparable under the kernel's Java-double
-        // comparisons, so negation (−NaN = NaN) preserves it exactly
-        val negCands = cands.map(_.map(x => -x))
-        val counts = projected
-          .select(explode(
-            graft.functions.DominanceFunctions.dominatedIndices(negPtCol, negCands, d))
-            .as("_ci"))
-          .groupBy(col("_ci")).agg(count(lit(1)).as("_cnt"))
-        import spark.implicits._
-        val candDf = cands.zipWithIndex
-          .map { case (p, i) => (i, p.toSeq) }.toSeq.toDF("_ci", "_p")
-        val named = candDf.join(counts, Seq("_ci"), "left")
-          .select(dims.zip(types).zipWithIndex.map { case (((name, dir), dt), i) =>
-            val v = element_at(col("_p"), i + 1)
-            fromDouble(if (dir.isMin) v else -v, dt).as(name)
-          } :+ coalesce(col("_cnt"), lit(0L)).as("n_dominated"): _*)
-        val out = named
-          .orderBy(col("n_dominated").desc +: dims.map { case (name, _) => col(name).asc }: _*)
-          .limit(k)
-          .persist()
-        try out.count()
-        catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-        out
-      } finally projected.unpersist(blocking = false)
+      dominanceCounted(dims, k, sampleSize, maxCandidates, seed, negated = true, "n_dominated",
+        s"topKDominating: more than $maxCandidates candidates survive the " +
+          s"sample prune (k-skyband ≈ input at k=$k) — raise maxCandidates " +
+          "if the driver can hold them")(
+        _.orderBy(col("n_dominated").desc +: dims.map { case (name, _) => col(name).asc }: _*)
+          .limit(k))
     }
 
     def skyline(query: String, hint: PartitionHint): DataFrame =
@@ -603,24 +404,14 @@ object SkylineOps {
         dims: Seq[(String, Direction)],
         windowSize: Int = 1 << 16,
         maxPasses: Int = 1 << 20): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
       require(windowSize >= 1, s"windowSize must be >= 1, got $windowSize")
       val spark = df.sparkSession
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
       val d = dims.length
       val dim = (i: Int) => col(s"_d$i")
-      // oriented projection: every dim negated where MAX, so dominance
-      // is uniformly "componentwise <=, somewhere <". Exact duplicates
-      // collapse up front (the operator's set semantics).
-      val fwd = dims.zip(types).map { case ((name, dir), dt) =>
-        val v = toDouble(col(name), dt)
-        if (dir.isMin) v else -v
-      }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      val projected = df.filter(nonNull)
-        .select(fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-        .distinct()
+      // oriented projection, so dominance is uniformly "componentwise
+      // <=, somewhere <"; exact duplicates collapse up front (the
+      // operator's set semantics)
+      val projected = prepared(Nil, dims, oriented = true).distinct()
       val anyNaN = dims.indices.map(i => isnan(dim(i))).reduce(_ || _)
       val clean = projected.filter(!anyNaN)
 
@@ -648,11 +439,9 @@ object SkylineOps {
       clean.limit(0).write.mode("append").parquet(s"$resultDir/pass=0")
       projected.filter(anyNaN).write.mode("append").parquet(s"$resultDir/pass=0")
 
-      val statsRow = clean.agg(
-        (dims.indices.flatMap(i => Seq(min(dim(i)), max(dim(i)))) :+
-          count(lit(1)).as("_n")).head,
-        (dims.indices.flatMap(i => Seq(min(dim(i)), max(dim(i)))) :+
-          count(lit(1)).as("_n")).tail: _*).head()
+      val stats = dims.indices.flatMap(i => Seq(min(dim(i)), max(dim(i)))) :+
+        count(lit(1)).as("_n")
+      val statsRow = clean.agg(stats.head, stats.tail: _*).head()
       if (!statsRow.isNullAt(0)) {
         val e = dims.indices.map { i =>
           val lo = statsRow.getDouble(2 * i)
@@ -661,16 +450,13 @@ object SkylineOps {
         }.reduce(_ + _)
         val nClean = statsRow.getLong(2 * d)
         val cap = SkylineAggExpr.configuredCap(spark)
-        def sky(cols: Seq[Column]): Column = ColumnShim.column(
-          SkylineAggExpr(cols.map(ColumnShim.expression),
-            Array.fill(d)(true), cap).toAggregateExpression())
         // dominance predicate of a broadcast frontier (_w*) against
         // candidate rows (_d*): componentwise <=, somewhere < — shared
         // by the sampled pre-filter and the per-pass tail anti-join
         val allLe = dims.indices.map(i => col(s"_w$i") <= dim(i)).reduce(_ && _)
         val oneLt = dims.indices.map(i => col(s"_w$i") < dim(i)).reduce(_ || _)
         def frontierOf(src: DataFrame, as: Int => String): DataFrame =
-          src.agg(sky(dims.indices.map(dim)).as("_sky"))
+          src.agg(skyAgg(dims.indices.map(dim), Array.fill(d)(true)).as("_sky"))
             .select(explode(col("_sky")).as("_pt"))
             .select(dims.indices.map(i =>
               element_at(col("_pt"), i + 1).as(as(i))): _*)
@@ -765,15 +551,12 @@ object SkylineOps {
 
       // read back (partition discovery adds the pass column — dropped by
       // the dim selection), un-orient, restore names and types
-      spark.read.parquet(resultDir)
-        .select(dims.zip(types).zipWithIndex.map { case (((name, dir), dt), i) =>
-          val v = if (dir.isMin) col(s"_d$i") else -col(s"_d$i")
-          fromDouble(v, dt).as(name)
-        }: _*)
+      restored(spark.read.parquet(resultDir), Nil, dims, oriented = true, dim)
     }
 
     /**
-     * Compute the skyline (Pareto frontier) of `df` over `dims`.
+     * Compute the skyline (Pareto frontier) of `df` over `dims`. The SFS
+     * presort is automatic at d >= 5 (see [[sfsSorted]]).
      *
      * @param dims   (column, direction) per skyline dimension
      * @param hint   optional pre-partitioning scheme (see [[PartitionHint]])
@@ -782,57 +565,27 @@ object SkylineOps {
      *               they are computed with one distributed min/max pass —
      *               at large scale pass them explicitly (the reference
      *               hard-codes `[0, 10^9]`, configurations.py:17-18).
-     * @param presort SFS monotone-score sortWithinPartitions before the
-     *               aggregate. `None` (default) auto-enables it at d >= 5
-     *               — measured ~12% win at d=7 and a 3-4x LOSS at d <= 3,
-     *               so the heuristic follows the dimensionality (see the
-     *               tradeoff note at the implementation site);
-     *               `Some(true)`/`Some(false)` force it either way.
      */
     def skyline(
         dims: Seq[(String, Direction)],
         hint: PartitionHint = NoHint,
-        bounds: Option[Seq[(Double, Double)]] = None,
-        presort: Option[Boolean] = None): DataFrame = {
-      require(dims.nonEmpty, "empty dimension list")
-      val schema = df.schema
-      val types = dims.map { case (name, _) => schema(name).dataType }
-      val minDir = dims.map(_._2.isMin).toArray
+        bounds: Option[Seq[(Double, Double)]] = None): DataFrame = {
       hint match {
         case AngleHint(_) =>
-          require(minDir.forall(identity),
+          require(dims.forall(_._2.isMin),
             "MR_ANGLE supports MIN-only queries (reference restriction, functions.py:327-329)")
         case _ =>
       }
+      skylineKeyed(Nil, dims, hint, bounds)
+    }
 
-      val fwd = dims.zip(types).map { case ((name, _), dt) => toDouble(col(name), dt) }
-      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
-      // One projected double column per dimension — no array packing on
-      // the per-row hot path; SkylineAggExpr consumes them directly.
-      val projected = df.filter(nonNull)
-        .select(fwd.zipWithIndex.map { case (c, i) => c.as(s"_d$i") }: _*)
-      // SFS presort (Chomicki et al., ICDE'03): a monotone score
-      // — the sum of coordinates oriented so "better" is smaller — sorted
-      // ascending WITHIN partitions (no shuffle). If a dominates b then
-      // score(a) < score(b), so no point is ever dominated by a later
-      // one: the BNL insert never evicts incumbents. Measured: ~12% win
-      // at d=7/1M rows, but a 3-4x LOSS at d<=3 (the sort costs more
-      // than the near-free low-d BNL) — hence the d >= 5 auto-heuristic,
-      // where local skylines grow large enough for evictions to matter.
-      val usePresort = presort.getOrElse(dims.length >= 5)
-      val pts = if (!usePresort) projected else {
-        val sfsScore = dims.indices
-          .map(i => if (minDir(i)) col(s"_d$i") else -col(s"_d$i"))
-          .reduce(_ + _)
-        projected.sortWithinPartitions(sfsScore.asc)
-      }
-
-      /** Skyline aggregate over the given dimension columns (native
-        * TypedImperativeAggregate; see [[SkylineAggExpr]]). */
-      def sky(cols: Seq[Column]): Column = ColumnShim.column(
-        SkylineAggExpr(cols.map(ColumnShim.expression), minDir,
-          SkylineAggExpr.configuredCap(df.sparkSession)).toAggregateExpression())
-
+    /** The skyline per `keys` tuple; with no keys, the one global
+      * skyline (`Dataset.agg` is `groupBy().agg`, so the plan is the
+      * same). A hint applies to the global skyline only. */
+    private def skylineKeyed(keys: Seq[String], dims: Seq[(String, Direction)],
+        hint: PartitionHint, bounds: Option[Seq[(Double, Double)]]): DataFrame = {
+      val minDir = dims.map(_._2.isMin).toArray
+      val pts = sfsSorted(prepared(keys, dims, oriented = false), minDir)
       val dim = (i: Int) => col(s"_d$i")
       val dimCols = dims.indices.map(dim)
 
@@ -854,12 +607,12 @@ object SkylineOps {
         * array<double> only between the (tiny) local and global stages. */
       def twoStage(keyed: DataFrame): DataFrame =
         keyed
-          .groupBy("_k").agg(sky(dimCols).as("_ls"))
+          .groupBy("_k").agg(skyAgg(dimCols, minDir).as("_ls"))
           .select(explode(col("_ls")).as("_p"))
-          .agg(sky(dims.indices.map(i => element_at(col("_p"), i + 1))).as("_sky"))
+          .agg(skyAgg(dims.indices.map(i => element_at(col("_p"), i + 1)), minDir).as("_sky"))
 
       val skyDf = hint match {
-        case NoHint => pts.agg(sky(dimCols).as("_sky"))
+        case NoHint => pts.groupBy(keys.map(col): _*).agg(skyAgg(dimCols, minDir).as("_sky"))
 
         case DimHint(p) =>
           val (lo, hi) = resolvedBounds().head
@@ -883,20 +636,16 @@ object SkylineOps {
           // reference's geometric best-cell prune is unsound on sparse data.
           // Keys stay Long end-to-end: truncating to Int would corrupt the
           // kept-set for b^d > 2^31 and silently drop cells.
-          // The occupied-cell collect is bounded by b^d in every sane use
-          // (b <= 12), but b^d only has to fit a Long, so a pathological
-          // hint (say b=8, d=12) could pull an unbounded set onto the
-          // driver. limit(cap+1) bounds what the driver can ever hold and
-          // the overflow fails with the tuning knob named, same contract
-          // as the skyline buffer cap.
-          val cellCap = SkylineOps.configuredMaxGridCells(df.sparkSession)
+          // b^d only has to fit a Long, so a fine grid could pull an
+          // unbounded cell set onto the driver: limit(cap+1) bounds what
+          // the driver ever holds, and the overflow fails loudly.
+          val cellCap = SkylineCore.MaxOccupiedGridCells
           val occupied = keyed.select("_k").distinct().limit(cellCap + 1)
             .collect().map(_.getLong(0))
           if (occupied.length > cellCap) throw new IllegalStateException(
             s"GridHint($b) over ${dims.length} dims has more than $cellCap occupied " +
-              s"cells (spark.graft.skyline.maxGridCells): the plan-time prune would " +
-              s"collect an unbounded cell set onto the driver. Lower b, raise the " +
-              s"cap, or use NoHint/AngleHint (partial aggregation needs no grid).")
+              "cells, the most the plan-time dominated-cell prune takes. Lower b, or " +
+              "use NoHint/AngleHint (partial aggregation needs no grid).")
           val kept = SkylineCore.keptOccupiedKeys(minDir, b, occupied.toSeq)
           twoStage(keyed.filter(col("_k").isin(kept: _*)))
 
@@ -918,11 +667,143 @@ object SkylineOps {
           }
       }
 
-      skyDf
-        .select(explode(col("_sky")).as("_pt"))
-        .select(dims.zip(types).zipWithIndex.map { case (((name, _), dt), i) =>
-          fromDouble(element_at(col("_pt"), i + 1), dt).as(name)
-        }: _*)
+      restored(skyDf.select(keys.map(col) :+ explode(col("_sky")).as("_pt"): _*),
+        keys, dims, oriented = false, i => element_at(col("_pt"), i + 1))
+    }
+
+    /** The k-skyband per `keys` tuple; with no keys, the one global band. */
+    private def kSkybandKeyed(keys: Seq[String], dims: Seq[(String, Direction)],
+        k: Int): DataFrame = {
+      val minDir = dims.map(_._2.isMin).toArray
+      val pts = sfsSorted(prepared(keys, dims, oriented = false), minDir)
+      val bandCol = ColumnShim.column(KSkybandAggExpr(
+        dims.indices.map(i => ColumnShim.expression(col(s"_d$i"))), minDir, k,
+        SkylineAggExpr.configuredCap(df.sparkSession))
+        .toAggregateExpression())
+      val bands = pts.groupBy(keys.map(col): _*)
+        .agg(bandCol.as("_band"))
+        .select(keys.map(col) :+ explode(col("_band")).as("_e"): _*)
+      restored(bands, keys, dims, oriented = false, i => element_at(col("_e.p"), i + 1),
+        col("_e.c").cast(LongType).as("n_dominators"))
+    }
+
+    /** The dominance-count core of [[kSkybandJoin]] and [[topKDominating]]:
+      * the distinct oriented points, a bounded random sample, the
+      * map-side `dominatorCountUpTo` prune (≥ k sample dominators prove
+      * a point out of the k-skyband), at most `maxCandidates` survivors
+      * collected (`tooMany` otherwise), and one pass of the whole input
+      * past them with the `dominatedIndices` kernel. Each candidate gets
+      * its count as `countAs`: the points that dominate it, or with
+      * `negated` the points it dominates (c dominates r ⟺ −r dominates
+      * −c, so each row emits the candidates that dominate IT; NaN stays
+      * incomparable under the kernel's Java-double comparisons, and
+      * −NaN = NaN). `finish` picks the rows; the result is materialized
+      * and the internal cache released. */
+    private def dominanceCounted(dims: Seq[(String, Direction)], k: Int, sampleSize: Int,
+        maxCandidates: Int, seed: Long, negated: Boolean, countAs: String, tooMany: => String)(
+        finish: DataFrame => DataFrame): DataFrame = {
+      val spark = df.sparkSession
+      val d = dims.length
+      val projected = prepared(Nil, dims, oriented = true).distinct().persist()
+      try {
+        val pt = dims.indices.map(i => col(s"_d$i"))
+        val nAll = projected.count()
+        val refs: Array[Array[Double]] =
+          if (nAll == 0) Array.empty
+          else projected
+            .sample(withReplacement = false,
+              math.min(1.0, sampleSize.toDouble / nAll), seed)
+            .collect().map(r => Array.tabulate(d)(r.getDouble))
+        val pruned = projected.filter(
+          DominanceFunctions.dominatorCountUpTo(array(pt: _*), refs, d, k) < k)
+        val candRows = pruned.limit(maxCandidates + 1).collect()
+        if (candRows.length > maxCandidates) throw new IllegalArgumentException(tooMany)
+        val cands = candRows.map(r => Array.tabulate(d)(r.getDouble))
+        val emitted =
+          if (negated) DominanceFunctions.dominatedIndices(
+            array(pt.map(-_): _*), cands.map(_.map(x => -x)), d)
+          else DominanceFunctions.dominatedIndices(array(pt: _*), cands, d)
+        val counts = projected
+          .select(explode(emitted).as("_ci"))
+          .groupBy(col("_ci")).agg(count(lit(1)).as("_cnt"))
+        import spark.implicits._
+        val candDf = cands.zipWithIndex
+          .map { case (p, i) => (i, p.toSeq) }.toSeq.toDF("_ci", "_p")
+        val out = finish(restored(candDf.join(counts, Seq("_ci"), "left"), Nil, dims,
+          oriented = true, i => element_at(col("_p"), i + 1),
+          coalesce(col("_cnt"), lit(0L)).as(countAs))).persist()
+        try out.count()
+        catch { case t: Throwable => out.unpersist(blocking = false); throw t }
+        out
+      } finally projected.unpersist(blocking = false)
+    }
+
+    /** The input side every entry point shares: rows with a null
+      * coordinate dropped (the reference's missing-coordinate rule), the
+      * `keys` columns, then one double column `_d{i}` per dimension
+      * ([[toDouble]]), negated on MAX dimensions when `oriented` so that
+      * smaller is better on every axis. One column per dimension — no
+      * array packing on the per-row hot path; the aggregates consume
+      * them directly. */
+    private def prepared(keys: Seq[String], dims: Seq[(String, Direction)],
+        oriented: Boolean): DataFrame = {
+      require(dims.nonEmpty, "empty dimension list")
+      val schema = df.schema
+      val nonNull = dims.map { case (name, _) => col(name).isNotNull }.reduce(_ && _)
+      df.filter(nonNull).select(keys.map(col) ++ dims.zipWithIndex.map { case ((name, dir), i) =>
+        val v = toDouble(col(name), schema(name).dataType)
+        (if (oriented && !dir.isMin) -v else v).as(s"_d$i")
+      }: _*)
+    }
+
+    /** Inverse of [[prepared]] on a result: coordinate `i`, read by
+      * `coord(i)`, un-negated when `oriented` and restored to its
+      * dimension's name and type ([[fromDouble]]); the `keys` columns
+      * lead and `extra` columns trail. */
+    private def restored(result: DataFrame, keys: Seq[String], dims: Seq[(String, Direction)],
+        oriented: Boolean, coord: Int => Column, extra: Column*): DataFrame = {
+      val schema = df.schema
+      result.select(keys.map(col) ++ dims.zipWithIndex.map { case ((name, dir), i) =>
+        val v = coord(i)
+        fromDouble(if (oriented && !dir.isMin) -v else v, schema(name).dataType).as(name)
+      } ++ extra: _*)
+    }
+
+    /** SFS presort (Chomicki et al., ICDE'03) of [[prepared]] points: a
+      * monotone score — the sum of coordinates oriented so "better" is
+      * smaller — sorted ascending WITHIN partitions (no shuffle). If a
+      * dominates b then score(a) < score(b), so no point is ever
+      * dominated by a later one: the skyline insert never evicts
+      * incumbents, and the band insert never runs its eviction sweep and
+      * rejects a >= k-dominated point the moment it arrives, keeping the
+      * candidate buffer near the true band. Results do not depend on the
+      * order; the presort only prunes faster. Measured: ~12% win at
+      * d=7/1M rows, but a 3-4x LOSS at d<=3 (the sort costs more than the
+      * near-free low-d BNL) — hence it runs at d >= 5 only, where local
+      * buffers grow large enough for evictions to matter. It serves the
+      * grouped aggregates too: hash aggregation feeds each group's buffer
+      * in partition order, and a subsequence of a score-sorted partition
+      * is still score-sorted. */
+    private def sfsSorted(pts: DataFrame, minDir: Array[Boolean]): DataFrame =
+      if (minDir.length < 5) pts
+      else pts.sortWithinPartitions(minDir.indices
+        .map(i => if (minDir(i)) col(s"_d$i") else -col(s"_d$i"))
+        .reduce(_ + _).asc)
+
+    /** Skyline aggregate over the given dimension columns (native
+      * TypedImperativeAggregate; see [[SkylineAggExpr]]). */
+    private def skyAgg(cols: Seq[Column], minDir: Array[Boolean]): Column = ColumnShim.column(
+      SkylineAggExpr(cols.map(ColumnShim.expression), minDir,
+        SkylineAggExpr.configuredCap(df.sparkSession)).toAggregateExpression())
+
+    private def requireKeys(op: String, keyCols: Seq[String],
+        dims: Seq[(String, Direction)]): Unit = {
+      require(keyCols.nonEmpty,
+        s"$op needs at least one key column (use ${op.stripSuffix("By")} otherwise)")
+      val overlap = keyCols.toSet.intersect(dims.map(_._1).toSet)
+      require(overlap.isEmpty, s"key and dimension columns overlap: $overlap")
+      val reserved = keyCols.filter(k => k.startsWith("_d") || ReservedAliases(k))
+      require(reserved.isEmpty, s"key column names collide with internal aliases: $reserved")
     }
   }
 }

@@ -163,6 +163,17 @@ class KSkybandSpec extends AnyFunSuite {
     val want = spark.table("band_in").kSkyband(Seq("x" -> Min, "y" -> Min), k = 2)
       .collect().map(r => ((r.getDouble(0), r.getDouble(1)), r.getLong(2).toInt)).toSet
     assert(got == want && got.nonEmpty)
+    // bad directions fail loudly, naming the function
+    for ((dirs, why) <- Seq(
+        "min,up" -> "kskyband_agg direction must be min or max, got 'up'",
+        "min,min,max" -> "kskyband_agg: 3 directions for 2 dimension columns")) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT kskyband_agg('$dirs', 2, x, y) FROM band_in").collect()
+      }
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(msgs.contains(why), msgs)
+    }
   }
 
   test("kSkybandBy computes each group's band independently") {
@@ -194,23 +205,6 @@ class KSkybandSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.skyline.maxBufferPoints")
     // default cap: the same band computes (every point, zero/one dominators)
     assert(df.kSkyband(dims, k = 2).count() == 500)
-  }
-
-  test("SFS presort on/off returns the identical band and counts") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(29)
-    val rows = Seq.fill(2000)((rnd.nextInt(100).toDouble, rnd.nextInt(100).toDouble,
-      rnd.nextInt(100).toDouble))
-    val df = rows.toDF("x", "y", "z").repartition(6).cache()
-    val dims = Seq("x" -> Min, "y" -> Max, "z" -> Min)
-    def run(ps: Boolean) = df.kSkyband(dims, k = 3, presort = Some(ps))
-      .collect().map(_.toSeq).toSet
-    assert(run(true) == run(false) && run(true).nonEmpty)
-    val grouped = df.withColumn("g", (col("x") < 50).cast("int"))
-    def runBy(ps: Boolean) = grouped.kSkybandBy(Seq("g"), dims, k = 3, presort = Some(ps))
-      .collect().map(_.toSeq).toSet
-    assert(runBy(true) == runBy(false) && runBy(true).nonEmpty)
-    df.unpersist()
   }
 
   test("df.kSkyband equals the pure core (distributed partial/merge path)") {

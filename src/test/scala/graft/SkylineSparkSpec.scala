@@ -58,27 +58,27 @@ class SkylineSparkSpec extends AnyFunSuite {
       assert(result(DimHint(8)) == base, s"DimHint seed=$seed")
       assert(result(GridHint(3)) == base, s"GridHint seed=$seed")
       assert(result(AngleHint(5)) == base, s"AngleHint seed=$seed")
-      assert(df.skyline(dims, presort = Some(true)).collect().map(_.toSeq).toSet == base,
-        s"presort seed=$seed")
       df.unpersist()
     }
   }
 
   test("grid-cell cap trips loudly when a pathological hint occupies too many cells") {
-    val df = randomDf(2000, 2, seed = 7)
+    import org.apache.spark.sql.functions.{floor, rand}
     val dims = Seq("x1" -> Min, "x2" -> Min)
-    // GridHint(9) over 2000 random 2-D points occupies far more than 8
-    // cells; with the cap forced down, the plan-time prune must refuse to
-    // collect the occupied-cell set instead of pulling it onto the driver
-    spark.conf.set("spark.graft.skyline.maxGridCells", "8")
-    try {
-      val e = intercept[IllegalStateException] {
-        df.skyline(dims, hint = GridHint(9)).collect()
-      }
-      assert(e.getMessage.contains("maxGridCells"))
-      assert(e.getMessage.contains("occupied"))
-    } finally spark.conf.unset("spark.graft.skyline.maxGridCells")
-    // and with the default cap the same plan is green and correct
+    // GridHint(1000) over 1e5 uniform-integer 2-D points in [0, 1000):
+    // every distinct point is its own cell, ~95k occupied — past the
+    // prune's fixed cap, so the plan-time prune must refuse to collect
+    // the occupied-cell set instead of pulling it onto the driver
+    val fine = spark.range(100000).select(
+      floor(rand(5) * 1000).cast("double").as("x1"),
+      floor(rand(6) * 1000).cast("double").as("x2"))
+    val e = intercept[IllegalStateException] {
+      fine.skyline(dims, hint = GridHint(1000)).collect()
+    }
+    assert(e.getMessage.contains(s"more than ${SkylineCore.MaxOccupiedGridCells} occupied"))
+    assert(e.getMessage.contains("Lower b") && e.getMessage.contains("NoHint/AngleHint"))
+    // and a default-sized grid is green and correct
+    val df = randomDf(2000, 2, seed = 7)
     assert(df.skyline(dims, hint = GridHint(9)).collect().map(_.toSeq).toSet ==
       df.skyline(dims).collect().map(_.toSeq).toSet)
   }
@@ -97,20 +97,6 @@ class SkylineSparkSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.skyline.maxBufferPoints")
     // default cap: same query sails through (it never fires on real frontiers)
     assert(df.skyline(dims).count() == 500)
-  }
-
-  test("auto-presort at d >= 5 returns the identical skyline") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11L)
-    val df = Seq.fill(2000)((rnd.nextDouble(), rnd.nextDouble(), rnd.nextDouble(),
-      rnd.nextDouble(), rnd.nextDouble())).toDF("x1", "x2", "x3", "x4", "x5")
-      .repartition(4).cache()
-    val dims = (1 to 5).map(i => s"x$i" -> (Min: graft.core.Direction))
-    val auto = df.skyline(dims).collect().map(_.toSeq).toSet // presort auto-on
-    val off = df.skyline(dims, presort = Some(false)).collect().map(_.toSeq).toSet
-    assert(auto == off)
-    assert(auto.nonEmpty)
-    df.unpersist()
   }
 
   test("under-covering explicit bounds stay correct and don't overflow the key cast") {
@@ -188,20 +174,6 @@ class SkylineSparkSpec extends AnyFunSuite {
     assert(got == Set(("g1", 1.0, 5.0), ("g1", 2.0, 2.0), ("g2", 9.0, 9.0)))
   }
 
-  test("udaf-based SkylineAggregator agrees with the native SkylineAggExpr path") {
-    import org.apache.spark.sql.functions.{array, col, explode, udaf}
-    val df = randomDf(2000, 2, seed = 21)
-    val agg = udaf(new graft.operators.SkylineAggregator(Array(true, true)))
-    val viaUdaf = df
-      .select(array(col("x1"), col("x2")).as("p"))
-      .agg(agg(col("p")).as("sky"))
-      .select(explode(col("sky")).as("pt"))
-      .collect().map(_.getSeq[Double](0)).toSet
-    val viaExpr = df.skyline(Seq("x1" -> Min, "x2" -> Min))
-      .collect().map(r => Seq(r.getDouble(0), r.getDouble(1))).toSet
-    assert(viaUdaf == viaExpr && viaUdaf.nonEmpty)
-  }
-
   test("empty input with a hint yields an empty skyline (no bounds crash)") {
     import org.apache.spark.sql.functions.col
     val df = randomDf(100, 2, seed = 22).filter(col("x1") < -1)
@@ -245,9 +217,16 @@ class SkylineSparkSpec extends AnyFunSuite {
     val viaDsl = df.skyline(Seq("x1" -> Min, "x2" -> Max))
       .collect().map(_.toSeq).toSet
     assert(viaSql == viaDsl && viaSql.nonEmpty)
-    // rejection rules carry over to SQL
-    intercept[Exception] {
-      spark.sql("SELECT skyline_agg('min,avg', x1, x2) FROM sql_sky_points").collect()
+    // rejection rules carry over to SQL, each naming the function
+    for ((dirs, why) <- Seq(
+        "min,avg" -> "skyline_agg direction must be min or max, got 'avg'",
+        "min" -> "skyline_agg: 1 directions for 2 dimension columns")) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT skyline_agg('$dirs', x1, x2) FROM sql_sky_points").collect()
+      }
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(msgs.contains(why), msgs)
     }
     // scalar custom expressions are SQL-callable too
     val dot = spark.sql(
