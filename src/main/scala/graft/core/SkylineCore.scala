@@ -27,9 +27,10 @@ object Direction {
  *    dominates `b` iff `a` is better-or-equal on every dimension and
  *    strictly better on at least one; equal points do NOT dominate each
  *    other.
- *  - skyline maintenance (`functions.py:29-54`): incremental insert; the
- *    reference's Python `set` collapses exact-duplicate points, so
- *    `insert` drops a point equal to an incumbent.
+ *  - skyline maintenance (`functions.py:29-54`): incremental insert
+ *    ([[SkylineCore.Frontier]]); the reference's Python `set` collapses
+ *    exact-duplicate points (and `0.0 == -0.0` there), so the insert
+ *    drops a point equal to an incumbent.
  *  - partition keys (`functions.py:57-300`): generalized from the
  *    reference's hard-coded `[0, 10^9]` domain to caller-supplied
  *    per-dimension bounds.
@@ -53,47 +54,232 @@ object SkylineCore {
     strict
   }
 
-  /**
-   * Insert `p` into the running skyline `buf` in place (single pass).
-   * Drops `p` if dominated by, or exactly equal to, an incumbent;
-   * otherwise removes incumbents dominated by `p` and appends `p`.
-   *
-   * Single-pass safety: if some incumbent dominates (or equals) `p`, then
-   * no incumbent can be dominated by `p` (skyline members are mutually
-   * non-dominating and dominance is transitive), so the early return can
-   * never fire after a removal has shifted the write pointer.
-   */
-  def insert(buf: ArrayBuffer[Array[Double]], p: Array[Double], minDir: Array[Boolean]): Unit = {
-    val n = buf.length
-    var r = 0
-    var w = 0
-    while (r < n) {
-      val q = buf(r)
-      if (dominates(q, p, minDir) || java.util.Arrays.equals(q, p)) return
-      if (!dominates(p, q, minDir)) { buf(w) = q; w += 1 }
-      r += 1
-    }
-    if (w < n) buf.dropRightInPlace(n - w)
-    buf += p
-  }
-
   /** Merge skyline `b` into skyline `a` (returns the merged buffer). */
   def merge(
       a: ArrayBuffer[Array[Double]],
       b: ArrayBuffer[Array[Double]],
-      minDir: Array[Boolean]): ArrayBuffer[Array[Double]] = {
-    val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
-    var i = 0
-    while (i < small.length) { insert(big, small(i), minDir); i += 1 }
-    big
-  }
+      minDir: Array[Boolean]): ArrayBuffer[Array[Double]] =
+    Frontier.of(a, minDir).merge(Frontier.of(b, minDir)).points
 
   /** Full skyline of a point collection (used as test oracle and for golden replay). */
   def skylineOf(points: IterableOnce[Array[Double]], minDir: Array[Boolean]): ArrayBuffer[Array[Double]] = {
-    val buf = ArrayBuffer.empty[Array[Double]]
-    points.iterator.foreach(insert(buf, _, minDir))
-    buf
+    val f = new Frontier(minDir)
+    points.iterator.foreach(f.insert)
+    f.points
   }
+
+  /**
+   * The skyline kernel: a running skyline (block-nested-loops, Börzsönyi
+   * et al., ICDE 2001) held flat. Member `r`'s coordinates sit at
+   * `coords(r * d until r * d + d)`, MIN-oriented (MAX dimensions negated
+   * on the way in and restored on the way out) and with -0.0 normalised
+   * to +0.0, so bitwise equality agrees with SQL equality; `scores(r)` is
+   * the left-to-right floating-point sum of those coordinates.
+   *
+   * Set semantics follow the reference (`functions.py:29-54`): a point is
+   * dropped if an incumbent dominates it or equals it (bitwise, NaN equal
+   * to NaN, like `java.util.Arrays.equals`); otherwise the incumbents it
+   * dominates leave, the survivors keep their relative order and the
+   * point is appended.
+   */
+  final class Frontier(minDir: Array[Boolean]) {
+    val d: Int = minDir.length
+    private var coords = new Array[Double](8 * d)
+    private var scores = new Array[Double](8)
+    private var n = 0
+    /** The oriented point being inserted. */
+    private val staged = new Array[Double](d)
+
+    def size: Int = n
+
+    /** Stages coordinate `i` of the next point, given in its own direction. */
+    def stage(i: Int, x: Double): Unit =
+      staged(i) = if (minDir(i)) x + 0.0 else 0.0 - x
+
+    /** Inserts `p` (read, never kept); true iff it joined the skyline. */
+    def insert(p: Array[Double]): Boolean = {
+      var i = 0
+      while (i < d) { stage(i, p(i)); i += 1 }
+      insertStaged()
+    }
+
+    /** Inserts the staged point; true iff it joined the skyline.
+      *
+      * Single-pass safety: if some incumbent dominates (or equals) the
+      * point, no incumbent is dominated by it (members are mutually
+      * non-dominating and dominance is transitive), so the early return
+      * never fires after a removal has shifted the write pointer. */
+    def insertStaged(): Boolean = {
+      val s = stagedScore
+      var r = 0
+      var w = 0
+      while (r < n) {
+        val rel = relation(r, staged, 0, s)
+        if (rel == Rejects) return false
+        if (rel == Keeps) { moveMember(r, w); w += 1 }
+        r += 1
+      }
+      n = w
+      append(staged, 0, s)
+      true
+    }
+
+    /** Appends `p(off until off + d)` unchecked: the caller vouches that it
+      * neither dominates, is dominated by nor equals any member (it comes
+      * from the same skyline). */
+    def add(p: Array[Double], off: Int = 0): Unit = {
+      var i = 0
+      while (i < d) { stage(i, p(off + i)); i += 1 }
+      append(staged, 0, stagedScore)
+    }
+
+    /** Skyline of the union of this skyline and `that`: the smaller one is
+      * inserted into the larger, which is returned. Each incoming point is
+      * compared only with the larger frontier's surviving original
+      * members: points of one skyline never dominate or equal each other.
+      * Result order is as if each point were inserted in turn. */
+    def merge(that: Frontier): Frontier = {
+      require(that.d == d, s"merging frontiers of dimension $d and ${that.d}")
+      if (n >= that.n) absorb(that) else that.absorb(this)
+    }
+
+    private def absorb(small: Frontier): Frontier = {
+      val m = n
+      val dead = new Array[Boolean](m)
+      val joined = new Array[Int](small.n)
+      var k = 0
+      var j = 0
+      while (j < small.n) {
+        val sp = small.scores(j)
+        var rejected = false
+        var r = 0
+        while (r < m && !rejected) {
+          if (!dead(r)) {
+            val rel = relation(r, small.coords, j * d, sp)
+            if (rel == Rejects) rejected = true
+            else if (rel == Dropped) dead(r) = true
+          }
+          r += 1
+        }
+        if (!rejected) { joined(k) = j; k += 1 }
+        j += 1
+      }
+      var w = 0
+      var r = 0
+      while (r < m) {
+        if (!dead(r)) { moveMember(r, w); w += 1 }
+        r += 1
+      }
+      n = w
+      var i = 0
+      while (i < k) { append(small.coords, joined(i) * d, small.scores(joined(i))); i += 1 }
+      this
+    }
+
+    /** How member `r` relates to the point at `p(po until po + d)` with score `sp`. */
+    private def relation(r: Int, p: Array[Double], po: Int, sp: Double): Int = {
+      val c = coords
+      val qo = r * d
+      val sq = scores(r)
+      // Score gate. If q dominates p, then q(i) <= p(i) in every oriented
+      // dimension, and rounded addition is monotone in each operand, so
+      // every partial sum of q is <= the matching one of p: sq <= sp.
+      // Equal points have equal sums. Hence sq < sp rules out p
+      // dominating or equalling q, sq > sp rules out the converse, and
+      // one one-sided test decides. A NaN coordinate, or +Inf meeting
+      // -Inf, makes a sum NaN; NaN compares false both ways and falls
+      // through to the full test, as do tied sums.
+      if (sq < sp) {
+        // No NaN on this path, and q(i) <= p(i) everywhere with sq < sp
+        // makes one dimension strict. The count runs without an early
+        // exit: a fixed-length loop and one rarely-taken branch beat a
+        // data-dependent exit on frontier-heavy data.
+        var k = 0
+        var i = 0
+        while (i < d) { if (c(qo + i) <= p(po + i)) k += 1; i += 1 }
+        if (k == d) Rejects else Keeps
+      } else if (sq > sp) {
+        var k = 0
+        var i = 0
+        while (i < d) { if (p(po + i) <= c(qo + i)) k += 1; i += 1 }
+        if (k == d) Dropped else Keeps
+      } else {
+        // one fused pass: strict-better flags both ways, NaN
+        // incomparability, and equality (NaN equal to NaN)
+        var qBetter = false
+        var pBetter = false
+        var nan = false
+        var unequalNan = false
+        var i = 0
+        while (i < d && !(qBetter && pBetter)) {
+          val qv = c(qo + i)
+          val pv = p(po + i)
+          if (qv < pv) qBetter = true
+          else if (qv > pv) pBetter = true
+          else if (qv != pv) { nan = true; if (qv == qv || pv == pv) unequalNan = true }
+          i += 1
+        }
+        if (!qBetter && !pBetter && !unequalNan) Rejects // equal
+        else if (nan || qBetter == pBetter) Keeps
+        else if (qBetter) Rejects
+        else Dropped
+      }
+    }
+
+    private def moveMember(from: Int, to: Int): Unit = if (to < from) {
+      System.arraycopy(coords, from * d, coords, to * d, d)
+      scores(to) = scores(from)
+    }
+
+    private def stagedScore: Double = {
+      var s = 0.0
+      var i = 0
+      while (i < d) { s += staged(i); i += 1 }
+      s
+    }
+
+    private def append(p: Array[Double], off: Int, s: Double): Unit = {
+      if (n == scores.length) {
+        scores = java.util.Arrays.copyOf(scores, 2 * n)
+        coords = java.util.Arrays.copyOf(coords, 2 * n * d)
+      }
+      System.arraycopy(p, off, coords, n * d, d)
+      scores(n) = s
+      n += 1
+    }
+
+    /** Members' coordinates in their own directions, flat, member order. */
+    def flat: Array[Double] = {
+      val out = java.util.Arrays.copyOf(coords, n * d)
+      var i = 0
+      while (i < d) {
+        if (!minDir(i)) { var o = i; while (o < out.length) { out(o) = 0.0 - out(o); o += d } }
+        i += 1
+      }
+      out
+    }
+
+    /** Members in their own directions, one array each, member order. */
+    def points: ArrayBuffer[Array[Double]] = {
+      val all = flat
+      ArrayBuffer.tabulate(n)(r => java.util.Arrays.copyOfRange(all, r * d, r * d + d))
+    }
+  }
+
+  object Frontier {
+    /** A frontier holding `skyline`'s points unchecked (see [[Frontier.add]]). */
+    def of(skyline: collection.Seq[Array[Double]], minDir: Array[Boolean]): Frontier = {
+      val f = new Frontier(minDir)
+      skyline.foreach(f.add(_))
+      f
+    }
+  }
+
+  /** [[Frontier]] member relations: the member stays, it is dominated by
+    * the new point, or it dominates or equals the new point. */
+  private final val Keeps = 0
+  private final val Dropped = 1
+  private final val Rejects = 2
 
   // ---------------------------------------------------------------------
   // k-skyband (Papadias et al., SIGMOD'03): the relaxed skyline — points
@@ -166,13 +352,15 @@ object SkylineCore {
     out
   }
 
-  /** Full k-skyband with exact dominator counts (test oracle form). */
+  /** Full k-skyband with exact dominator counts (test oracle form).
+    * Coordinates enter with -0.0 normalised to +0.0, as in the band
+    * aggregate. */
   def kSkybandOf(
       points: IterableOnce[Array[Double]], minDir: Array[Boolean],
       k: Int): ArrayBuffer[(Array[Double], Int)] = {
     val buf = ArrayBuffer.empty[Array[Double]]
     val cnt = ArrayBuffer.empty[Int]
-    points.iterator.foreach(kSkybandInsert(buf, cnt, _, minDir, k))
+    points.iterator.foreach(p => kSkybandInsert(buf, cnt, p.map(_ + 0.0), minDir, k))
     kSkybandCounts(buf, minDir, k)
   }
 

@@ -68,7 +68,7 @@ case class KSkybandAggExpr(
     while (i < d) {
       val v = dims(i).eval(input)
       if (v == null) return buf // same missing-coordinate contract as the skyline
-      p(i) = v.asInstanceOf[Double]
+      p(i) = v.asInstanceOf[Double] + 0.0 // -0.0 -> +0.0: duplicates are SQL-equal points
       i += 1
     }
     SkylineCore.kSkybandInsert(buf.points, buf.counts, p, minDir, k)
@@ -91,15 +91,19 @@ case class KSkybandAggExpr(
     }.toArray)
   }
 
-  override def serialize(buf: KSkybandBuffer): Array[Byte] =
-    SkylineAggExpr.writePoints(buf.points, dims.length)
+  override def serialize(buf: KSkybandBuffer): Array[Byte] = {
+    val d = dims.length
+    val flat = new Array[Double](buf.points.length * d)
+    buf.points.indices.foreach(i => System.arraycopy(buf.points(i), 0, flat, i * d, d))
+    SkylineAggExpr.writePoints(flat, buf.points.length, d)
+  }
 
   override def deserialize(bytes: Array[Byte]): KSkybandBuffer = {
     val buf = new KSkybandBuffer
     // re-inserting recomputes running counts within the buffer; the
     // incoming buffer is already duplicate-free and candidate-pruned
-    SkylineAggExpr.readPoints(bytes)(
-      SkylineCore.kSkybandInsert(buf.points, buf.counts, _, minDir, k))
+    SkylineAggExpr.readPoints(bytes)((flat, off) => SkylineCore.kSkybandInsert(
+      buf.points, buf.counts, java.util.Arrays.copyOfRange(flat, off, off + dims.length), minDir, k))
     buf
   }
 

@@ -2,22 +2,21 @@ package graft.operators
 
 import java.nio.ByteBuffer
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-import graft.core.SkylineCore
+import graft.core.SkylineCore.Frontier
 
 /**
  * The skyline aggregate as a native [[TypedImperativeAggregate]]. It
  * consumes the dimension expressions directly per input row: no
  * `array(...)` column packing, no encoder round-trip, no `Seq[Double]`
- * boxing — `update` evaluates d child expressions into a primitive
- * array and runs the BNL insert. Spark still performs partial
+ * boxing — `update` stages the d child values straight into the flat
+ * [[Frontier]] buffer and runs its BNL insert, which copies a point in
+ * only when it is accepted. Spark still performs partial
  * aggregation (the reference's map-side local skylines) and merges
  * buffers at the final stage; only skyline buffers ever cross the wire,
  * serialized as a flat double payload.
@@ -31,22 +30,22 @@ case class SkylineAggExpr(
     maxBuffer: Int = SkylineAggExpr.DefaultMaxBuffer,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ArrayBuffer[Array[Double]]] {
+  extends TypedImperativeAggregate[Frontier] {
 
   override def children: Seq[Expression] = dims
 
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(ArrayType(DoubleType, false), false)
 
-  override def createAggregationBuffer(): ArrayBuffer[Array[Double]] = ArrayBuffer.empty
+  override def createAggregationBuffer(): Frontier = new Frontier(minDir)
 
   /** The one genuine 100 TB risk of this aggregate (SURVEY §7): on high-d
     * or anti-correlated data the skyline itself — and therefore every
     * buffer — can approach the input size, and an executor dies with an
     * opaque OOM mid-shuffle. A bounded buffer turns that into an
     * immediate, diagnosable failure with remedies attached. */
-  private def checkCap(buf: ArrayBuffer[Array[Double]]): ArrayBuffer[Array[Double]] = {
-    if (buf.length > maxBuffer) throw SkylineAggExpr.capTrip("skyline", maxBuffer,
+  private def checkCap(buf: Frontier): Frontier = {
+    if (buf.size > maxBuffer) throw SkylineAggExpr.capTrip("skyline", maxBuffer,
       "the Pareto frontier of this data is too large to aggregate safely — at high " +
         "dimensionality or on anti-correlated data the skyline approaches the input size. " +
         "Raise the cap if the result genuinely fits in executor memory, reduce dimensions, " +
@@ -54,37 +53,30 @@ case class SkylineAggExpr(
     buf
   }
 
-  override def update(
-      buf: ArrayBuffer[Array[Double]], input: InternalRow): ArrayBuffer[Array[Double]] = {
-    val d = dims.length
-    val p = new Array[Double](d)
+  override def update(buf: Frontier, input: InternalRow): Frontier = {
     var i = 0
-    while (i < d) {
+    while (i < buf.d) {
       val v = dims(i).eval(input)
       if (v == null) return buf // reference drops rows with missing coords
-      p(i) = v.asInstanceOf[Double]
+      buf.stage(i, v.asInstanceOf[Double])
       i += 1
     }
-    SkylineCore.insert(buf, p, minDir)
-    checkCap(buf)
+    if (buf.insertStaged()) checkCap(buf) else buf
   }
 
-  override def merge(
-      a: ArrayBuffer[Array[Double]],
-      b: ArrayBuffer[Array[Double]]): ArrayBuffer[Array[Double]] =
-    checkCap(SkylineCore.merge(a, b, minDir))
+  override def merge(a: Frontier, b: Frontier): Frontier = checkCap(a.merge(b))
 
-  override def eval(buf: ArrayBuffer[Array[Double]]): Any = {
-    val sorted = buf.sorted(SkylineAggExpr.lexOrder)
+  override def eval(buf: Frontier): Any = {
+    val sorted = buf.points.sorted(SkylineAggExpr.lexOrder)
     new GenericArrayData(sorted.map(p => new GenericArrayData(p): ArrayData).toArray)
   }
 
-  override def serialize(buf: ArrayBuffer[Array[Double]]): Array[Byte] =
-    SkylineAggExpr.writePoints(buf, dims.length)
+  override def serialize(buf: Frontier): Array[Byte] =
+    SkylineAggExpr.writePoints(buf.flat, buf.size, buf.d)
 
-  override def deserialize(bytes: Array[Byte]): ArrayBuffer[Array[Double]] = {
-    val buf = ArrayBuffer.empty[Array[Double]]
-    SkylineAggExpr.readPoints(bytes)(buf += _)
+  override def deserialize(bytes: Array[Byte]): Frontier = {
+    val buf = new Frontier(minDir)
+    SkylineAggExpr.readPoints(bytes)(buf.add)
     buf
   }
 
@@ -131,26 +123,24 @@ object SkylineAggExpr {
   }
 
   /** The buffer codec of both aggregates: an (n, d) int header, then n
-    * points of d doubles. Only points cross the wire. */
-  private[operators] def writePoints(points: collection.Seq[Array[Double]], d: Int): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + points.length * d * 8)
-    bb.putInt(points.length).putInt(d)
-    points.foreach(p => p.foreach(bb.putDouble))
+    * points of d doubles, read from `flat` in order. Only points cross
+    * the wire. */
+  private[operators] def writePoints(flat: Array[Double], n: Int, d: Int): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 + n * d * 8)
+    bb.putInt(n).putInt(d)
+    bb.asDoubleBuffer().put(flat, 0, n * d)
     bb.array()
   }
 
-  /** Decodes [[writePoints]]' payload, handing each point to `add` in order. */
-  private[operators] def readPoints(bytes: Array[Byte])(add: Array[Double] => Unit): Unit = {
+  /** Decodes [[writePoints]]' payload, handing each point to `add` in
+    * order as (flat array, offset of its first coordinate). */
+  private[operators] def readPoints(bytes: Array[Byte])(add: (Array[Double], Int) => Unit): Unit = {
     val bb = ByteBuffer.wrap(bytes)
     val n = bb.getInt()
     val d = bb.getInt()
+    val flat = new Array[Double](n * d)
+    bb.asDoubleBuffer().get(flat)
     var i = 0
-    while (i < n) {
-      val p = new Array[Double](d)
-      var j = 0
-      while (j < d) { p(j) = bb.getDouble(); j += 1 }
-      add(p)
-      i += 1
-    }
+    while (i < n) { add(flat, i * d); i += 1 }
   }
 }

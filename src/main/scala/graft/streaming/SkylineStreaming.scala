@@ -200,10 +200,10 @@ object SkylineStreaming {
           state.remove()
           (key, last)
         } else {
-          val buf = scala.collection.mutable.ArrayBuffer.from(
-            state.getOption.getOrElse(Seq.empty).map(_.toArray))
-          rows.foreach { case (_, p) => graft.core.SkylineCore.insert(buf, p.toArray, minDir) }
-          val out = buf.map(_.toSeq).toSeq
+          val buf = graft.core.SkylineCore.Frontier.of(
+            state.getOption.getOrElse(Seq.empty).map(_.toArray), minDir)
+          rows.foreach { case (_, p) => buf.insert(p.toArray) }
+          val out = buf.points.map(_.toSeq).toSeq
           state.update(out)
           idleTimeout.foreach(state.setTimeoutDuration)
           (key, out)

@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Direction, SkylineCore, SkylineQuery}
@@ -45,17 +43,59 @@ class SkylineCoreSpec extends AnyFunSuite {
 
   // ---- incremental skyline (functions.py:29-54) -------------------------
 
+  private def members(f: Frontier): Seq[Seq[Double]] = f.points.map(_.toSeq).toSeq
+
   test("insert drops dominated incumbents and duplicates") {
-    val buf = ArrayBuffer.empty[Array[Double]]
-    insert(buf, Array(5.0, 5.0), minMin)
-    insert(buf, Array(3.0, 6.0), minMin) // incomparable -> both stay
-    assert(buf.length == 2)
-    insert(buf, Array(5.0, 5.0), minMin) // exact duplicate -> collapsed
-    assert(buf.length == 2)
-    insert(buf, Array(2.0, 2.0), minMin) // dominates both
-    assert(buf.length == 1 && buf.head.sameElements(Array(2.0, 2.0)))
-    insert(buf, Array(4.0, 4.0), minMin) // dominated -> dropped
-    assert(buf.length == 1)
+    val f = new Frontier(minMin)
+    assert(f.insert(Array(5.0, 5.0)))
+    assert(f.insert(Array(3.0, 6.0))) // incomparable -> both stay
+    assert(f.insert(Array(6.0, 1.0)))
+    assert(members(f) == Seq(Seq(5.0, 5.0), Seq(3.0, 6.0), Seq(6.0, 1.0)))
+    assert(!f.insert(Array(5.0, 5.0))) // exact duplicate -> collapsed
+    assert(f.size == 3)
+    // dominates the first two: the survivor keeps its place, the new point comes last
+    assert(f.insert(Array(2.0, 2.0)))
+    assert(members(f) == Seq(Seq(6.0, 1.0), Seq(2.0, 2.0)))
+    assert(!f.insert(Array(4.0, 4.0))) // dominated -> dropped
+    assert(members(f) == Seq(Seq(6.0, 1.0), Seq(2.0, 2.0)))
+  }
+
+  test("insert: tied scores and NaN scores take the full comparison") {
+    val f = new Frontier(minMin)
+    // distinct points with equal coordinate sums (4.0): incomparable, all stay
+    Seq(Array(1.0, 3.0), Array(3.0, 1.0), Array(2.0, 2.0)).foreach(p => assert(f.insert(p)))
+    assert(!f.insert(Array(2.0, 2.0))) // tied score, equal point
+    // +Inf meeting -Inf makes the score NaN: incomparable with everything
+    assert(f.insert(Array(Double.PositiveInfinity, Double.NegativeInfinity)))
+    assert(!f.insert(Array(Double.PositiveInfinity, Double.NegativeInfinity)))
+    // a NaN coordinate: incomparable, and equal (NaN == NaN) to its duplicate only
+    assert(f.insert(Array(Double.NaN, 0.0)))
+    assert(!f.insert(Array(Double.NaN, 0.0)))
+    assert(f.insert(Array(Double.NaN, -1.0)))
+    assert(f.size == 6)
+    // dominates the finite members only
+    assert(f.insert(Array(0.0, 0.0)))
+    assert(members(f).map(_.mkString(",")) ==
+      Seq("Infinity,-Infinity", "NaN,0.0", "NaN,-1.0", "0.0,0.0"))
+  }
+
+  test("insert collapses -0.0 and +0.0, under MIN and MAX alike") {
+    for (dirs <- Seq(minMin, Array(false, true))) {
+      val f = new Frontier(dirs)
+      assert(f.insert(Array(0.0, 1.0)))
+      assert(!f.insert(Array(-0.0, 1.0)), dirs.toSeq)
+      assert(members(f).map(_.map(java.lang.Double.doubleToRawLongBits)) ==
+        Seq(Seq(0.0, 1.0).map(java.lang.Double.doubleToRawLongBits)), dirs.toSeq)
+    }
+  }
+
+  test("merge keeps the larger skyline's survivors first, then the smaller's newcomers") {
+    val big = Frontier.of(Seq(Array(1.0, 9.0), Array(5.0, 5.0), Array(9.0, 1.0)), minMin)
+    // (4,4) evicts (5,5); (1,9) equals a member and is dropped
+    val small = Frontier.of(Seq(Array(4.0, 4.0), Array(1.0, 9.0)), minMin)
+    val m = small.merge(big)
+    assert(m eq big)
+    assert(members(m) == Seq(Seq(1.0, 9.0), Seq(9.0, 1.0), Seq(4.0, 4.0)))
   }
 
   test("merge equals skyline of union") {

@@ -13,11 +13,13 @@ import graft.operators.SkylineOps._
 
 /** Boundary inputs through every entry point of the skyline family:
   * empty, one row, exact duplicates, a null coordinate, a NaN
-  * coordinate, an all-equal dimension and a MAX dimension, each at d = 2
+  * coordinate, an all-equal dimension, a MAX dimension, -0.0 beside +0.0
+  * (equal under SQL, so one point) and infinities of both signs (a point
+  * holding +Inf and -Inf has a NaN coordinate sum), each at d = 2
   * and d = 5 (both sides of the d >= 5 SFS presort rule, grouped paths
-  * included). Every result is checked row for row against the
-  * brute-force core (`SkylineCore.skylineOf` / `kSkybandOf`) on the
-  * same points. */
+  * included). Every result is checked row for row against a brute-force
+  * oracle: [[SkylineCore.dominates]] over the input's distinct points,
+  * with values compared as SQL compares them (-0.0 = 0.0, NaN = NaN). */
 class SkylineEdgeInputSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
@@ -44,6 +46,9 @@ class SkylineEdgeInputSpec extends AnyFunSuite {
     // an otherwise best-of-all point, so dropping it or keeping it shows
     def best(first: java.lang.Double): Seq[java.lang.Double] =
       first +: Seq.fill(d - 1)(Double.box(0.5))
+    def padded(a: Double, b: Double): Seq[java.lang.Double] =
+      Seq(Double.box(a), Double.box(b)) ++ best(0.5).drop(2)
+    val inf = Double.PositiveInfinity
     val mins = Seq.fill(d)(Min)
     Seq(
       Input("empty", Nil, mins),
@@ -52,7 +57,12 @@ class SkylineEdgeInputSpec extends AnyFunSuite {
       Input("null coordinate", grouped(base :+ best(null)), mins),
       Input("NaN coordinate", grouped(base :+ best(Double.NaN)), mins),
       Input("all-equal dimension", grouped(base.map(p => Double.box(5.0) +: p.tail)), mins),
-      Input("one MAX dimension", grouped(base), mins.init :+ Max))
+      Input("one MAX dimension", grouped(base), mins.init :+ Max),
+      Input("signed zeros", grouped(base ++ Seq(best(0.0), best(-0.0), best(-0.0), best(0.0))), mins),
+      Input("signed zeros on a MAX dimension", grouped(base ++
+        Seq(0.0, -0.0, -0.0).map(z => best(0.5).init :+ Double.box(z))), mins.init :+ Max),
+      Input("infinities", grouped(base ++ Seq(padded(-inf, inf), padded(inf, -inf),
+        padded(-inf, inf), padded(-inf, 9.0), padded(inf, -inf), padded(1.0, -inf))), mins))
   }
 
   private def frame(in: Input, d: Int): DataFrame = {
@@ -61,25 +71,39 @@ class SkylineEdgeInputSpec extends AnyFunSuite {
     spark.createDataFrame(in.rows.map { case (g, p) => Row.fromSeq(g +: p) }.asJava, schema)
   }
 
-  private def cells(vals: Seq[Any]): Seq[String] = vals.map(String.valueOf)
+  /** A row's cells as SQL values print: -0.0 and 0.0 are one value (the
+    * paths that orient MAX dimensions in SQL hand a zero back as -0.0). */
+  private def cells(vals: Seq[Any]): Seq[String] = vals.map {
+    case x: Double => String.valueOf(x + 0.0)
+    case v => String.valueOf(v)
+  }
+
+  /** The points once each, under SQL equality. */
+  private def distinct(pts: Seq[Array[Double]]): Seq[Array[Double]] =
+    pts.groupBy(p => cells(p.toSeq)).values.map(_.head).toSeq
+  private def dominators(p: Array[Double], pts: Seq[Array[Double]], minDir: Array[Boolean]): Int =
+    pts.count(q => SkylineCore.dominates(q, p, minDir))
 
   /** Brute-force expectations, as rows of printed cells. */
-  private def skylineRows(pts: Seq[Array[Double]], minDir: Array[Boolean]): Seq[Seq[String]] =
-    SkylineCore.skylineOf(pts, minDir).toSeq.map(p => cells(p.toSeq))
-  private def bandRows(pts: Seq[Array[Double]], minDir: Array[Boolean]): Seq[Seq[String]] =
-    SkylineCore.kSkybandOf(pts, minDir, K).toSeq.map { case (p, c) => cells(p.toSeq :+ c) }
+  private def skylineRows(pts: Seq[Array[Double]], minDir: Array[Boolean]): Seq[Seq[String]] = {
+    val ps = distinct(pts)
+    ps.filter(dominators(_, ps, minDir) == 0).map(p => cells(p.toSeq))
+  }
+  private def bandRows(pts: Seq[Array[Double]], minDir: Array[Boolean]): Seq[Seq[String]] = {
+    val ps = distinct(pts)
+    ps.map(p => (p, dominators(p, ps, minDir))).collect { case (p, c) if c < K => cells(p.toSeq :+ c) }
+  }
   private def perGroup(in: Input)(
       rows: (Seq[Array[Double]], Array[Boolean]) => Seq[Seq[String]]): Seq[Seq[String]] =
     in.points.groupBy(_._1).toSeq.flatMap { case (g, gp) => rows(gp.map(_._2), in.minDir).map(g +: _) }
   /** Top-k dominating by hand: score = points strictly dominated, over
     * distinct points; order score desc, then coordinates ascending. */
   private def topDominatingRows(in: Input): Seq[Seq[String]] = {
-    val pts = in.points.map(_._2)
-    val distinct = pts.groupBy(p => cells(p.toSeq)).values.map(_.head).toSeq
+    val ps = distinct(in.points.map(_._2))
     val lexAsc: Ordering[Array[Double]] = (x, y) =>
       x.indices.iterator.map(i => java.lang.Double.compare(x(i), y(i))).find(_ != 0).getOrElse(0)
-    distinct
-      .map(p => (p, distinct.count(q => SkylineCore.dominates(p, q, in.minDir))))
+    ps
+      .map(p => (p, ps.count(q => SkylineCore.dominates(p, q, in.minDir))))
       .sorted(Ordering.by[(Array[Double], Int), Int](-_._2)
         .orElse(Ordering.by[(Array[Double], Int), Array[Double]](_._1)(lexAsc)))
       .take(TopK).map { case (p, c) => cells(p.toSeq :+ c) }

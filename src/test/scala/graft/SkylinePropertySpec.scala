@@ -13,25 +13,54 @@ import graft.core.SkylineCore
  */
 object SkylinePropertySpec extends Properties("skyline") {
 
-  private def brute(points: Seq[Array[Double]], minDir: Array[Boolean]): Set[Seq[Double]] = {
-    val distinct = points.map(_.toSeq).distinct.map(_.toArray)
+  /** A point's identity under SQL equality: its coordinates' bits with
+    * -0.0 read as +0.0 (NaN bits are canonical). Scala `==` on doubles is
+    * false for NaN, so sets are compared by these keys. */
+  private type Key = Seq[Long]
+  private def key(p: Array[Double]): Key =
+    p.toSeq.map(x => java.lang.Double.doubleToLongBits(x + 0.0))
+
+  private def brute(points: Seq[Array[Double]], minDir: Array[Boolean]): Set[Key] = {
+    val distinct = points.groupBy(key).values.map(_.head).toSeq
     distinct
       .filter(p => !distinct.exists(q => SkylineCore.dominates(q, p, minDir)))
-      .map(_.toSeq)
+      .map(key)
       .toSet
   }
 
-  private def sky(points: Seq[Array[Double]], minDir: Array[Boolean]): Set[Seq[Double]] =
-    SkylineCore.skylineOf(points, minDir).map(_.toSeq).toSet
+  private def keys(points: collection.Seq[Array[Double]]): Set[Key] = points.map(key).toSet
 
-  // small integer domain to force duplicates and per-dimension ties
+  private def sky(points: Seq[Array[Double]], minDir: Array[Boolean]): Set[Key] = {
+    val out = SkylineCore.skylineOf(points, minDir)
+    val ks = keys(out)
+    require(ks.size == out.size, "duplicate skyline members")
+    ks
+  }
+
+  // small integer domain to force duplicates and per-dimension ties, plus
+  // the IEEE edge values: NaN, both zeros and both infinities
+  private val coordGen: Gen[Double] = Gen.frequency(
+    24 -> Gen.choose(0, 8).map(_.toDouble),
+    1 -> Gen.const(Double.NaN),
+    1 -> Gen.const(-0.0),
+    1 -> Gen.const(0.0),
+    1 -> Gen.const(Double.PositiveInfinity),
+    1 -> Gen.const(Double.NegativeInfinity))
+
   private def pointsGen(d: Int): Gen[List[Array[Double]]] =
+    Gen.listOf(Gen.listOfN(d, coordGen).map(_.toArray))
+
+  /** Finite points for the grid-key properties. A point with a NaN
+    * coordinate dominates nothing and nothing dominates it, yet it still
+    * lands in a bucket, so the occupied-cell prune can drop its cell: a
+    * known, open defect of the grid prune, not of the kernel. */
+  private def finitePointsGen(d: Int): Gen[List[Array[Double]]] =
     Gen.listOf(Gen.listOfN(d, Gen.choose(0, 8)).map(_.map(_.toDouble).toArray))
 
   private def dirGen(d: Int): Gen[Array[Boolean]] =
     Gen.listOfN(d, Gen.oneOf(true, false)).map(_.toArray)
 
-  for (d <- 2 to 4)
+  for (d <- 2 to 7)
     property(s"matches brute-force oracle d=$d") =
       forAll(pointsGen(d), dirGen(d)) { (pts, dirs) =>
         sky(pts, dirs) == brute(pts, dirs)
@@ -40,11 +69,12 @@ object SkylinePropertySpec extends Properties("skyline") {
   property("subset + non-dominated + covering") =
     forAll(pointsGen(3), dirGen(3)) { (pts, dirs) =>
       val s = sky(pts, dirs)
-      val inSet = pts.map(_.toSeq).toSet
+      val inSet = keys(pts)
+      val members = pts.filter(p => s.contains(key(p)))
       s.subsetOf(inSet) &&
-      s.forall(m => !pts.exists(q => SkylineCore.dominates(q, m.toArray, dirs))) &&
-      inSet.forall(p =>
-        s.contains(p) || s.exists(m => SkylineCore.dominates(m.toArray, p.toArray, dirs)))
+      members.forall(m => !pts.exists(q => SkylineCore.dominates(q, m, dirs))) &&
+      pts.forall(p =>
+        s.contains(key(p)) || members.exists(m => SkylineCore.dominates(m, p, dirs)))
     }
 
   property("invariant under permutation and duplication") =
@@ -57,7 +87,8 @@ object SkylinePropertySpec extends Properties("skyline") {
   property("MIN on x == MAX on -x") =
     forAll(pointsGen(3)) { pts =>
       val neg = pts.map(_.map(-_))
-      sky(neg, Array.fill(3)(false)).map(_.map(-_)) == sky(pts, Array.fill(3)(true))
+      keys(SkylineCore.skylineOf(neg, Array.fill(3)(false)).map(_.map(-_))) ==
+        sky(pts, Array.fill(3)(true))
     }
 
   property("merge of partial skylines == skyline of union") =
@@ -66,17 +97,33 @@ object SkylinePropertySpec extends Properties("skyline") {
         SkylineCore.skylineOf(a, dirs),
         SkylineCore.skylineOf(b, dirs),
         dirs)
-      merged.map(_.toSeq).toSet == sky(a ++ b, dirs)
+      merged.size == keys(merged).size && keys(merged) == sky(a ++ b, dirs)
+    }
+
+  // Both sides draw from one pool, so the partial skylines share members
+  // (and each other's dominators): the merge compares a newcomer only with
+  // the larger side's surviving original members and must still collapse
+  // the shared points to one.
+  property("merge of partial skylines that share points == skyline of union") =
+    forAll(pointsGen(4), Gen.long, dirGen(4)) { (pool, seed, dirs) =>
+      val rnd = new scala.util.Random(seed)
+      val a = pool.filter(_ => rnd.nextInt(3) > 0)
+      val b = pool.filter(_ => rnd.nextInt(3) > 0)
+      val merged = SkylineCore.merge(
+        SkylineCore.skylineOf(a, dirs),
+        SkylineCore.skylineOf(b, dirs),
+        dirs)
+      merged.size == keys(merged).size && keys(merged) == brute(a ++ b, dirs)
     }
 
   property("occupancy grid prune is safe: skyline points never land in pruned cells") =
-    forAll(pointsGen(2), dirGen(2), Gen.choose(2, 5)) { (pts, dirs, b) =>
+    forAll(finitePointsGen(2), dirGen(2), Gen.choose(2, 5)) { (pts, dirs, b) =>
       val bounds = Array((0.0, 8.0), (0.0, 8.0))
       def cell(p: Array[Double]) =
         SkylineCore.gridKey(b, SkylineCore.gridDigits(b, bounds, p))
       val occupied = pts.map(cell).distinct.map(_.toLong)
       val kept = SkylineCore.keptOccupiedKeys(dirs, b, occupied).toSet
-      sky(pts, dirs).forall(p => kept.contains(cell(p.toArray)))
+      SkylineCore.skylineOf(pts, dirs).forall(p => kept.contains(cell(p)))
     }
 
   // The reference's geometric best-cell prune (functions.py:177-192) is
@@ -88,7 +135,7 @@ object SkylinePropertySpec extends Properties("skyline") {
     val pts = Seq(Array(0.0, 8.0), Array(8.0, 0.0), Array(5.0, 5.0))
     val keptRef = SkylineCore.keptGridKeys(dirs, 2).toSet
     val cellOf55 = SkylineCore.gridKey(2, SkylineCore.gridDigits(2, bounds, Array(5.0, 5.0)))
-    val inTrueSkyline = sky(pts, dirs).contains(Seq(5.0, 5.0))
+    val inTrueSkyline = sky(pts, dirs).contains(key(Array(5.0, 5.0)))
     Prop(inTrueSkyline && !keptRef.contains(cellOf55) &&
       SkylineCore.keptOccupiedKeys(dirs, 2, pts.map(p =>
         SkylineCore.gridKey(2, SkylineCore.gridDigits(2, bounds, p)).toLong).distinct)
