@@ -231,12 +231,7 @@ object SkylineCore {
       scores(to) = scores(from)
     }
 
-    private def stagedScore: Double = {
-      var s = 0.0
-      var i = 0
-      while (i < d) { s += staged(i); i += 1 }
-      s
-    }
+    private def stagedScore: Double = score(staged, 0, d)
 
     private def append(p: Array[Double], off: Int, s: Double): Unit = {
       if (n == scores.length) {
@@ -246,6 +241,25 @@ object SkylineCore {
       System.arraycopy(p, off, coords, n * d, d)
       scores(n) = s
       n += 1
+    }
+
+    /** Per-dimension minimum of the oriented members, folded with
+      * `Math.min`, so a member's NaN coordinate makes its dimension NaN. */
+    def corner: Array[Double] = {
+      val c = Array.fill(d)(Double.PositiveInfinity)
+      for (o <- 0 until n * d) c(o % d) = Math.min(c(o % d), coords(o))
+      c
+    }
+
+    /** True iff some member lies strictly below the oriented `corner` in
+      * every dimension. That member, a real point, then dominates every
+      * point whose oriented coordinates are all at or above the corner;
+      * a NaN in the corner compares false, so such a corner is never
+      * beaten. */
+    def beats(corner: Array[Double]): Boolean = (0 until n).exists { r =>
+      var i = 0
+      while (i < d && coords(r * d + i) < corner(i)) i += 1
+      i == d
     }
 
     /** Members' coordinates in their own directions, flat, member order. */
@@ -272,6 +286,113 @@ object SkylineCore {
       val f = new Frontier(minDir)
       skyline.foreach(f.add(_))
       f
+    }
+  }
+
+  /** The left-to-right floating-point sum of `p(off until off + d)`: the
+    * score of [[Frontier]]'s gate and of [[ScoreSorted]]. It starts from
+    * +0.0, so it is never -0.0. */
+  private def score(p: Array[Double], off: Int, d: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < d) { s += p(off + i); i += 1 }
+    s
+  }
+
+  /** Skyline of the union of per-cell skylines, the last step of the
+    * hinted aggregates. Cells are visited in ascending score of their
+    * [[Frontier.corner]]; a cell is skipped when a member of the skyline
+    * accumulated so far [[Frontier.beats]] its corner (that member
+    * dominates every point of the cell), and otherwise merged whole, so
+    * the cell's points meet only the larger side's original members. The
+    * skip costs at most one scan of the accumulated skyline per cell. */
+  def mergeCells(minDir: Array[Boolean], cells: Iterable[Frontier]): Frontier = {
+    val byCorner = cells.toArray.map(c => (c, c.corner))
+      .sortBy { case (c, corner) => score(corner, 0, c.d) }(Ordering.Double.TotalOrdering)
+    var acc = new Frontier(minDir)
+    for ((c, corner) <- byCorner) if (!acc.beats(corner)) acc = acc.merge(c)
+    acc
+  }
+
+  /**
+   * MIN-oriented points held flat (stride `d`) in ascending score order
+   * (the [[Frontier]] score, NaN last): the dominance-count kernels of
+   * `kSkybandJoin` and `topKDominating`. `q` dominates `p` iff
+   * `q(i) <= p(i)` everywhere and `<` somewhere, in Java semantics, so a
+   * point with a NaN coordinate neither dominates nor is dominated.
+   *
+   * The score bounds every scan: if `q` dominates `p` and score(p) is
+   * neither NaN nor +Inf, then `q` holds no NaN or +Inf, and by the
+   * [[Frontier]] gate's argument score(q) <= score(p). A NaN score (a NaN
+   * coordinate, or +Inf meeting -Inf) or a +Inf one bounds nothing.
+   */
+  final class ScoreSorted private (val d: Int, val coords: Array[Double],
+      scores: Array[Double]) extends Serializable {
+    def size: Int = scores.length
+
+    /** How many members dominate the point at `p(po until po + d)`,
+      * counted up to `k`; with `counts`, each such member `c` also adds
+      * one to `counts(c)`. The scan stops at the first member scoring
+      * above the point. */
+    def dominators(p: Array[Double], po: Int, k: Int, counts: Array[Int] = null): Int = {
+      val sp = score(p, po, d)
+      val end = if (sp.isNaN || sp == Double.PositiveInfinity) size else firstFrom(sp, inclusive = false)
+      var n = 0
+      var c = 0
+      while (c < end && n < k) {
+        if (dominates(coords, c * d, p, po)) { n += 1; if (counts != null) counts(c) += 1 }
+        c += 1
+      }
+      n
+    }
+
+    /** Adds one to `counts(c)` for every member `c` that the point at
+      * `p(po until po + d)` dominates. Members scoring below the point
+      * cannot be dominated by it, so the scan starts at a binary-searched
+      * index; a NaN-scored point scans every member. */
+    def tallyDominated(p: Array[Double], po: Int, counts: Array[Int]): Unit = {
+      val sp = score(p, po, d)
+      var c = if (sp.isNaN) 0 else firstFrom(sp, inclusive = true)
+      while (c < size) { if (dominates(p, po, coords, c * d)) counts(c) += 1; c += 1 }
+    }
+
+    /** First member whose score is at least `s` (`inclusive`) or above it. */
+    private def firstFrom(s: Double, inclusive: Boolean): Int = {
+      var lo = 0
+      var hi = size
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        val c = java.lang.Double.compare(scores(mid), s)
+        if (c < 0 || (c == 0 && !inclusive)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    private def dominates(q: Array[Double], qo: Int, p: Array[Double], po: Int): Boolean = {
+      var le = 0
+      var lt = 0
+      var i = 0
+      while (i < d) {
+        val qv = q(qo + i)
+        val pv = p(po + i)
+        if (qv <= pv) le += 1
+        if (qv < pv) lt += 1
+        i += 1
+      }
+      le == d && lt > 0
+    }
+  }
+
+  object ScoreSorted {
+    /** The points of `flat` (stride `d`, MIN-oriented, no -0.0), sorted. */
+    def apply(d: Int, flat: Array[Double]): ScoreSorted = {
+      val n = flat.length / d
+      val s = Array.tabulate(n)(r => score(flat, r * d, d))
+      val order = Array.range(0, n).sortBy(s(_))(Ordering.Double.TotalOrdering)
+      val coords = new Array[Double](n * d)
+      var i = 0
+      while (i < n) { System.arraycopy(flat, order(i) * d, coords, i * d, d); i += 1 }
+      new ScoreSorted(d, coords, order.map(s))
     }
   }
 
@@ -380,7 +501,8 @@ object SkylineCore {
   }
 
   // ---------------------------------------------------------------------
-  // MR_GRID (functions.py:76-220): base-b digit grid + dominated-cell prune.
+  // MR_GRID (functions.py:76-220): base-b digit grid + the reference's
+  // dominated-cell prune (parity only).
   // ---------------------------------------------------------------------
 
   /** Per-dim grid digits of a point (digit i = dimKey of x_i). */
@@ -417,12 +539,7 @@ object SkylineCore {
   }
 
   /** decimal -> base-b digit list (LSB first), padded to d digits (functions.py:195-220). */
-  def decimalToBase(n0: Int, b: Int, d: Int): Array[Int] =
-    decimalToBaseLong(n0.toLong, b, d)
-
-  /** As [[decimalToBase]] for Long keys — grid keys are b^d-sized and
-    * overflow Int quickly (e.g. b=4, d=16). */
-  def decimalToBaseLong(n0: Long, b: Int, d: Int): Array[Int] = {
+  def decimalToBase(n0: Int, b: Int, d: Int): Array[Int] = {
     val out = new Array[Int](d)
     var n = n0
     var i = 0
@@ -440,7 +557,8 @@ object SkylineCore {
    * non-empty. Counterexample: points (0,8), (8,0), (5,5) with b=2 —
    * (5,5) is in the true skyline but sits in the cell dominated by the
    * (empty) best cell, so the reference drops it. Kept here for parity
-   * tests only; the engine's GridHint uses [[keptOccupiedKeys]].
+   * tests only; the engine's GridHint prunes no cell up front and skips
+   * beaten cells while merging ([[mergeCells]]).
    */
   def keptGridKeys(minDir: Array[Boolean], b: Int): Seq[Int] = {
     val d = minDir.length
@@ -449,34 +567,6 @@ object SkylineCore {
     val best = bestGridDigits(minDir, b)
     (0 until total.toInt).filter { k =>
       !cellDominates(minDir, best, decimalToBase(k, b, d))
-    }
-  }
-
-  /** Most occupied cells [[keptOccupiedKeys]] accepts. The prune is an
-    * O(|occupied|^2 * d) driver-side loop; 2^16 cells => <= ~4e9 cheap
-    * comparisons, still sub-second-ish, and the driver-side collect of
-    * the keys stays at 512 KB. Beyond that the caller should coarsen b. */
-  val MaxOccupiedGridCells: Int = 1 << 16
-
-  /**
-   * Sound dominated-cell prune: among the cells that actually contain
-   * points, keep those not strictly dominated by another occupied cell.
-   * Strict per-dim bucket dominance implies strict per-dim value
-   * dominance for any point pair across the two cells, so every point of
-   * a pruned cell is dominated by every point of its (non-empty)
-   * dominating cell — the prune can never drop a skyline point. On dense
-   * data where the best cell is occupied this keeps exactly the
-   * reference's `b^d - (b-1)^d` surviving cells.
-   */
-  def keptOccupiedKeys(minDir: Array[Boolean], b: Int, occupied: Seq[Long]): Seq[Long] = {
-    val d = minDir.length
-    require(occupied.size <= MaxOccupiedGridCells,
-      s"${occupied.size} occupied grid cells — too many for the dominated-cell " +
-        "prune; use a smaller grid base b")
-    val digits = occupied.map(k => k -> decimalToBaseLong(k, b, d)).toMap
-    occupied.filter { c =>
-      val cd = digits(c)
-      !occupied.exists(a => a != c && cellDominates(minDir, digits(a), cd))
     }
   }
 

@@ -102,7 +102,7 @@ case class KSkybandAggExpr(
     val buf = new KSkybandBuffer
     // re-inserting recomputes running counts within the buffer; the
     // incoming buffer is already duplicate-free and candidate-pruned
-    SkylineAggExpr.readPoints(bytes)((flat, off) => SkylineCore.kSkybandInsert(
+    SkylineAggExpr.readPoints(java.nio.ByteBuffer.wrap(bytes))((flat, off) => SkylineCore.kSkybandInsert(
       buf.points, buf.counts, java.util.Arrays.copyOfRange(flat, off, off + dims.length), minDir, k))
     buf
   }

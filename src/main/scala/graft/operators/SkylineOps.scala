@@ -1,11 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.storage.StorageLevel
+
 import graft.core.{Direction, SkylineCore, SkylineQuery}
-import graft.functions.DominanceFunctions
 import org.apache.spark.sql.graft.ColumnShim
 
 /**
@@ -13,15 +16,16 @@ import org.apache.spark.sql.graft.ColumnShim
  * (`/root/reference/src/utils/functions.py:57-300`). The default
  * ([[NoHint]]) needs none of them: Spark's partial aggregation already
  * computes per-task local skylines on whatever partitioning the scan
- * produced, so pre-shuffling by a spatial key is an *option*, not a
- * requirement — it pays off when per-task local skylines would be large
- * (high d) and a spatial split shrinks them (esp. [[AngleHint]]).
+ * produced. A hint keys those local skylines by spatial cell (one
+ * frontier per cell in the aggregate's buffer) — it pays off when
+ * per-task local skylines would be large (high d) and a spatial split
+ * shrinks them (esp. [[AngleHint]]).
  */
 sealed trait PartitionHint
 case object NoHint extends PartitionHint
 /** MR_DIM: 1-D range partition on the first skyline dimension into `p` buckets. */
 final case class DimHint(p: Int) extends PartitionHint
-/** MR_GRID: base-`b` grid cells + plan-time dominated-cell pruning. */
+/** MR_GRID: base-`b` grid cells; cells a found point beats are skipped. */
 final case class GridHint(b: Int) extends PartitionHint
 /** MR_ANGLE: angular cells, `p` buckets per angle. MIN-only, first orthant. */
 final case class AngleHint(p: Int) extends PartitionHint
@@ -129,8 +133,7 @@ object SkylineOps {
     case other => throw new IllegalArgumentException(s"unsupported skyline dimension type: $other")
   }
 
-  /** Column form of [[SkylineCore.dimKey]] — same formula, so the plan-time
-    * kept-key enumeration for the grid prune matches the runtime keys. */
+  /** Column form of [[SkylineCore.dimKey]] — same formula. */
   private def dimKeyExpr(p: Int, lo: Double, hi: Double, x: Column): Column = {
     val range = (hi - lo) / p
     // Clamp in DOUBLE before the Int cast (matches SkylineCore.dimKey's
@@ -140,6 +143,64 @@ object SkylineOps {
     when(x >= lit(hi), lit(p - 1))
       .otherwise(least(greatest(floor((x - lit(lo)) / lit(range)), lit(0.0)), lit((p - 1).toDouble))
         .cast(IntegerType))
+  }
+
+  /** Per-dimension (lo, hi) bounds of the `_d{i}` columns of `pts` for
+    * the Dim and Grid hints, in one job with no Exchange: a min/max per
+    * partition, folded on the driver. NaN is ignored (Spark's `max` would
+    * return it). A dimension with no value gets (0, 1), any bounds being
+    * right for it; an all-equal one gets (lo, lo + 1), one bucket. */
+  private def dimBounds(pts: DataFrame, d: Int): Seq[(Double, Double)] = {
+    val (lo, hi) = pts.select((0 until d).map(i => col(s"_d$i")): _*).queryExecution.toRdd
+      .aggregate((Array.fill(d)(Double.PositiveInfinity), Array.fill(d)(Double.NegativeInfinity)))(
+        { case ((l, h), r) =>
+          var i = 0
+          while (i < d) {
+            val v = r.getDouble(i)
+            if (v < l(i)) l(i) = v
+            if (v > h(i)) h(i) = v
+            i += 1
+          }
+          (l, h)
+        },
+        { case ((l1, h1), (l2, h2)) =>
+          (l1.zip(l2).map(t => t._1 min t._2), h1.zip(h2).map(t => t._1 max t._2)) })
+    (0 until d).map(i =>
+      if (lo(i) > hi(i)) (0.0, 1.0) else if (hi(i) > lo(i)) (lo(i), hi(i)) else (lo(i), lo(i) + 1.0))
+  }
+
+  /** A seeded uniform sample of min(n, m) of the n points of `flat`
+    * (stride `d`), in random order, so that every prefix is a uniform
+    * sample too: a partial Fisher-Yates shuffle of the point indices. */
+  private def sampleOf(flat: Array[Double], d: Int, m: Int, rnd: java.util.Random): Array[Double] = {
+    val idx = Array.range(0, flat.length / d)
+    val size = math.min(idx.length, m)
+    for (i <- 0 until size) {
+      val j = i + rnd.nextInt(idx.length - i)
+      val t = idx(i); idx(i) = idx(j); idx(j) = t
+    }
+    idx.take(size).flatMap(i => flat.slice(i * d, i * d + d))
+  }
+
+  /** A uniform sample of min(n, m) of the n points of all partitions,
+    * from each partition's (row count, [[sampleOf]]): each draw picks a
+    * partition with odds proportional to its undrawn rows and takes the
+    * next point of its sample. */
+  private def mergedSample(parts: Array[(Int, Array[Double])], d: Int, m: Int,
+      rnd: java.util.Random): Array[Double] = {
+    val left = parts.map(_._1.toLong)
+    val taken = new Array[Int](parts.length)
+    val total = left.sum
+    val out = new Array[Double](math.min(total, m.toLong).toInt * d)
+    for (t <- 0 until out.length / d) {
+      var u = rnd.nextLong(total - t)
+      var p = 0
+      while (u >= left(p)) { u -= left(p); p += 1 }
+      System.arraycopy(parts(p)._2, taken(p) * d, out, t * d, d)
+      taken(p) += 1
+      left(p) -= 1
+    }
+    out
   }
 
   /** Internal column aliases of the keyed aggregates; `_d{i}` (the
@@ -188,44 +249,38 @@ object SkylineOps {
     }
 
     /**
-     * Join-based EXACT k-skyband — the PARALLEL completion path for
+     * Sample-pruned EXACT k-skyband — the PARALLEL completion path for
      * frontier-heavy inputs, where [[kSkyband]]'s aggregate pays an
      * O(|candidates|²) single-threaded final merge (one task re-inserts
      * every partial buffer; measured 21–33 s on 20k anti-correlated
      * points where this path takes ~1 s, and the n=1e5 k=8 shape that
-     * previously could only cap_trip completes). Three phases, all
-     * parallel:
+     * previously could only cap_trip completes). Three passes, one Spark
+     * job each, over the distinct points (see `dominanceCounted`):
      *
-     *  1. PRUNE, map-side, zero shuffle: each point's dominator count
-     *     within a driver-bounded random sample via a codegen'd kernel
-     *     with early exit at k ([[graft.functions.DominatorCountUpTo]]);
-     *     ≥ k sample dominators proves the point out (sample dominators
-     *     are real ones). A survivor with true dominator population D
-     *     survives with probability ~P[Binomial(m, D/n) < k], so the
-     *     candidate set concentrates near the true band.
-     *  2. COLLECT candidates — bounded by `maxCandidates`, loud error
-     *     past it naming the aggregate fallback — and stream the WHOLE
-     *     input past them: each row emits the indices of candidates it
-     *     strictly dominates ([[graft.functions.DominatedIndices]]);
-     *     groupBy(index)+count is the exact per-candidate dominator
-     *     population. Emission stays small by phase-1 construction.
-     *  3. Filter count < k; restore names, types, orientation.
+     *  1. COUNT and SAMPLE a uniform `sampleSize` of the points.
+     *  2. PRUNE: ≥ k sample dominators proves a point out (sample
+     *     dominators are real ones). A survivor with true dominator
+     *     population D survives with probability ~P[Binomial(m, D/n) < k],
+     *     so the candidate set concentrates near the true band. At most
+     *     `maxCandidates` are collected — loud error past it naming the
+     *     aggregate fallback.
+     *  3. COUNT: each partition fills a dense array of dominator counts
+     *     over the candidates, summed on the driver: the exact
+     *     per-candidate dominator population. Count < k is the band.
      *
      * Semantics identical to [[kSkyband]] (set semantics — exact
      * duplicates collapse; NaN rows are incomparable: in band with 0
-     * dominators). The kernels compare with Java double semantics
-     * PRECISELY so NaN behaves as in the core library — a SQL-join
-     * formulation would inherit Spark's NaN total ordering (NaN = NaN,
-     * NaN above everything) and silently disagree. Spec-gated equal to
-     * the aggregate and the brute-force oracle across dims/dirs/k.
+     * dominators). The kernels ([[SkylineCore.ScoreSorted]]) compare with
+     * Java double semantics PRECISELY so NaN behaves as in the core
+     * library — a SQL-join formulation would inherit Spark's NaN total
+     * ordering (NaN = NaN, NaN above everything) and silently disagree.
+     * Spec-gated equal to the aggregate and the brute-force oracle.
      *
      * Memory shape at scale: the sample (m·d doubles) and the candidate
      * set (≤ maxCandidates·d doubles) live on the driver and ride to
-     * tasks as referenced objects — the same magnitude the aggregate's
-     * buffer cap admits; everything else is map-side passes plus one
-     * (int index, count) aggregation. EAGER like the pair finders: the
-     * (small) result is materialized and internal caches released —
-     * `unpersist()` it when looping.
+     * tasks in the task closure; each task returns one count per
+     * candidate. EAGER: the result is a local relation of the
+     * candidates and their counts.
      */
     def kSkybandJoin(dims: Seq[(String, Direction)], k: Int,
         sampleSize: Int = 8192, maxCandidates: Int = 1 << 20,
@@ -293,19 +348,17 @@ object SkylineOps {
      * lies in the k-skyband, because each of a point's dominators
      * strictly outscores it (dominance is transitive: q dom p ⟹
      * dom(q) ⊇ dom(p) ∪ {p}), so ≥ k dominators ⟹ ≥ k strictly
-     * higher scorers ⟹ out of the top k. So: (1) the map-side sample
-     * prune keeps a small superset of the k-skyband; (2) the bounded
-     * candidate set rides to tasks and the whole input streams past it
-     * ONCE — scores come from the same [[graft.functions
-     * .DominatedIndices]] kernel evaluated in NEGATED space (c dominates
-     * r ⟺ −r dominates −c, so each row emits the candidates that
-     * dominate IT); (3) order by (score desc, dims asc — a total order
-     * over the distinct projected points) and take k.
+     * higher scorers ⟹ out of the top k. So: (1) the sample prune keeps
+     * a small superset of the k-skyband; (2) every partition fills a
+     * dense array counting, per score-sorted candidate, the points it
+     * dominates — a candidate can only dominate points scoring at least
+     * as high, so each point scans a prefix of the candidates — and the
+     * driver sums the arrays; (3) order by (score desc, dims asc — a
+     * total order over the distinct projected points) and take k.
      *
      * Set semantics like the rest of the family (exact duplicates
      * collapse; a NaN-carrying row is incomparable — dominates nothing,
-     * scores 0). EAGER: the k-row result is materialized and internal
-     * caches released.
+     * scores 0). EAGER: the counting passes run before this returns.
      */
     def topKDominating(dims: Seq[(String, Direction)], k: Int,
         sampleSize: Int = 8192, maxCandidates: Int = 1 << 20,
@@ -581,92 +634,51 @@ object SkylineOps {
 
     /** The skyline per `keys` tuple; with no keys, the one global
       * skyline (`Dataset.agg` is `groupBy().agg`, so the plan is the
-      * same). A hint applies to the global skyline only. */
+      * same). A hint applies to the global skyline only: it becomes the
+      * aggregate's cell key, so a hinted skyline is one aggregate whose
+      * buffer holds a frontier per cell (see [[SkylineAggExpr]]) — the
+      * reference's per-key local skylines and global merge
+      * (batch_job.py:96-188) behind one Exchange. */
     private def skylineKeyed(keys: Seq[String], dims: Seq[(String, Direction)],
         hint: PartitionHint, bounds: Option[Seq[(Double, Double)]]): DataFrame = {
       val minDir = dims.map(_._2.isMin).toArray
-      val pts = sfsSorted(prepared(keys, dims, oriented = false), minDir)
+      val input = prepared(keys, dims, oriented = false)
       val dim = (i: Int) => col(s"_d$i")
-      val dimCols = dims.indices.map(dim)
+      val d = dims.length
+      lazy val bs = bounds.getOrElse(dimBounds(input, d))
 
-      def resolvedBounds(): Seq[(Double, Double)] = bounds.getOrElse {
-        val aggs = dims.indices.flatMap(i => Seq(min(dim(i)), max(dim(i))))
-        val row = pts.agg(aggs.head, aggs.tail: _*).head()
-        // Empty input: min/max are null. Any bounds yield the correct
-        // empty skyline; use a degenerate-safe placeholder.
-        if (row.isNullAt(0)) dims.indices.map(_ => (0.0, 1.0))
-        else dims.indices.map { i =>
-          val lo = row.getDouble(2 * i)
-          val hi = row.getDouble(2 * i + 1)
-          if (hi > lo) (lo, hi) else (lo, lo + 1.0) // all-equal dim: 1 bucket
-        }
-      }
+      val cell = hint match {
+        case NoHint => None
 
-      /** Two-stage: per-key local skylines, then global merge — the shape of
-        * batch_job.py:96-188 as one declarative plan. Points travel as
-        * array<double> only between the (tiny) local and global stages. */
-      def twoStage(keyed: DataFrame): DataFrame =
-        keyed
-          .groupBy("_k").agg(skyAgg(dimCols, minDir).as("_ls"))
-          .select(explode(col("_ls")).as("_p"))
-          .agg(skyAgg(dims.indices.map(i => element_at(col("_p"), i + 1)), minDir).as("_sky"))
-
-      val skyDf = hint match {
-        case NoHint => pts.groupBy(keys.map(col): _*).agg(skyAgg(dimCols, minDir).as("_sky"))
-
-        case DimHint(p) =>
-          val (lo, hi) = resolvedBounds().head
-          twoStage(pts.withColumn("_k", dimKeyExpr(p, lo, hi, dim(0))))
+        case DimHint(p) => Some(dimKeyExpr(p, bs.head._1, bs.head._2, dim(0)))
 
         case GridHint(b) =>
-          require(BigInt(b).pow(dims.length) <= BigInt(Long.MaxValue),
-            s"grid key space b^d = $b^${dims.length} overflows Long")
-          val bs = resolvedBounds()
-          // Exact Long multipliers (math.pow doubles lose precision past 2^53).
-          val mult = Seq.iterate(1L, dims.length)(_ * b)
-          val key = dims.indices
-            .map(i => lit(mult(i)) * dimKeyExpr(b, bs(i)._1, bs(i)._2, dim(i)))
-            .reduce(_ + _)
-          val keyed = pts.withColumn("_k", key)
-          // Dominated-cell prune (D7), made sound: one cheap pre-pass finds
-          // the occupied cells (map-side-combined distinct over at most b^d
-          // keys), the kept set is computed on the driver, and the prune
-          // becomes a plan-time isin filter — not a runtime UDF as in the
-          // reference. See SkylineCore.keptOccupiedKeys for why the
-          // reference's geometric best-cell prune is unsound on sparse data.
-          // Keys stay Long end-to-end: truncating to Int would corrupt the
-          // kept-set for b^d > 2^31 and silently drop cells.
-          // b^d only has to fit a Long, so a fine grid could pull an
-          // unbounded cell set onto the driver: limit(cap+1) bounds what
-          // the driver ever holds, and the overflow fails loudly.
-          val cellCap = SkylineCore.MaxOccupiedGridCells
-          val occupied = keyed.select("_k").distinct().limit(cellCap + 1)
-            .collect().map(_.getLong(0))
-          if (occupied.length > cellCap) throw new IllegalStateException(
-            s"GridHint($b) over ${dims.length} dims has more than $cellCap occupied " +
-              "cells, the most the plan-time dominated-cell prune takes. Lower b, or " +
-              "use NoHint/AngleHint (partial aggregation needs no grid).")
-          val kept = SkylineCore.keptOccupiedKeys(minDir, b, occupied.toSeq)
-          twoStage(keyed.filter(col("_k").isin(kept: _*)))
+          require(BigInt(b).pow(d) <= BigInt(Long.MaxValue),
+            s"grid key space b^d = $b^$d overflows Long")
+          // Exact Long multipliers (math.pow doubles lose precision past
+          // 2^53). No cell is pruned up front (SkylineCore.mergeCells).
+          val mult = Seq.iterate(1L, d)(_ * b)
+          Some(dims.indices.map(i => lit(mult(i)) * dimKeyExpr(b, bs(i)._1, bs(i)._2, dim(i)))
+            .reduce(_ + _))
 
         case AngleHint(p) =>
-          val d = dims.length
           require(d < 2 || BigInt(p).pow(d - 1) <= BigInt(Long.MaxValue),
             s"angle key space p^(d-1) = $p^${d - 1} overflows Long")
-          // d=1 has no angular coordinate: a single partition.
-          if (d == 1) twoStage(pts.withColumn("_k", lit(0L))) else {
-          val range = (math.Pi / 2) / p
-          val mult = Seq.iterate(1L, math.max(d - 1, 1))(_ * p)
-          val key = (0 until d - 1).map { i =>
-            val tail = sqrt((i + 1 until d).map(j => dim(j) * dim(j)).reduce(_ + _))
-            val k = when(dim(i) === lit(0.0), lit(p - 1))
-              .otherwise(least(greatest(floor(atan(tail / dim(i)) / lit(range)).cast(IntegerType), lit(0)), lit(p - 1)))
-            lit(mult(i)) * k
-          }.reduce(_ + _)
-          twoStage(pts.withColumn("_k", key))
+          // d=1 has no angular coordinate: a single cell.
+          if (d == 1) Some(lit(0L)) else {
+            val range = (math.Pi / 2) / p
+            val mult = Seq.iterate(1L, d - 1)(_ * p)
+            Some((0 until d - 1).map { i =>
+              val tail = sqrt((i + 1 until d).map(j => dim(j) * dim(j)).reduce(_ + _))
+              val k = when(dim(i) === lit(0.0), lit(p - 1))
+                .otherwise(least(greatest(floor(atan(tail / dim(i)) / lit(range)).cast(IntegerType), lit(0)), lit(p - 1)))
+              lit(mult(i)) * k
+            }.reduce(_ + _))
           }
       }
 
+      val skyDf = sfsSorted(input, minDir).groupBy(keys.map(col): _*)
+        .agg(skyAgg(dims.indices.map(dim), minDir, cell).as("_sky"))
       restored(skyDf.select(keys.map(col) :+ explode(col("_sky")).as("_pt"): _*),
         keys, dims, oriented = false, i => element_at(col("_pt"), i + 1))
     }
@@ -688,54 +700,76 @@ object SkylineOps {
     }
 
     /** The dominance-count core of [[kSkybandJoin]] and [[topKDominating]]:
-      * the distinct oriented points, a bounded random sample, the
-      * map-side `dominatorCountUpTo` prune (≥ k sample dominators prove
-      * a point out of the k-skyband), at most `maxCandidates` survivors
-      * collected (`tooMany` otherwise), and one pass of the whole input
-      * past them with the `dominatedIndices` kernel. Each candidate gets
-      * its count as `countAs`: the points that dominate it, or with
-      * `negated` the points it dominates (c dominates r ⟺ −r dominates
-      * −c, so each row emits the candidates that dominate IT; NaN stays
-      * incomparable under the kernel's Java-double comparisons, and
-      * −NaN = NaN). `finish` picks the rows; the result is materialized
-      * and the internal cache released. */
+      * three passes, one Spark job each, over the distinct oriented points
+      * cached as one flat block per partition. (1) Each partition's row
+      * count and seeded sample, merged into a uniform sample on the
+      * driver ([[mergedSample]]). (2) The prune against the score-sorted
+      * sample; at most `maxCandidates` survivors reach the driver
+      * (`tooMany` otherwise). (3) Each partition fills a dense count
+      * array over the score-sorted candidates, and the driver sums them:
+      * per candidate, as `countAs`, the points that dominate it, or with
+      * `negated` the points it dominates. The prune removes only points
+      * with ≥ k real dominators and pass 3 counts against every distinct
+      * point, so the counts are exact whatever the sample. `finish` picks
+      * the rows of the local relation of candidates and counts. */
     private def dominanceCounted(dims: Seq[(String, Direction)], k: Int, sampleSize: Int,
         maxCandidates: Int, seed: Long, negated: Boolean, countAs: String, tooMany: => String)(
         finish: DataFrame => DataFrame): DataFrame = {
       val spark = df.sparkSession
+      val sc = spark.sparkContext
       val d = dims.length
-      val projected = prepared(Nil, dims, oriented = true).distinct().persist()
+      val blocks = prepared(Nil, dims, oriented = true).distinct().queryExecution.toRdd
+        .mapPartitions { rows =>
+          val b = Array.newBuilder[Double]
+          rows.foreach { r => var i = 0; while (i < d) { b += r.getDouble(i) + 0.0; i += 1 } }
+          Iterator.single(b.result())
+        }.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val pt = dims.indices.map(i => col(s"_d$i"))
-        val nAll = projected.count()
-        val refs: Array[Array[Double]] =
-          if (nAll == 0) Array.empty
-          else projected
-            .sample(withReplacement = false,
-              math.min(1.0, sampleSize.toDouble / nAll), seed)
-            .collect().map(r => Array.tabulate(d)(r.getDouble))
-        val pruned = projected.filter(
-          DominanceFunctions.dominatorCountUpTo(array(pt: _*), refs, d, k) < k)
-        val candRows = pruned.limit(maxCandidates + 1).collect()
-        if (candRows.length > maxCandidates) throw new IllegalArgumentException(tooMany)
-        val cands = candRows.map(r => Array.tabulate(d)(r.getDouble))
-        val emitted =
-          if (negated) DominanceFunctions.dominatedIndices(
-            array(pt.map(-_): _*), cands.map(_.map(x => -x)), d)
-          else DominanceFunctions.dominatedIndices(array(pt: _*), cands, d)
-        val counts = projected
-          .select(explode(emitted).as("_ci"))
-          .groupBy(col("_ci")).agg(count(lit(1)).as("_cnt"))
-        import spark.implicits._
-        val candDf = cands.zipWithIndex
-          .map { case (p, i) => (i, p.toSeq) }.toSeq.toDF("_ci", "_p")
-        val out = finish(restored(candDf.join(counts, Seq("_ci"), "left"), Nil, dims,
-          oriented = true, i => element_at(col("_p"), i + 1),
-          coalesce(col("_cnt"), lit(0L)).as(countAs))).persist()
-        try out.count()
-        catch { case t: Throwable => out.unpersist(blocking = false); throw t }
-        out
-      } finally projected.unpersist(blocking = false)
+        val samples = blocks.mapPartitionsWithIndex { (part, it) =>
+          val flat = it.next()
+          Iterator.single((flat.length / d, sampleOf(flat, d, sampleSize, new java.util.Random(seed + part))))
+        }.collect()
+        val sample = mergedSample(samples, d, sampleSize, new java.util.Random(seed))
+        val refs = SkylineCore.ScoreSorted(d, sample)
+        val kept = new Array[Array[Double]](samples.length)
+        var found = 0L
+        if (samples.exists(_._1 > 0)) sc.runJob(blocks, (it: Iterator[Array[Double]]) => {
+          val flat = it.next()
+          val out = Array.newBuilder[Double]
+          var n = 0L
+          var o = 0
+          while (o < flat.length && n <= maxCandidates) {
+            if (refs.dominators(flat, o, k) < k) { out.addAll(flat, o, d); n += 1 }
+            o += d
+          }
+          out.result()
+        }, (part: Int, cands: Array[Double]) => {
+          found += cands.length / d
+          if (found <= maxCandidates) kept(part) = cands
+        })
+        if (found > maxCandidates) throw new IllegalArgumentException(tooMany)
+        val cands = SkylineCore.ScoreSorted(d, kept.filter(_ != null).flatten)
+        val counts = new Array[Long](cands.size)
+        if (cands.size > 0) sc.runJob(blocks, (it: Iterator[Array[Double]]) => {
+          val flat = it.next()
+          val c = new Array[Int](cands.size)
+          var o = 0
+          while (o < flat.length) {
+            if (negated) cands.dominators(flat, o, Int.MaxValue, c) else cands.tallyDominated(flat, o, c)
+            o += d
+          }
+          c
+        }, (_: Int, c: Array[Int]) => {
+          var i = 0
+          while (i < c.length) { counts(i) += c(i); i += 1 }
+        })
+        val rows = Seq.tabulate(cands.size)(i =>
+          Row.fromSeq(cands.coords.slice(i * d, i * d + d).toSeq :+ counts(i)))
+        val schema = StructType(dims.indices.map(i => StructField(s"_d$i", DoubleType, false)) :+
+          StructField("_cnt", LongType, false))
+        finish(restored(spark.createDataFrame(rows.asJava, schema), Nil, dims,
+          oriented = true, i => col(s"_d$i"), col("_cnt").as(countAs)))
+      } finally blocks.unpersist(blocking = false)
     }
 
     /** The input side every entry point shares: rows with a null
@@ -765,7 +799,8 @@ object SkylineOps {
       val schema = df.schema
       result.select(keys.map(col) ++ dims.zipWithIndex.map { case ((name, dir), i) =>
         val v = coord(i)
-        fromDouble(if (oriented && !dir.isMin) -v else v, schema(name).dataType).as(name)
+        // 0.0 - v, not -v: a zero on a MAX dimension comes back as +0.0
+        fromDouble(if (oriented && !dir.isMin) lit(0.0) - v else v, schema(name).dataType).as(name)
       } ++ extra: _*)
     }
 
@@ -791,10 +826,13 @@ object SkylineOps {
         .reduce(_ + _).asc)
 
     /** Skyline aggregate over the given dimension columns (native
-      * TypedImperativeAggregate; see [[SkylineAggExpr]]). */
-    private def skyAgg(cols: Seq[Column], minDir: Array[Boolean]): Column = ColumnShim.column(
+      * TypedImperativeAggregate; see [[SkylineAggExpr]]), with one
+      * frontier per value of `cell` when given. */
+    private def skyAgg(cols: Seq[Column], minDir: Array[Boolean],
+        cell: Option[Column] = None): Column = ColumnShim.column(
       SkylineAggExpr(cols.map(ColumnShim.expression), minDir,
-        SkylineAggExpr.configuredCap(df.sparkSession)).toAggregateExpression())
+        SkylineAggExpr.configuredCap(df.sparkSession),
+        cell.map(k => ColumnShim.expression(k.cast(LongType)))).toAggregateExpression())
 
     private def requireKeys(op: String, keyCols: Seq[String],
         dims: Seq[(String, Direction)]): Unit = {

@@ -442,12 +442,6 @@ class FunctionsSpec extends AnyFunSuite {
       assert(q8.select(QuantFunctions.dequantizeInt8(col("q"))).head().get(0) != null)
       assert(Seq("abcd").toDF("t").select(EntropyFunctions.byteEntropy(col("t")))
         .head().getDouble(0) == 2.0)
-      assert(vec.select(DominanceFunctions.dominatorCountUpTo(col("a"),
-        Array(Array(0.0, 0.0, 0.0), Array(9.0, 9.0, 9.0)), dim = 3, k = 5))
-        .head().getInt(0) == 1)
-      assert(vec.select(DominanceFunctions.dominatedIndices(col("a"),
-        Array(Array(0.0, 0.0, 0.0), Array(9.0, 9.0, 9.0)), dim = 3))
-        .head().getSeq[Int](0) == Seq(1))
       // PQ kernels: m=1 subspace, 2 codewords over the 3-dim vector
       val book = Array(Array(Array(0.0, 0.0, 0.0), Array(1.0, 2.0, 3.0)))
       assert(vec.select(PqFunctions.pqAssignCodes(col("a"), book))

@@ -38,14 +38,15 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), s"top-k must not global-sort:\n$p")
   }
 
-  test("sky_topdom: k-row cut is TakeOrderedAndProject and the score join broadcasts") {
-    // the operator is EAGER (the returned frame wraps its persisted
-    // result), so the shape under pin lives inside the InMemoryRelation
+  test("sky_topdom: k-row cut is TakeOrderedAndProject over local counts") {
+    // the operator is EAGER: its counting passes run before it returns,
+    // and the returned frame cuts k rows from a local relation of the
+    // candidates and their counts — no join, no re-scan of the input
     val p = plan("sky_topdom")
     assert(p.contains("TakeOrderedAndProject"),
       s"the k-row cut must not global-sort:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"the candidate/count join must broadcast (both sides are bounded):\n$p")
+    assert(p.contains("LocalTableScan") && !p.contains("Join") && !p.contains("Exchange"),
+      s"the k-row cut must read only the local candidate counts:\n$p")
   }
 
   test("an UN-hinted dimension join auto-broadcasts under the size threshold") {

@@ -62,7 +62,11 @@ class SkylineEdgeInputSpec extends AnyFunSuite {
       Input("signed zeros on a MAX dimension", grouped(base ++
         Seq(0.0, -0.0, -0.0).map(z => best(0.5).init :+ Double.box(z))), mins.init :+ Max),
       Input("infinities", grouped(base ++ Seq(padded(-inf, inf), padded(inf, -inf),
-        padded(-inf, inf), padded(-inf, 9.0), padded(inf, -inf), padded(1.0, -inf))), mins))
+        padded(-inf, inf), padded(-inf, 9.0), padded(inf, -inf), padded(1.0, -inf))), mins),
+      // a NaN point in the worst grid bucket of its first dimension: an
+      // occupied-cell prune drops its cell, though nothing dominates it
+      Input("NaN in a dominated grid cell", grouped(Seq(padded(1.0, 1.0),
+        padded(Double.NaN, 9.0), padded(5.0, 5.0), padded(9.0, 9.0))), mins))
   }
 
   private def frame(in: Input, d: Int): DataFrame = {
@@ -134,6 +138,22 @@ class SkylineEdgeInputSpec extends AnyFunSuite {
       (df, in) => df.skylineExternal(in.dims, windowSize = 4), skylineWant),
     Op("topKDominating", allowsMax = true, ordered = true,
       (df, in) => df.topKDominating(in.dims, TopK), topDominatingRows))
+
+  test("a zero on a MAX dimension comes back as +0.0 from every entry point") {
+    val plusZero = java.lang.Double.doubleToRawLongBits(0.0)
+    for {
+      op <- ops if op.allowsMax
+      d <- Seq(2, 5)
+      in <- inputs(d) if in.name == "signed zeros on a MAX dimension"
+    } {
+      val out = op.run(frame(in, d), in)
+      val zeros = try out.collect().toSeq.flatMap(_.toSeq).collect { case x: Double if x == 0.0 => x }
+        finally out.unpersist(blocking = false)
+      val wantZero = op.want(in).exists(_.contains("0.0"))
+      assert(zeros.nonEmpty == wantZero && zeros.forall(java.lang.Double.doubleToRawLongBits(_) == plusZero),
+        s"${op.name} at d=$d: $zeros")
+    }
+  }
 
   for (op <- ops) test(s"${op.name}: edge inputs at d = 2 and 5 match brute force") {
     for {

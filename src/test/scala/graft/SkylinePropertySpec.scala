@@ -3,7 +3,10 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.core.SkylineCore
+import graft.core.{Direction, SkylineCore}
+import graft.core.SkylineCore.Frontier
+import graft.operators.GridHint
+import graft.operators.SkylineOps._
 
 /**
  * Property-based tests (SURVEY.md §5.2): the incremental skyline against
@@ -49,13 +52,6 @@ object SkylinePropertySpec extends Properties("skyline") {
 
   private def pointsGen(d: Int): Gen[List[Array[Double]]] =
     Gen.listOf(Gen.listOfN(d, coordGen).map(_.toArray))
-
-  /** Finite points for the grid-key properties. A point with a NaN
-    * coordinate dominates nothing and nothing dominates it, yet it still
-    * lands in a bucket, so the occupied-cell prune can drop its cell: a
-    * known, open defect of the grid prune, not of the kernel. */
-  private def finitePointsGen(d: Int): Gen[List[Array[Double]]] =
-    Gen.listOf(Gen.listOfN(d, Gen.choose(0, 8)).map(_.map(_.toDouble).toArray))
 
   private def dirGen(d: Int): Gen[Array[Boolean]] =
     Gen.listOfN(d, Gen.oneOf(true, false)).map(_.toArray)
@@ -116,19 +112,27 @@ object SkylinePropertySpec extends Properties("skyline") {
       merged.size == keys(merged).size && keys(merged) == brute(a ++ b, dirs)
     }
 
-  property("occupancy grid prune is safe: skyline points never land in pruned cells") =
-    forAll(finitePointsGen(2), dirGen(2), Gen.choose(2, 5)) { (pts, dirs, b) =>
-      val bounds = Array((0.0, 8.0), (0.0, 8.0))
-      def cell(p: Array[Double]) =
-        SkylineCore.gridKey(b, SkylineCore.gridDigits(b, bounds, p))
-      val occupied = pts.map(cell).distinct.map(_.toLong)
-      val kept = SkylineCore.keptOccupiedKeys(dirs, b, occupied).toSet
-      SkylineCore.skylineOf(pts, dirs).forall(p => kept.contains(cell(p)))
+  // The hinted aggregates merge per-cell skylines and skip a cell whose
+  // corner a point already found beats. Any frontier of real points may
+  // do the beating (here the skyline of a random subset); a cell it beats
+  // must hold no skyline point, NaN, signed zeros and infinities included.
+  property("corner skip is safe: no skyline point lies in a skipped cell") =
+    forAll(pointsGen(3), dirGen(3), Gen.choose(2, 4), Gen.long) { (pts, dirs, b, seed) =>
+      val bounds = Array.fill(3)((0.0, 8.0))
+      val cells = pts.groupBy(p => SkylineCore.gridKey(b, SkylineCore.gridDigits(b, bounds, p)))
+        .values.map(c => Frontier.of(SkylineCore.skylineOf(c, dirs), dirs)).toSeq
+      val rnd = new scala.util.Random(seed)
+      val seen = Frontier.of(SkylineCore.skylineOf(pts.filter(_ => rnd.nextBoolean()), dirs), dirs)
+      val want = brute(pts, dirs)
+      val safe = cells.forall(c => !seen.beats(c.corner) || c.points.forall(p => !want.contains(key(p))))
+      val merged = SkylineCore.mergeCells(dirs, cells)
+      safe && merged.size == keys(merged.points).size && keys(merged.points) == want
     }
 
   // The reference's geometric best-cell prune (functions.py:177-192) is
   // unsound on sparse data — pin the counterexample so the deviation stays
-  // documented: (5,5) is in the true skyline but its cell is pruned.
+  // documented: (5,5) is in the true skyline but its cell is pruned. The
+  // engine's GridHint(2) keeps it.
   property("reference geometric prune drops a skyline point on sparse data") = {
     val dirs = Array(true, true)
     val bounds = Array((0.0, 8.0), (0.0, 8.0))
@@ -136,10 +140,12 @@ object SkylinePropertySpec extends Properties("skyline") {
     val keptRef = SkylineCore.keptGridKeys(dirs, 2).toSet
     val cellOf55 = SkylineCore.gridKey(2, SkylineCore.gridDigits(2, bounds, Array(5.0, 5.0)))
     val inTrueSkyline = sky(pts, dirs).contains(key(Array(5.0, 5.0)))
-    Prop(inTrueSkyline && !keptRef.contains(cellOf55) &&
-      SkylineCore.keptOccupiedKeys(dirs, 2, pts.map(p =>
-        SkylineCore.gridKey(2, SkylineCore.gridDigits(2, bounds, p)).toLong).distinct)
-        .contains(cellOf55.toLong))
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val viaHint = pts.map(p => (p(0), p(1))).toDF("x", "y")
+      .skyline(Seq("x" -> Direction.Min, "y" -> Direction.Min), hint = GridHint(2))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSet
+    Prop(inTrueSkyline && !keptRef.contains(cellOf55) && viaHint.contains((5.0, 5.0)))
   }
 
   property("angle keys partition: every point gets a key in [0, p^(d-1))") =

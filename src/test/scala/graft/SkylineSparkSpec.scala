@@ -62,21 +62,20 @@ class SkylineSparkSpec extends AnyFunSuite {
     }
   }
 
-  test("grid-cell cap trips loudly when a pathological hint occupies too many cells") {
+  test("GridHint(1000) over 1e5 points returns exactly the NoHint skyline") {
     import org.apache.spark.sql.functions.{floor, rand}
     val dims = Seq("x1" -> Min, "x2" -> Min)
     // GridHint(1000) over 1e5 uniform-integer 2-D points in [0, 1000):
-    // every distinct point is its own cell, ~95k occupied — past the
-    // prune's fixed cap, so the plan-time prune must refuse to collect
-    // the occupied-cell set instead of pulling it onto the driver
+    // nearly every distinct point is its own cell (~95k cells), all in one
+    // aggregate's buffers; the merge's corner skip keeps the fine grid
+    // linear in its cells
     val fine = spark.range(100000).select(
       floor(rand(5) * 1000).cast("double").as("x1"),
-      floor(rand(6) * 1000).cast("double").as("x2"))
-    val e = intercept[IllegalStateException] {
-      fine.skyline(dims, hint = GridHint(1000)).collect()
-    }
-    assert(e.getMessage.contains(s"more than ${SkylineCore.MaxOccupiedGridCells} occupied"))
-    assert(e.getMessage.contains("Lower b") && e.getMessage.contains("NoHint/AngleHint"))
+      floor(rand(6) * 1000).cast("double").as("x2")).cache()
+    try {
+      assert(fine.skyline(dims, hint = GridHint(1000)).collect().map(_.toSeq).toSet ==
+        fine.skyline(dims).collect().map(_.toSeq).toSet)
+    } finally fine.unpersist()
     // and a default-sized grid is green and correct
     val df = randomDf(2000, 2, seed = 7)
     assert(df.skyline(dims, hint = GridHint(9)).collect().map(_.toSeq).toSet ==
