@@ -65,13 +65,7 @@ case class SkylineAggExpr(
 
   /** Inserts the row's point into `f`; how much `f` grew. */
   private def insertRow(f: Frontier, input: InternalRow): Int = {
-    var i = 0
-    while (i < f.d) {
-      val v = dims(i).eval(input)
-      if (v == null) return 0 // reference drops rows with missing coords
-      f.stage(i, v.asInstanceOf[Double])
-      i += 1
-    }
+    if (!SkylineAggExpr.stageRow(dims, f, input)) return 0
     val before = f.size
     if (f.insertStaged()) f.size - before else 0
   }
@@ -158,6 +152,20 @@ object SkylineAggExpr {
   private[operators] def capTrip(what: String, maxBuffer: Int, why: String): IllegalStateException =
     new IllegalStateException(
       s"$what buffer exceeded $maxBuffer points (spark.graft.skyline.maxBufferPoints): $why")
+
+  /** Stages the row's point into `f`, the input step of both
+    * aggregates; false if a coordinate is null (the reference drops rows
+    * with missing coordinates). */
+  private[operators] def stageRow(dims: Seq[Expression], f: Frontier, input: InternalRow): Boolean = {
+    var i = 0
+    while (i < f.d) {
+      val v = dims(i).eval(input)
+      if (v == null) return false
+      f.stage(i, v.asInstanceOf[Double])
+      i += 1
+    }
+    true
+  }
 
   /** Lexicographic point order of the sorted outputs. Double.compare,
     * not <: the IEEE operators are not a strict weak order when NaN is

@@ -410,8 +410,9 @@ object SkylineOps {
      *     inputs finish in O(n/cap) passes without ever risking a cap
      *     trip); the
      *     HEAD block {E <= eT} contains every possible dominator of any
-     *     of its own points, so its frontier — computed with the
-     *     existing bounded aggregate — is a subset of the global
+     *     of its own points, so its frontier — computed as a broadcast
+     *     self ANTI join of the head (a head point stays iff no head
+     *     point strictly dominates it) — is a subset of the global
      *     skyline: append it to the on-disk result, then broadcast it
      *     against the strictly-greater tail as a nested-loop ANTI join
      *     (dominance = conjunction of d column comparisons + one strict
@@ -421,9 +422,12 @@ object SkylineOps {
      *     dominator implies a surviving one.
      *
      * Memory shape at 100 TB: the TakeOrdered carries 8-byte scores
-     * only; the head-frontier aggregate buffer is capped (trips loudly
-     * if one E-tie block's frontier alone exceeds it — raise the cap or
-     * the window); the broadcast is the head frontier; survivors and
+     * only; the head frontier needs no aggregate buffer, so no cap can
+     * trip there — its self anti-join broadcasts the head itself (the
+     * pass window, kept a sixteenth under the buffer cap, plus any
+     * E-tie spill past it: w·d doubles); the tail's broadcast is the
+     * head frontier; only the step-3 sample's frontier runs through the
+     * bounded aggregate, on at most 8192 points; survivors and
      * per-pass frontiers round-trip through parquet RUNS on disk (the
      * external-BNL temp files — which also resets plan lineage each
      * pass: a persist()-based cascade compounds the logical plan

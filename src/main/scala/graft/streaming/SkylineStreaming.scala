@@ -25,10 +25,10 @@ import graft.operators.SkylineOps._
  *    exists in the reference; the skyline buffer is the state and it is
  *    small for low d).
  *
- * Partition hints are batch-only (not part of this API): a hinted
- * skyline is two chained aggregations, which Structured Streaming
- * forbids — and a stream needs no hint, since partial aggregation
- * already computes per-task local skylines each micro-batch.
+ * Partition hints are batch-only (not part of this API): a stream needs
+ * no hint, since partial aggregation already computes per-task local
+ * skylines each micro-batch, and the Dim/Grid hints' bounds pre-pass is
+ * a batch RDD job, which a streaming DataFrame cannot run.
  */
 object SkylineStreaming {
 
@@ -104,12 +104,11 @@ object SkylineStreaming {
   /** Streaming skyline: the same single-aggregate plan as the batch path
     * — Complete output mode is required by the global aggregate.
     *
-    * No hint/bounds parameters on purpose: the hinted path is TWO chained
-    * aggregations (per-key local skylines, then the global merge), and
-    * Spark's UnsupportedOperationChecker forbids multiple streaming
-    * aggregations outside watermarked time-window chains. A hint adds
-    * nothing on a stream anyway — partial aggregation already computes
-    * per-task local skylines each micro-batch. */
+    * No hint/bounds parameters on purpose: a hint adds nothing on a
+    * stream — partial aggregation already computes per-task local
+    * skylines each micro-batch, which is all a hinted skyline's cells
+    * add — and the Dim/Grid bounds pre-pass is a batch RDD job, which a
+    * streaming DataFrame cannot run. */
   def skylineStream(
       stream: DataFrame,
       dims: Seq[(String, Direction)],

@@ -11,10 +11,13 @@ import graft.core.{Direction, SkylineCore}
 import graft.operators.SkylineOps._
 
 /**
- * `kSkybandJoin` and `topKDominating` against brute force over random
- * inputs: k in 1..4, d up to 7, NaN, signed zeros and infinities drawn,
- * and sample sizes of 1, 3 and the whole input, so that the sample prune
- * both fires and sees every point. Rows and counts must be identical.
+ * `kSkybandOf`, `kSkybandJoin`, the `kSkyband` aggregate and
+ * `topKDominating` against brute force over random inputs: k in 1..4, d
+ * up to 7 (so the d >= 5 SFS presort runs), NaN, signed zeros and
+ * infinities drawn, and sample sizes of 1, 3 and the whole input, so that
+ * the sample prune both fires and sees every point. The aggregate runs on
+ * three partitions, so partial buffers cross `serialize`, `deserialize`
+ * and `merge`. Rows and counts must be identical.
  */
 object KSkybandPropertySpec extends Properties("kskyband") {
   private lazy val spark = SparkTestSession.spark
@@ -42,11 +45,23 @@ object KSkybandPropertySpec extends Properties("kskyband") {
       minDir.indices.map(i => s"x$i" -> (if (minDir(i)) Direction.Min else Direction.Max))
     def frame = spark.createDataFrame(points.map(p => Row.fromSeq(p.toSeq)).asJava,
       StructType((0 until d).map(i => StructField(s"x$i", DoubleType, nullable = false))))
+    /** Distinct points, -0.0 read as +0.0. */
+    private def distinct: Seq[Array[Double]] =
+      points.map(_.map(_ + 0.0)).groupBy(p => key(p.toSeq)).values.map(_.head).toSeq
     /** Distinct points with the number each one dominates. */
     def dominated: Seq[(Array[Double], Int)] = {
-      val ps = points.map(_.map(_ + 0.0)).groupBy(p => key(p.toSeq)).values.map(_.head).toSeq
+      val ps = distinct
       ps.map(p => (p, ps.count(q => SkylineCore.dominates(p, q, minDir))))
     }
+    /** The k-skyband: distinct points with fewer than k dominators, keyed,
+      * with their dominator counts. */
+    lazy val band: Set[(Seq[Long], Long)] = {
+      val ps = distinct
+      ps.map(p => (key(p.toSeq), ps.count(q => SkylineCore.dominates(q, p, minDir)).toLong))
+        .filter(_._2 < k).toSet
+    }
+    /** `got` holds exactly the band's rows and counts, each once. */
+    def isBand(got: Seq[(Seq[Long], Long)]): Boolean = got.size == band.size && got.toSet == band
   }
 
   private val caseGen: Gen[Case] = for {
@@ -61,11 +76,17 @@ object KSkybandPropertySpec extends Properties("kskyband") {
   private def rows(out: org.apache.spark.sql.DataFrame, d: Int): Seq[(Seq[Long], Long)] =
     out.collect().toSeq.map(r => (key((0 until d).map(r.getDouble)), r.getLong(d)))
 
-  property("kSkybandJoin matches kSkybandOf") = forAll(caseGen) { c =>
-    val got = rows(c.frame.kSkybandJoin(c.dims, c.k, sampleSize = c.sampleSize), c.d)
-    val want = SkylineCore.kSkybandOf(c.points, c.minDir, c.k)
-      .map { case (p, n) => (key(p.toSeq), n.toLong) }
-    got.size == want.size && got.toSet == want.toSet
+  property("kSkybandOf matches a brute dominator count") = forAll(caseGen) { c =>
+    c.isBand(SkylineCore.kSkybandOf(c.points, c.minDir, c.k).toSeq
+      .map { case (p, n) => (key(p.toSeq), n.toLong) })
+  }
+
+  property("kSkybandJoin matches a brute dominator count") = forAll(caseGen) { c =>
+    c.isBand(rows(c.frame.kSkybandJoin(c.dims, c.k, sampleSize = c.sampleSize), c.d))
+  }
+
+  property("the kSkyband aggregate matches a brute dominator count") = forAll(caseGen) { c =>
+    c.isBand(rows(c.frame.repartition(3).kSkyband(c.dims, c.k), c.d))
   }
 
   property("topKDominating matches a brute dominated count") = forAll(caseGen) { c =>

@@ -94,6 +94,16 @@ class KSkybandSpec extends AnyFunSuite {
     }
   }
 
+  test("kSkyband aggregate: a duplicate adds no hit before its equal twin rejects it") {
+    import spark.implicits._
+    // one partition, so one buffer sees the rows in this order (see the
+    // core witness in SkylineCoreSpec)
+    val df = Seq((2.0, 2.0), (1.0, 1.0), (1.0, 1.0)).toDF("c0", "c1").coalesce(1)
+    val got = df.kSkyband(Seq("c0" -> Min, "c1" -> Min), k = 2)
+      .collect().map(r => ((r.getDouble(0), r.getDouble(1)), r.getLong(2))).toSet
+    assert(got == Set(((1.0, 1.0), 0L), ((2.0, 2.0), 1L)))
+  }
+
   test("kSkybandJoin: NaN rows are incomparable band members; empty input is empty") {
     import spark.implicits._
     val dims: Seq[(String, graft.core.Direction)] = Seq("c0" -> Min, "c1" -> Min)

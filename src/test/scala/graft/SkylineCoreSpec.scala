@@ -109,6 +109,13 @@ class SkylineCoreSpec extends AnyFunSuite {
     assert(m == Set(Seq(1.0, 9.0), Seq(2.0, 2.0), Seq(9.0, 1.0)))
   }
 
+  test("k-skyband: a duplicate adds no hit before its equal twin rejects it") {
+    // the second (1,1) dominates (2,2) and meets it before its equal twin;
+    // a hit applied then would give (2,2) a second dominator and drop it
+    val band = kSkybandOf(Seq(Array(2.0, 2.0), Array(1.0, 1.0), Array(1.0, 1.0)), minMin, k = 2)
+    assert(band.map { case (p, c) => (p.toSeq, c) } == Seq((Seq(2.0, 2.0), 1), (Seq(1.0, 1.0), 0)))
+  }
+
   // ---- MR_DIM (functions.py:57-73) --------------------------------------
 
   test("dimKey: reference docstring vectors, domain [0,10]") {
