@@ -284,27 +284,7 @@ object SkylineCore {
         var i = 0
         while (i < d) { if (p(po + i) <= c(qo + i)) k += 1; i += 1 }
         if (k == d) Dropped else Keeps
-      } else {
-        // one fused pass: strict-better flags both ways, NaN
-        // incomparability, and equality (NaN equal to NaN)
-        var qBetter = false
-        var pBetter = false
-        var nan = false
-        var unequalNan = false
-        var i = 0
-        while (i < d && !(qBetter && pBetter)) {
-          val qv = c(qo + i)
-          val pv = p(po + i)
-          if (qv < pv) qBetter = true
-          else if (qv > pv) pBetter = true
-          else if (qv != pv) { nan = true; if (qv == qv || pv == pv) unequalNan = true }
-          i += 1
-        }
-        if (!qBetter && !pBetter && !unequalNan) Equal
-        else if (nan || qBetter == pBetter) Keeps
-        else if (qBetter) Rejects
-        else Dropped
-      }
+      } else tie(c, qo, p, po, d)
     }
 
     private def moveMember(from: Int, to: Int): Unit = if (to < from) {
@@ -324,28 +304,12 @@ object SkylineCore {
       n += 1
     }
 
-    /** Per-dimension minimum of the oriented members, folded with
-      * `Math.min`, so a member's NaN coordinate makes its dimension NaN. */
-    def corner: Array[Double] = {
-      val c = Array.fill(d)(Double.PositiveInfinity)
-      for (o <- 0 until n * d) c(o % d) = Math.min(c(o % d), coords(o))
-      c
-    }
-
-    /** True iff some member lies strictly below the oriented `corner` in
-      * every dimension. That member, a real point, then dominates every
-      * point whose oriented coordinates are all at or above the corner;
-      * a NaN in the corner compares false, so such a corner is never
-      * beaten. */
-    def beats(corner: Array[Double]): Boolean = (0 until n).exists { r =>
-      var i = 0
-      while (i < d && coords(r * d + i) < corner(i)) i += 1
-      i == d
-    }
+    /** Members' MIN-oriented coordinates, flat, member order. */
+    def oriented: Array[Double] = java.util.Arrays.copyOf(coords, n * d)
 
     /** Members' coordinates in their own directions, flat, member order. */
     def flat: Array[Double] = {
-      val out = java.util.Arrays.copyOf(coords, n * d)
+      val out = oriented
       var i = 0
       while (i < d) {
         if (!minDir(i)) { var o = i; while (o < out.length) { out(o) = 0.0 - out(o); o += d } }
@@ -380,21 +344,6 @@ object SkylineCore {
     s
   }
 
-  /** Skyline of the union of per-cell skylines, the last step of the
-    * hinted aggregates. Cells are visited in ascending score of their
-    * [[Frontier.corner]]; a cell is skipped when a member of the skyline
-    * accumulated so far [[Frontier.beats]] its corner (that member
-    * dominates every point of the cell), and otherwise merged whole, so
-    * the cell's points meet only the larger side's original members. The
-    * skip costs at most one scan of the accumulated skyline per cell. */
-  def mergeCells(minDir: Array[Boolean], cells: Iterable[Frontier]): Frontier = {
-    val byCorner = cells.toArray.map(c => (c, c.corner))
-      .sortBy { case (c, corner) => score(corner, 0, c.d) }(Ordering.Double.TotalOrdering)
-    var acc = new Frontier(minDir)
-    for ((c, corner) <- byCorner) if (!acc.beats(corner)) acc = acc.merge(c)
-    acc
-  }
-
   /**
    * MIN-oriented points held flat (stride `d`) in ascending score order
    * (the [[Frontier]] score, NaN last): the dominance-count kernels of
@@ -406,9 +355,13 @@ object SkylineCore {
    * neither NaN nor +Inf, then `q` holds no NaN or +Inf, and by the
    * [[Frontier]] gate's argument score(q) <= score(p). A NaN score (a NaN
    * coordinate, or +Inf meeting -Inf) or a +Inf one bounds nothing.
+   *
+   * With `origins`, each member carries the id of the frontier it came
+   * from, and [[survives]] tells which members form the skyline of them
+   * all.
    */
   final class ScoreSorted private (val d: Int, val coords: Array[Double],
-      scores: Array[Double]) extends Serializable {
+      scores: Array[Double], origins: Array[Int]) extends Serializable {
     def size: Int = scores.length
 
     /** How many members dominate the point at `p(po until po + d)`,
@@ -435,6 +388,33 @@ object SkylineCore {
       val sp = score(p, po, d)
       var c = if (sp.isNaN) 0 else firstFrom(sp, inclusive = true)
       while (c < size) { if (dominates(p, po, coords, c * d)) counts(c) += 1; c += 1 }
+    }
+
+    /** True iff member `i` is in the skyline of the members under
+      * [[Frontier]]'s set semantics: no member dominates it, and no member
+      * of a lower origin equals it (bitwise, NaN equal to NaN). The scan
+      * ends where [[dominators]]'s does. A member scoring strictly below
+      * `i` can only dominate it, so one count decides, as in the
+      * [[Frontier]] gate; tied and unbounded scores take the full test. */
+    def survives(i: Int): Boolean = {
+      val po = i * d
+      val sp = scores(i)
+      val end = if (sp.isNaN || sp == Double.PositiveInfinity) size else firstFrom(sp, inclusive = false)
+      var c = 0
+      while (c < end) {
+        val qo = c * d
+        if (scores(c) < sp) {
+          var k = 0
+          var j = 0
+          while (j < d) { if (coords(qo + j) <= coords(po + j)) k += 1; j += 1 }
+          if (k == d) return false
+        } else if (c != i) {
+          val rel = tie(coords, qo, coords, po, d)
+          if (rel == Rejects || (rel == Equal && origins(c) < origins(i))) return false
+        }
+        c += 1
+      }
+      true
     }
 
     /** First member whose score is at least `s` (`inclusive`) or above it. */
@@ -465,16 +445,41 @@ object SkylineCore {
   }
 
   object ScoreSorted {
-    /** The points of `flat` (stride `d`, MIN-oriented, no -0.0), sorted. */
-    def apply(d: Int, flat: Array[Double]): ScoreSorted = {
+    /** The points of `flat` (stride `d`, MIN-oriented, no -0.0), sorted,
+      * with their `origins` when given. */
+    def apply(d: Int, flat: Array[Double], origins: Array[Int] = null): ScoreSorted = {
       val n = flat.length / d
       val s = Array.tabulate(n)(r => score(flat, r * d, d))
       val order = Array.range(0, n).sortBy(s(_))(Ordering.Double.TotalOrdering)
       val coords = new Array[Double](n * d)
       var i = 0
       while (i < n) { System.arraycopy(flat, order(i) * d, coords, i * d, d); i += 1 }
-      new ScoreSorted(d, coords, order.map(s))
+      new ScoreSorted(d, coords, order.map(s), if (origins == null) null else order.map(origins))
     }
+  }
+
+  /** How the point at `q(qo until qo + d)` relates to the one at
+    * `p(po until po + d)` as a [[Frontier]] member to a new point, in one
+    * fused pass: strict-better flags both ways, NaN incomparability, and
+    * equality (NaN equal to NaN). The full test behind the score gate. */
+  private def tie(q: Array[Double], qo: Int, p: Array[Double], po: Int, d: Int): Int = {
+    var qBetter = false
+    var pBetter = false
+    var nan = false
+    var unequalNan = false
+    var i = 0
+    while (i < d && !(qBetter && pBetter)) {
+      val qv = q(qo + i)
+      val pv = p(po + i)
+      if (qv < pv) qBetter = true
+      else if (qv > pv) pBetter = true
+      else if (qv != pv) { nan = true; if (qv == qv || pv == pv) unequalNan = true }
+      i += 1
+    }
+    if (!qBetter && !pBetter && !unequalNan) Equal
+    else if (nan || qBetter == pBetter) Keeps
+    else if (qBetter) Rejects
+    else Dropped
   }
 
   /** [[Frontier]] member relations: the member stays, it is dominated by
@@ -546,14 +551,14 @@ object SkylineCore {
     out
   }
 
-  /** Combined grid key = sum_i b^i * digit_i (functions.py:131-134). */
-  def gridKey(b: Int, digits: Array[Int]): Int = {
+  /** Combined grid key = sum_i b^i * digit_i (functions.py:131-134);
+    * the caller keeps b^d within Long range. */
+  def gridKey(b: Int, digits: Array[Int]): Long = {
     var key = 0L
     var mult = 1L
     var i = 0
     while (i < digits.length) { key += mult * digits(i); mult *= b; i += 1 }
-    require(key <= Int.MaxValue, s"grid key overflow: b=$b d=${digits.length}")
-    key.toInt
+    key
   }
 
   /** Digits of the best cell: 0 for MIN dims, b-1 for MAX dims (functions.py:138-154). */
@@ -590,8 +595,8 @@ object SkylineCore {
    * non-empty. Counterexample: points (0,8), (8,0), (5,5) with b=2 —
    * (5,5) is in the true skyline but sits in the cell dominated by the
    * (empty) best cell, so the reference drops it. Kept here for parity
-   * tests only; the engine's GridHint prunes no cell up front and skips
-   * beaten cells while merging ([[mergeCells]]).
+   * tests only; the engine's GridHint prunes no cell: its cells only
+   * group the local frontiers that the verify stage checks.
    */
   def keptGridKeys(minDir: Array[Boolean], b: Int): Seq[Int] = {
     val d = minDir.length
@@ -618,8 +623,9 @@ object SkylineCore {
     }
   }
 
-  /** Combined MR_ANGLE key = sum_i p^i * angleDimKey_i over the first d-1 dims. */
-  def angleKey(p: Int, x: Array[Double]): Int = {
+  /** Combined MR_ANGLE key = sum_i p^i * angleDimKey_i over the first d-1
+    * dims; the caller keeps p^(d-1) within Long range. */
+  def angleKey(p: Int, x: Array[Double]): Long = {
     var key = 0L
     var mult = 1L
     var i = 0
@@ -631,7 +637,6 @@ object SkylineCore {
       mult *= p
       i += 1
     }
-    require(key <= Int.MaxValue, s"angle key overflow: p=$p d=${x.length}")
-    key.toInt
+    key
   }
 }

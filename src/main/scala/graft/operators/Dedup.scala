@@ -601,9 +601,12 @@ object Dedup {
    * min-label propagation as DataFrame jobs (each round every node
    * adopts the minimum label in its neighborhood — rounds needed = graph
    * diameter, and near-dup clusters are shallow), with a driver-checked
-   * fixpoint and a loud failure at the round cap. The distributed path
-   * is EAGER like the pair finders (result persisted, iteration caches
-   * released) — `unpersist()` the result when looping.
+   * fixpoint and a loud failure at the round cap. Each round's labels
+   * are checkpointed (reliably when the context has a checkpoint dir,
+   * locally otherwise), so a round's plan does not grow with the rounds
+   * before it. The distributed path is EAGER like the pair finders
+   * (result persisted, iteration caches released) — `unpersist()` the
+   * result when looping.
    */
   def labelComponents(
       df: DataFrame, idCol: String, pairsRaw: DataFrame,
@@ -670,11 +673,20 @@ object Dedup {
           if (changed == 0) {
             converged = true
           } else {
-            val next = joined
-              .select(col("id"),
-                least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-              .cache()
-            next.count() // materialize before dropping parents
+            // An eager checkpoint, not cache() + count(): a cached frame
+            // keeps its logical plan, which holds the previous labels
+            // twice (directly and inside msgs), so the plan doubles per
+            // round and rendering it for each job's start event ran a
+            // 6 GB driver out of heap at diameter 5. A checkpoint's plan
+            // is one RDD scan. Reliable when the session has a
+            // checkpoint dir (it survives executor loss); otherwise
+            // local, kept in executor storage like the cache it replaces
+            // and released by the context cleaner once unreachable.
+            val step = joined.select(col("id"),
+              least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+            val next =
+              if (step.sparkSession.sparkContext.getCheckpointDir.isDefined) step.checkpoint()
+              else step.localCheckpoint()
             labels.unpersist()
             labels = next
           }

@@ -2,15 +2,12 @@ package graft.operators
 
 import java.nio.ByteBuffer
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-import graft.core.SkylineCore
 import graft.core.SkylineCore.Frontier
 
 /**
@@ -24,9 +21,11 @@ import graft.core.SkylineCore.Frontier
  * buffers at the final stage; only skyline buffers ever cross the wire,
  * serialized as a flat double payload.
  *
- * With a `cell` key (the partitioning hints), the buffer holds one
- * frontier per cell ([[SkylineAggExpr.Cells]]), buffers merge cell by
- * cell, and `eval` combines the cells with [[SkylineCore.mergeCells]].
+ * It serves the grouped skyline (`skylineBy`), the streaming skyline,
+ * SQL `skyline_agg` and `skylineExternal`'s sample frontier, where an
+ * aggregate is what the surrounding plan needs. The batch `skyline`
+ * runs as a parallel verify instead (`SkylineOps`), since this
+ * aggregate's final merge is one task.
  *
  * Output: array<array<double>> of the skyline points, sorted
  * lexicographically for determinism.
@@ -35,91 +34,36 @@ case class SkylineAggExpr(
     dims: Seq[Expression],
     minDir: Array[Boolean],
     maxBuffer: Int = SkylineAggExpr.DefaultMaxBuffer,
-    cell: Option[Expression] = None,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AnyRef] {
+  extends TypedImperativeAggregate[Frontier] {
 
-  override def children: Seq[Expression] = dims ++ cell
-  // an unkeyed aggregate prints as it did before the key existed
-  override protected def stringArgs: Iterator[Any] = super.stringArgs.filter(_ != None)
+  override def children: Seq[Expression] = dims
 
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(ArrayType(DoubleType, false), false)
 
-  override def createAggregationBuffer(): AnyRef =
-    if (cell.isEmpty) new Frontier(minDir) else new SkylineAggExpr.Cells(minDir)
+  override def createAggregationBuffer(): Frontier = new Frontier(minDir)
 
-  /** The one genuine 100 TB risk of this aggregate (SURVEY §7): on high-d
-    * or anti-correlated data the skyline itself — and therefore every
-    * buffer — can approach the input size, and an executor dies with an
-    * opaque OOM mid-shuffle. A bounded buffer turns that into an
-    * immediate, diagnosable failure with remedies attached. The count
-    * covers the points of every cell. */
-  private def checkCap(points: Int): Unit =
-    if (points > maxBuffer) throw SkylineAggExpr.capTrip("skyline", maxBuffer,
-      "the Pareto frontier of this data is too large to aggregate safely — at high " +
-        "dimensionality or on anti-correlated data the skyline approaches the input size. " +
-        "Raise the cap if the result genuinely fits in executor memory, reduce dimensions, " +
-        "or pre-filter; a result this size is rarely a useful frontier.")
+  private def checkCap(f: Frontier): Frontier =
+    if (f.size > maxBuffer) throw SkylineAggExpr.skylineCapTrip(maxBuffer) else f
 
-  /** Inserts the row's point into `f`; how much `f` grew. */
-  private def insertRow(f: Frontier, input: InternalRow): Int = {
-    if (!SkylineAggExpr.stageRow(dims, f, input)) return 0
-    val before = f.size
-    if (f.insertStaged()) f.size - before else 0
-  }
+  override def update(f: Frontier, input: InternalRow): Frontier =
+    if (SkylineAggExpr.stageRow(dims, f, input) && f.insertStaged()) checkCap(f) else f
 
-  override def update(buf: AnyRef, input: InternalRow): AnyRef = {
-    buf match {
-      case f: Frontier => if (insertRow(f, input) > 0) checkCap(f.size)
-      case cs: SkylineAggExpr.Cells =>
-        val grown = insertRow(cs.of(cell.get.eval(input)), input)
-        if (grown > 0) { cs.total += grown; checkCap(cs.total) }
-    }
-    buf
-  }
+  override def merge(a: Frontier, b: Frontier): Frontier = checkCap(a.merge(b))
 
-  override def merge(a: AnyRef, b: AnyRef): AnyRef = (a, b) match {
-    case (x: Frontier, y: Frontier) =>
-      val m = x.merge(y)
-      checkCap(m.size)
-      m
-    case (x: SkylineAggExpr.Cells, y: SkylineAggExpr.Cells) =>
-      x.absorb(y)
-      checkCap(x.total)
-      x
-  }
-
-  override def eval(buf: AnyRef): Any = {
-    val sky = buf match {
-      case f: Frontier => f
-      case cs: SkylineAggExpr.Cells => SkylineCore.mergeCells(minDir, cs.frontiers.values)
-    }
-    val sorted = sky.points.sorted(SkylineAggExpr.lexOrder)
+  override def eval(f: Frontier): Any = {
+    val sorted = f.points.sorted(SkylineAggExpr.lexOrder)
     new GenericArrayData(sorted.map(p => new GenericArrayData(p): ArrayData).toArray)
   }
 
-  override def serialize(buf: AnyRef): Array[Byte] = buf match {
-    case f: Frontier => SkylineAggExpr.writePoints(f.flat, f.size, f.d)
-    case cs: SkylineAggExpr.Cells => cs.bytes
-  }
+  override def serialize(f: Frontier): Array[Byte] = SkylineAggExpr.writePoints(f.flat, f.size, f.d)
 
-  override def deserialize(bytes: Array[Byte]): AnyRef = {
-    val bb = ByteBuffer.wrap(bytes)
-    if (cell.isEmpty) {
-      val buf = new Frontier(minDir)
-      SkylineAggExpr.readPoints(bb)(buf.add)
-      buf
-    } else {
-      val cs = new SkylineAggExpr.Cells(minDir)
-      for (_ <- 0 until bb.getInt()) {
-        val f = cs.of(bb.getLong())
-        SkylineAggExpr.readPoints(bb)(f.add)
-        cs.total += f.size
-      }
-      cs
-    }
+  override def deserialize(bytes: Array[Byte]): Frontier = {
+    val buf = new Frontier(minDir)
+    SkylineAggExpr.readPoints(ByteBuffer.wrap(bytes))(buf.add)
+    buf
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SkylineAggExpr =
@@ -127,9 +71,7 @@ case class SkylineAggExpr(
   override def withNewInputAggBufferOffset(newOffset: Int): SkylineAggExpr =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): SkylineAggExpr =
-    if (cell.isEmpty) copy(dims = newChildren)
-    else copy(dims = newChildren.init, cell = Some(newChildren.last))
+      newChildren: IndexedSeq[Expression]): SkylineAggExpr = copy(dims = newChildren)
 
   override def prettyName: String = "skyline"
 }
@@ -152,6 +94,18 @@ object SkylineAggExpr {
   private[operators] def capTrip(what: String, maxBuffer: Int, why: String): IllegalStateException =
     new IllegalStateException(
       s"$what buffer exceeded $maxBuffer points (spark.graft.skyline.maxBufferPoints): $why")
+
+  /** The one genuine 100 TB risk of the skyline (SURVEY §7): on high-d or
+    * anti-correlated data the skyline itself — and therefore every
+    * buffer — can approach the input size, and an executor dies with an
+    * opaque OOM mid-shuffle. A bounded buffer turns that into an
+    * immediate, diagnosable failure with remedies attached. */
+  private[operators] def skylineCapTrip(maxBuffer: Int): IllegalStateException =
+    capTrip("skyline", maxBuffer,
+      "the Pareto frontier of this data is too large to aggregate safely — at high " +
+        "dimensionality or on anti-correlated data the skyline approaches the input size. " +
+        "Raise the cap if the result genuinely fits in executor memory, reduce dimensions, " +
+        "or pre-filter; a result this size is rarely a useful frontier.")
 
   /** Stages the row's point into `f`, the input step of both
     * aggregates; false if a coordinate is null (the reference drops rows
@@ -179,59 +133,14 @@ object SkylineAggExpr {
     cmp
   }
 
-  /** The keyed buffer: one frontier per cell key, and the running total
-    * of their points (the cap's count). */
-  private[operators] final class Cells(minDir: Array[Boolean]) {
-    val frontiers = new mutable.LongMap[Frontier]
-    var total = 0
-
-    /** The frontier of the cell keyed `key` (a Long), created empty. */
-    def of(key: Any): Frontier =
-      frontiers.getOrElseUpdate(key.asInstanceOf[Long], new Frontier(minDir))
-
-    /** Merges `that`'s cells into these, cell by cell. */
-    def absorb(that: Cells): Unit = that.frontiers.foreachEntry { (key, f) =>
-      frontiers.get(key) match {
-        case Some(mine) =>
-          val before = mine.size
-          val merged = mine.merge(f)
-          total += merged.size - before
-          frontiers(key) = merged
-        case None =>
-          frontiers(key) = f
-          total += f.size
-      }
-    }
-
-    /** A cell count, then per cell in key order its key and its points
-      * as [[writePoints]] lays them out. */
-    def bytes: Array[Byte] = {
-      val keys = frontiers.keys.toArray.sorted
-      val bb = ByteBuffer.allocate(4 + keys.map(k => 8 + pointBytes(frontiers(k).size, minDir.length)).sum)
-      bb.putInt(keys.length)
-      for (k <- keys) {
-        val f = frontiers(k)
-        putPoints(bb.putLong(k), f.flat, f.size, f.d)
-      }
-      bb.array()
-    }
-  }
-
   /** The buffer codec of both aggregates: an (n, d) int header, then n
     * points of d doubles, read from `flat` in order. Only points cross
     * the wire. */
   private[operators] def writePoints(flat: Array[Double], n: Int, d: Int): Array[Byte] = {
-    val bb = ByteBuffer.allocate(pointBytes(n, d))
-    putPoints(bb, flat, n, d)
-    bb.array()
-  }
-
-  private def pointBytes(n: Int, d: Int): Int = 8 + n * d * 8
-
-  private def putPoints(bb: ByteBuffer, flat: Array[Double], n: Int, d: Int): Unit = {
+    val bb = ByteBuffer.allocate(8 + n * d * 8)
     bb.putInt(n).putInt(d)
     bb.asDoubleBuffer().put(flat, 0, n * d)
-    bb.position(bb.position() + n * d * 8)
+    bb.array()
   }
 
   /** Decodes one [[writePoints]] payload from `bb`'s position, handing

@@ -1,31 +1,37 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, Literal}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Direction, SkylineCore, SkylineQuery}
+import graft.core.SkylineCore.Frontier
 import org.apache.spark.sql.graft.ColumnShim
 
 /**
  * Partitioning hints mirroring the reference's three schemes
  * (`/root/reference/src/utils/functions.py:57-300`). The default
- * ([[NoHint]]) needs none of them: Spark's partial aggregation already
- * computes per-task local skylines on whatever partitioning the scan
- * produced. A hint keys those local skylines by spatial cell (one
- * frontier per cell in the aggregate's buffer) — it pays off when
- * per-task local skylines would be large (high d) and a spatial split
- * shrinks them (esp. [[AngleHint]]).
+ * ([[NoHint]]) needs none of them: the batch skyline's local stage keeps
+ * one local skyline per input partition, on whatever partitioning the
+ * scan produced. A hint splits each partition's local skyline by spatial
+ * cell (one frontier per partition and cell, each checked by the verify
+ * stage; see `SkylineOps.skyline`) — it pays off when per-partition
+ * local skylines would be large (high d) and a spatial split lets each
+ * cell's frontier drop points early (esp. [[AngleHint]]).
  */
 sealed trait PartitionHint
 case object NoHint extends PartitionHint
 /** MR_DIM: 1-D range partition on the first skyline dimension into `p` buckets. */
 final case class DimHint(p: Int) extends PartitionHint
-/** MR_GRID: base-`b` grid cells; cells a found point beats are skipped. */
+/** MR_GRID: base-`b` grid cells over the per-dimension bounds. */
 final case class GridHint(b: Int) extends PartitionHint
 /** MR_ANGLE: angular cells, `p` buckets per angle. MIN-only, first orthant. */
 final case class AngleHint(p: Int) extends PartitionHint
@@ -133,23 +139,13 @@ object SkylineOps {
     case other => throw new IllegalArgumentException(s"unsupported skyline dimension type: $other")
   }
 
-  /** Column form of [[SkylineCore.dimKey]] — same formula. */
-  private def dimKeyExpr(p: Int, lo: Double, hi: Double, x: Column): Column = {
-    val range = (hi - lo) / p
-    // Clamp in DOUBLE before the Int cast (matches SkylineCore.dimKey's
-    // clamp-before-truncate): with caller-supplied bounds that under-cover
-    // the data, floor((x-lo)/range) can sit far outside Int range and the
-    // bare cast would throw under ANSI mode (or wrap with ANSI off).
-    when(x >= lit(hi), lit(p - 1))
-      .otherwise(least(greatest(floor((x - lit(lo)) / lit(range)), lit(0.0)), lit((p - 1).toDouble))
-        .cast(IntegerType))
-  }
-
   /** Per-dimension (lo, hi) bounds of the `_d{i}` columns of `pts` for
     * the Dim and Grid hints, in one job with no Exchange: a min/max per
     * partition, folded on the driver. NaN is ignored (Spark's `max` would
-    * return it). A dimension with no value gets (0, 1), any bounds being
-    * right for it; an all-equal one gets (lo, lo + 1), one bucket. */
+    * return it). An all-equal dimension gets (lo, lo + 1), one bucket; a
+    * dimension with no value, or whose values are all one infinity (or
+    * too large to step by 1), gets (0, 1). Any bounds with hi > lo are
+    * right: cells only group points. */
   private def dimBounds(pts: DataFrame, d: Int): Seq[(Double, Double)] = {
     val (lo, hi) = pts.select((0 until d).map(i => col(s"_d$i")): _*).queryExecution.toRdd
       .aggregate((Array.fill(d)(Double.PositiveInfinity), Array.fill(d)(Double.NegativeInfinity)))(
@@ -166,7 +162,7 @@ object SkylineOps {
         { case ((l1, h1), (l2, h2)) =>
           (l1.zip(l2).map(t => t._1 min t._2), h1.zip(h2).map(t => t._1 max t._2)) })
     (0 until d).map(i =>
-      if (lo(i) > hi(i)) (0.0, 1.0) else if (hi(i) > lo(i)) (lo(i), hi(i)) else (lo(i), lo(i) + 1.0))
+      if (hi(i) > lo(i)) (lo(i), hi(i)) else if (lo(i) + 1.0 > lo(i)) (lo(i), lo(i) + 1.0) else (0.0, 1.0))
   }
 
   /** A seeded uniform sample of min(n, m) of the n points of `flat`
@@ -203,6 +199,72 @@ object SkylineOps {
     out
   }
 
+  /** The two stages of the batch skyline (see `skyline`) over the
+    * `_d{i}` columns of `pts`, in their own directions: the skyline's
+    * points, MIN-oriented, as `_d{i}`. `cellOf` keys a point's cell
+    * (null: one cell per partition). */
+  private def verified(pts: DataFrame, minDir: Array[Boolean],
+      cellOf: Array[Double] => Long, cap: Int): DataFrame = {
+    val spark = pts.sparkSession
+    import spark.implicits._
+    val d = minDir.length
+    val keys = sliceKeys(spark.sparkContext.defaultParallelism)
+    val p = keys.length
+    // the columns hold no null (see `prepared`); saying so lets the
+    // encoder read each row's array with one primitive copy, not boxing
+    val coords = (0 until d).map(i => ColumnShim.column(KnownNotNull(ColumnShim.expression(col(s"_d$i")))))
+    val local = pts.select(array(coords: _*).as("_pt")).as[Array[Double]]
+      .mapPartitions { rows =>
+        val part = TaskContext.getPartitionId()
+        val cells = new mutable.LongMap[Frontier]
+        var total = 0
+        rows.foreach { x =>
+          val f = cells.getOrElseUpdate(if (cellOf == null) 0L else cellOf(x), new Frontier(minDir))
+          val before = f.size
+          f.stage(x, 0)
+          if (f.insertStaged()) {
+            total += f.size - before
+            if (total > cap) throw SkylineAggExpr.skylineCapTrip(cap)
+          }
+        }
+        cells.iterator.flatMap { case (cell, f) =>
+          val o = f.oriented
+          keys.iterator.map(k => (k, part, cell, o))
+        }
+      }
+    val sky = local.repartition(p, col("_1")).mapPartitions { it =>
+      val recs = it.toArray
+      // every key received carries all origins; the task runs its slices
+      val origins = recs.filter(_._1 == recs.head._1).sortBy(r => (r._2, r._3))
+      val sizes = origins.map(_._4.length / d)
+      val n = sizes.sum
+      if (n > cap) throw SkylineAggExpr.skylineCapTrip(cap)
+      val u = SkylineCore.ScoreSorted(d, origins.flatMap(_._4),
+        sizes.indices.toArray.flatMap(o => Array.fill(sizes(o))(o)))
+      val rank = (j: Int) => (n * math.sqrt(j.toDouble / p)).toInt
+      recs.iterator.map(r => keys.indexOf(r._1)).distinct
+        .flatMap(j => (rank(j) until rank(j + 1)).iterator.filter(u.survives))
+        .map(i => u.coords.slice(i * d, i * d + d))
+    }
+    sky.select((0 until d).map(i => col("value")(i).as(s"_d$i")): _*)
+  }
+
+  /** For each slice j < p, an Int key that Spark's hash partitioning
+    * into p partitions sends to partition j, found by evaluating its own
+    * partition-id expression: one slice per verify task. A repartition
+    * to a set count is one AQE never coalesces. */
+  private def sliceKeys(p: Int): Array[Int] = {
+    val keys = Array.fill(p)(-1)
+    var v = 0
+    var found = 0
+    while (found < p) {
+      val j = HashPartitioning(Seq(Literal(v)), p).partitionIdExpression.eval().asInstanceOf[Int]
+      if (keys(j) < 0) { keys(j) = v; found += 1 }
+      v += 1
+    }
+    keys
+  }
+
   /** Internal column aliases of the keyed aggregates; `_d{i}` (the
     * projected dimensions) is reserved as a prefix. */
   private val ReservedAliases = Set("_sky", "_pt", "_band", "_e")
@@ -220,7 +282,7 @@ object SkylineOps {
      */
     def skylineBy(keyCols: Seq[String], dims: Seq[(String, Direction)]): DataFrame = {
       requireKeys("skylineBy", keyCols, dims)
-      skylineKeyed(keyCols, dims, NoHint, None)
+      skylineKeyed(keyCols, dims)
     }
 
     /**
@@ -612,77 +674,84 @@ object SkylineOps {
     }
 
     /**
-     * Compute the skyline (Pareto frontier) of `df` over `dims`. The SFS
-     * presort is automatic at d >= 5 (see [[sfsSorted]]).
+     * Compute the skyline (Pareto frontier) of `df` over `dims`, lazily,
+     * as two stages with no single-task merge (the reference's local and
+     * global skylines, batch_job.py:96-208):
+     *
+     *  1. LOCAL: one pass over each input partition (after the SFS
+     *     presort at d >= 5, see [[sfsSorted]]) keeps one
+     *     [[SkylineCore.Frontier]] per partition, or per partition and
+     *     cell under a hint. Each such frontier is an ORIGIN. Every
+     *     origin's frontier goes to each of P verify tasks, P being the
+     *     default parallelism, through a hash repartition into exactly P
+     *     partitions with one key per task ([[sliceKeys]]), which AQE
+     *     cannot coalesce.
+     *  2. VERIFY: each task builds U, the union of all origins' frontiers
+     *     in score order, and keeps the members of its slice of U that
+     *     no member dominates and no member of a lower origin equals
+     *     ([[SkylineCore.ScoreSorted.survives]]). A member's scan grows
+     *     with its rank, so slice j spans ranks |U|·sqrt(j/P) until
+     *     |U|·sqrt((j+1)/P): equal triangular work per task.
+     *
+     * Exact: a point outside the skyline is dominated by a skyline point,
+     * which is (or equals) a member of its own origin's frontier, hence
+     * of U; a skyline point is dominated by nothing. The equality rule
+     * keeps one copy of a point found by several origins. The buffer cap
+     * (`spark.graft.skyline.maxBufferPoints`) bounds a partition's
+     * frontiers together and U, and trips loudly past either.
      *
      * @param dims   (column, direction) per skyline dimension
-     * @param hint   optional pre-partitioning scheme (see [[PartitionHint]])
+     * @param hint   optional cell scheme for the local stage (see [[PartitionHint]])
      * @param bounds per-dim (lo, hi) value bounds for Dim/Grid hints, in
      *               `dims` order after [[toDouble]] conversion. When absent
-     *               they are computed with one distributed min/max pass —
-     *               at large scale pass them explicitly (the reference
-     *               hard-codes `[0, 10^9]`, configurations.py:17-18).
+     *               they are computed with one distributed min/max pass,
+     *               which runs when this method is called — at large scale
+     *               pass them explicitly (the reference hard-codes
+     *               `[0, 10^9]`, configurations.py:17-18).
      */
     def skyline(
         dims: Seq[(String, Direction)],
         hint: PartitionHint = NoHint,
         bounds: Option[Seq[(Double, Double)]] = None): DataFrame = {
-      hint match {
-        case AngleHint(_) =>
-          require(dims.forall(_._2.isMin),
-            "MR_ANGLE supports MIN-only queries (reference restriction, functions.py:327-329)")
-        case _ =>
-      }
-      skylineKeyed(Nil, dims, hint, bounds)
-    }
-
-    /** The skyline per `keys` tuple; with no keys, the one global
-      * skyline (`Dataset.agg` is `groupBy().agg`, so the plan is the
-      * same). A hint applies to the global skyline only: it becomes the
-      * aggregate's cell key, so a hinted skyline is one aggregate whose
-      * buffer holds a frontier per cell (see [[SkylineAggExpr]]) — the
-      * reference's per-key local skylines and global merge
-      * (batch_job.py:96-188) behind one Exchange. */
-    private def skylineKeyed(keys: Seq[String], dims: Seq[(String, Direction)],
-        hint: PartitionHint, bounds: Option[Seq[(Double, Double)]]): DataFrame = {
       val minDir = dims.map(_._2.isMin).toArray
-      val input = prepared(keys, dims, oriented = false)
-      val dim = (i: Int) => col(s"_d$i")
+      val input = prepared(Nil, dims, oriented = false)
       val d = dims.length
       lazy val bs = bounds.getOrElse(dimBounds(input, d))
-
-      val cell = hint match {
-        case NoHint => None
-
-        case DimHint(p) => Some(dimKeyExpr(p, bs.head._1, bs.head._2, dim(0)))
-
+      def requireBounds(used: Int): Unit =
+        require(bs.length >= used && bs.take(used).forall(b => b._2 > b._1),
+          s"need hi > lo bounds for the first $used dimension(s), got $bs")
+      val cellOf: Array[Double] => Long = hint match {
+        case NoHint => null
+        case DimHint(p) =>
+          requireBounds(1)
+          val (lo, hi) = bs.head
+          x => SkylineCore.dimKey(p, lo, hi, x(0))
         case GridHint(b) =>
           require(BigInt(b).pow(d) <= BigInt(Long.MaxValue),
             s"grid key space b^d = $b^$d overflows Long")
-          // Exact Long multipliers (math.pow doubles lose precision past
-          // 2^53). No cell is pruned up front (SkylineCore.mergeCells).
-          val mult = Seq.iterate(1L, d)(_ * b)
-          Some(dims.indices.map(i => lit(mult(i)) * dimKeyExpr(b, bs(i)._1, bs(i)._2, dim(i)))
-            .reduce(_ + _))
-
+          requireBounds(d)
+          val bb = bs.toArray
+          x => SkylineCore.gridKey(b, SkylineCore.gridDigits(b, bb, x))
         case AngleHint(p) =>
+          require(dims.forall(_._2.isMin),
+            "MR_ANGLE supports MIN-only queries (reference restriction, functions.py:327-329)")
           require(d < 2 || BigInt(p).pow(d - 1) <= BigInt(Long.MaxValue),
             s"angle key space p^(d-1) = $p^${d - 1} overflows Long")
-          // d=1 has no angular coordinate: a single cell.
-          if (d == 1) Some(lit(0L)) else {
-            val range = (math.Pi / 2) / p
-            val mult = Seq.iterate(1L, d - 1)(_ * p)
-            Some((0 until d - 1).map { i =>
-              val tail = sqrt((i + 1 until d).map(j => dim(j) * dim(j)).reduce(_ + _))
-              val k = when(dim(i) === lit(0.0), lit(p - 1))
-                .otherwise(least(greatest(floor(atan(tail / dim(i)) / lit(range)).cast(IntegerType), lit(0)), lit(p - 1)))
-              lit(mult(i)) * k
-            }.reduce(_ + _))
-          }
+          x => SkylineCore.angleKey(p, x)
       }
+      restored(verified(sfsSorted(input, minDir), minDir, cellOf,
+        SkylineAggExpr.configuredCap(df.sparkSession)), Nil, dims, oriented = true, i => col(s"_d$i"))
+    }
 
-      val skyDf = sfsSorted(input, minDir).groupBy(keys.map(col): _*)
-        .agg(skyAgg(dims.indices.map(dim), minDir, cell).as("_sky"))
+    /** The skyline per `keys` tuple as one native aggregate, map-side
+      * partial local skylines merged per key; with no keys, the one
+      * global skyline (`Dataset.agg` is `groupBy().agg`), the form a
+      * streaming DataFrame can run. */
+    private[graft] def skylineKeyed(keys: Seq[String], dims: Seq[(String, Direction)]): DataFrame = {
+      val minDir = dims.map(_._2.isMin).toArray
+      val skyDf = sfsSorted(prepared(keys, dims, oriented = false), minDir)
+        .groupBy(keys.map(col): _*)
+        .agg(skyAgg(dims.indices.map(i => col(s"_d$i")), minDir).as("_sky"))
       restored(skyDf.select(keys.map(col) :+ explode(col("_sky")).as("_pt"): _*),
         keys, dims, oriented = false, i => element_at(col("_pt"), i + 1))
     }
@@ -705,7 +774,8 @@ object SkylineOps {
 
     /** The dominance-count core of [[kSkybandJoin]] and [[topKDominating]]:
       * three passes, one Spark job each, over the distinct oriented points
-      * cached as one flat block per partition. (1) Each partition's row
+      * cached as one flat block per partition, in as many partitions as
+      * the default parallelism. (1) Each partition's row
       * count and seeded sample, merged into a uniform sample on the
       * driver ([[mergedSample]]). (2) The prune against the score-sorted
       * sample; at most `maxCandidates` survivors reach the driver
@@ -722,10 +792,18 @@ object SkylineOps {
       val spark = df.sparkSession
       val sc = spark.sparkContext
       val d = dims.length
-      val blocks = prepared(Nil, dims, oriented = true).distinct().queryExecution.toRdd
+      // -0.0 folded to +0.0 first, so equal points hash alike. Hashing
+      // into a set count of partitions pins the passes' task count: AQE
+      // would coalesce the distinct's own Exchange to one task when its
+      // output is small in bytes, and the distinct's aggregate needs no
+      // Exchange after this one.
+      val folded = (0 until d).map(i => (col(s"_d$i") + 0.0).as(s"_d$i"))
+      val blocks = prepared(Nil, dims, oriented = true).select(folded: _*)
+        .repartition(sc.defaultParallelism, folded.indices.map(i => col(s"_d$i")): _*)
+        .distinct().queryExecution.toRdd
         .mapPartitions { rows =>
           val b = Array.newBuilder[Double]
-          rows.foreach { r => var i = 0; while (i < d) { b += r.getDouble(i) + 0.0; i += 1 } }
+          rows.foreach { r => var i = 0; while (i < d) { b += r.getDouble(i); i += 1 } }
           Iterator.single(b.result())
         }.persist(StorageLevel.MEMORY_AND_DISK)
       try {
@@ -830,13 +908,10 @@ object SkylineOps {
         .reduce(_ + _).asc)
 
     /** Skyline aggregate over the given dimension columns (native
-      * TypedImperativeAggregate; see [[SkylineAggExpr]]), with one
-      * frontier per value of `cell` when given. */
-    private def skyAgg(cols: Seq[Column], minDir: Array[Boolean],
-        cell: Option[Column] = None): Column = ColumnShim.column(
+      * TypedImperativeAggregate; see [[SkylineAggExpr]]). */
+    private def skyAgg(cols: Seq[Column], minDir: Array[Boolean]): Column = ColumnShim.column(
       SkylineAggExpr(cols.map(ColumnShim.expression), minDir,
-        SkylineAggExpr.configuredCap(df.sparkSession),
-        cell.map(k => ColumnShim.expression(k.cast(LongType)))).toAggregateExpression())
+        SkylineAggExpr.configuredCap(df.sparkSession)).toAggregateExpression())
 
     private def requireKeys(op: String, keyCols: Seq[String],
         dims: Seq[(String, Direction)]): Unit = {

@@ -101,14 +101,17 @@ object SkylineStreaming {
       .outputMode(outputMode)
       .trigger(trigger)
 
-  /** Streaming skyline: the same single-aggregate plan as the batch path
-    * — Complete output mode is required by the global aggregate.
+  /** Streaming skyline: one global skyline aggregate
+    * ([[graft.operators.SkylineAggExpr]]) over the stream — Complete
+    * output mode is required by the global aggregate. This is not the
+    * batch path: the batch `skyline`'s local stage and parallel verify
+    * keep no state across micro-batches, while the aggregate's buffer is
+    * the running skyline that Structured Streaming keeps as state.
+    * Results are the same sets.
     *
-    * No hint/bounds parameters on purpose: a hint adds nothing on a
-    * stream — partial aggregation already computes per-task local
-    * skylines each micro-batch, which is all a hinted skyline's cells
-    * add — and the Dim/Grid bounds pre-pass is a batch RDD job, which a
-    * streaming DataFrame cannot run. */
+    * No hint/bounds parameters on purpose: a hint only splits the batch
+    * local stage's frontiers by cell, and the Dim/Grid bounds pre-pass is
+    * a batch RDD job, which a streaming DataFrame cannot run. */
   def skylineStream(
       stream: DataFrame,
       dims: Seq[(String, Direction)],
@@ -119,7 +122,7 @@ object SkylineStreaming {
     // dedup state by design (the skyline agg itself collapses duplicates,
     // so this only trims merge input, exactly the reference's rationale).
     val input = if (dedup) stream.dropDuplicates(dims.map(_._1)) else stream
-    input.skyline(dims)
+    input.skylineKeyed(Nil, dims)
   }
 
   /**

@@ -19,18 +19,27 @@ import graft.operators.SkylineOps._
  * seconds+size, or `cap_trip` where the REQUIRED behavior on
  * frontier-heavy data is the loud buffer-cap failure (never an OOM).
  *
- * Usage: runMain graft.tools.SkyBenchJson [outPath]
+ * Runs at `local[$SPARK_GRAFT_CPUS]` (all cores when unset), and each
+ * generated input has 32 range partitions whatever the core count.
+ *
+ * Usage: runMain graft.tools.SkyBenchJson [outPath] [rowRegex]
+ *
+ * With `rowRegex`, only rows whose label matches it somewhere run. A
+ * label reads `kind/name/n<n>/d<d>` plus `/hint=<h>` or `/k=<k>`, e.g.
+ * `skyline/anti/n100000/d10` or `skyline/uniform/n1000000/d7/hint=angle2`.
  */
 object SkyBenchJson {
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("SKYBENCH_r8.json")
+    val selected = args.lift(1).map(_.r)
+    val master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")}]"
     // environment fingerprint bracketing the whole grid (round 15,
     // VERDICT r14 items 1+4): spin catches frequency throttling,
     // eff_cores catches the multi-core contention spin is blind to;
     // check_addendum.py's envgate rule enforces a floor on eff_cores
     // for any SKYBENCH artifact the addendum quotes.
     val envStart = graft.EnvProbe.snapshotJson("start")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkSession.builder().master(master)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -39,14 +48,14 @@ object SkyBenchJson {
     def uniform(n: Long, d: Int): DataFrame = {
       val cols = (1 to d).map(i =>
         floor(rand(seed = i) * 1e9).cast("long").as(s"x$i"))
-      spark.range(n).select(cols: _*)
+      spark.range(0, n, 1, 32).select(cols: _*)
     }
     // positively correlated: one latent score per row, dims = score +
     // small noise — everything dominates/is dominated along the diagonal,
     // so the frontier is tiny (the benign high-d shape)
     def correlated(n: Long, d: Int): DataFrame = {
       val base = (rand(seed = 999) * 1e9).as("_b")
-      val withBase = spark.range(n).select(base)
+      val withBase = spark.range(0, n, 1, 32).select(base)
       withBase.select((1 to d).map(i =>
         floor(col("_b") * 0.9 + rand(seed = i) * 1e8).cast("long").as(s"x$i")): _*)
     }
@@ -55,7 +64,7 @@ object SkyBenchJson {
     def anti(n: Long, d: Int): DataFrame = {
       val raw = (1 to d).map(i => rand(seed = 100 + i).as(s"u$i"))
       val tot = (1 to d).map(i => col(s"u$i")).reduce(_ + _)
-      spark.range(n).select(raw: _*)
+      spark.range(0, n, 1, 32).select(raw: _*)
         .select((1 to d).map(i => (col(s"u$i") / tot * 1e9).as(s"x$i")): _*)
     }
     def dims(d: Int): Seq[(String, Direction)] =
@@ -66,6 +75,9 @@ object SkyBenchJson {
     var entriesPassNote = ""
     def record(name: String, n: Long, d: Int, kind: String, extra: String,
         cap: Option[Int])(run: => Long): Unit = {
+      val label = s"$kind/$name/n$n/d$d" +
+        extra.replaceAll("[\"{}]", "").replace(",", "/").replace(":", "=")
+      if (selected.exists(_.findFirstIn(label).isEmpty)) return
       cap.foreach(c => spark.conf.set("spark.graft.skyline.maxBufferPoints", c.toString))
       val t0 = System.nanoTime()
       val res = try Right(run) catch {
@@ -89,13 +101,17 @@ object SkyBenchJson {
     }
 
     // 1. BASELINE.md uniform grid (reference: 12-core YARN cluster +
-    // Kafka relay; here: one local[32] JVM on parquet-free generated data)
+    // Kafka relay; here: one local JVM on parquet-free generated data)
     for ((n, d) <- Seq((100000L, 2), (100000L, 5), (100000L, 7),
         (1000000L, 2), (1000000L, 5), (1000000L, 7),
         (10000000L, 2), (10000000L, 3))) {
       val df = uniform(n, d)
       record("uniform", n, d, "skyline", "", None)(df.skyline(dims(d)).count())
     }
+    // d=7 n=1e6 under MR_ANGLE: the hinted path's cost next to the
+    // NoHint row of the same data
+    record("uniform", 1000000L, 7, "skyline", ""","hint":"angle2"""", None)(
+      uniform(1000000L, 7).skyline(dims(7), hint = AngleHint(2)).count())
     // d=7 n=1e7: the reference's 47-minute MR_ANGLE point
     record("uniform", 10000000L, 7, "skyline", ""","hint":"angle2"""", None)(
       uniform(10000000L, 7).skyline(dims(7), hint = AngleHint(2)).count())
@@ -198,7 +214,7 @@ object SkyBenchJson {
 
     val envEnd = graft.EnvProbe.snapshotJson("end")
     val json =
-      s"""{"artifact":"skybench","master":"local[32]","baseline":"BASELINE.md (12-core YARN cluster, Spark 3.3 + Kafka relay)",
+      s"""{"artifact":"skybench","master":"$master","baseline":"BASELINE.md (12-core YARN cluster, Spark 3.3 + Kafka relay)",
          |"env":{$envStart,$envEnd,${graft.EnvProbe.staticJson()}},
          |"entries":[
          |${entries.mkString(",\n")}

@@ -1014,6 +1014,25 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("labelComponents: the distributed path equals the driver union-find on long paths") {
+    import spark.implicits._
+    // a path 0-1-...-L needs L propagation rounds plus one to see the
+    // fixpoint; L = 19 is the deepest the default 20 rounds allow. Each
+    // round's plan must stay constant-size for these to finish.
+    for (len <- Seq(8, 19)) {
+      val ids = (0L to len).toDF("id")
+      val pairs = (0L until len).map(i => (i + 1, i)).toDF("id1", "id2")
+      def labels(driverMaxEdges: Int) = {
+        val out = Dedup.labelComponents(ids, "id", pairs, driverMaxEdges = driverMaxEdges)
+        try out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        finally out.unpersist()
+      }
+      val viaDriver = labels(1000000)
+      assert(viaDriver == (0L to len).map(_ -> 0L).toSet)
+      assert(labels(0) == viaDriver, s"path of length $len")
+    }
+  }
+
   test("exactBest keeps the highest-quality duplicate, ties to the lower id") {
     import spark.implicits._
     val df = Seq(

@@ -74,7 +74,9 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("skyline and top-k aggregates keep the partial/final split (map-side local results)") {
-    val sky = plan("sky_li_2d")
+    // the grouped skyline; the global batch skyline is a verify stage
+    // over local frontiers, with no aggregate
+    val sky = plan("sky_by_segment")
     assert(sky.contains("partial_skyline"),
       s"skyline must aggregate map-side first:\n$sky")
     val topk = plan("ann_topk")

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Direction.{Max, Min}
@@ -66,9 +67,8 @@ class SkylineSparkSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{floor, rand}
     val dims = Seq("x1" -> Min, "x2" -> Min)
     // GridHint(1000) over 1e5 uniform-integer 2-D points in [0, 1000):
-    // nearly every distinct point is its own cell (~95k cells), all in one
-    // aggregate's buffers; the merge's corner skip keeps the fine grid
-    // linear in its cells
+    // nearly every distinct point is its own cell (~95k cells), so the
+    // verify stage's union U holds nearly every distinct point
     val fine = spark.range(100000).select(
       floor(rand(5) * 1000).cast("double").as("x1"),
       floor(rand(6) * 1000).cast("double").as("x2")).cache()
@@ -96,6 +96,27 @@ class SkylineSparkSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.skyline.maxBufferPoints")
     // default cap: same query sails through (it never fires on real frontiers)
     assert(df.skyline(dims).count() == 500)
+  }
+
+  test("the verify stage trips the buffer cap when the union of local frontiers exceeds it") {
+    // a 2-D anti-chain of 320 points over 8 partitions: each local
+    // frontier holds 40 points, under the cap of 100, but their union
+    // U holds 320
+    val rows = (0 until 320).map(i => Row(i.toDouble, (320 - i).toDouble))
+    val schema = StructType(Seq(StructField("x1", DoubleType, false), StructField("x2", DoubleType, false)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    val dims = Seq("x1" -> Min, "x2" -> Min)
+    spark.conf.set("spark.graft.skyline.maxBufferPoints", "100")
+    try {
+      val e = intercept[Exception] { df.skyline(dims).collect() }
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(msgs.contains("skyline buffer exceeded 100 points (spark.graft.skyline.maxBufferPoints)"), msgs)
+      // each partition's 40 points are its local frontier, within the
+      // cap: the trip is the verify stage's
+      assert(df.rdd.glom().map(_.length).collect().forall(_ == 40))
+    } finally spark.conf.unset("spark.graft.skyline.maxBufferPoints")
+    assert(df.skyline(dims).count() == 320)
   }
 
   test("under-covering explicit bounds stay correct and don't overflow the key cast") {
