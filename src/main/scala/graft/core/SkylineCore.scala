@@ -258,34 +258,8 @@ object SkylineCore {
     }
 
     /** How member `r` relates to the point at `p(po until po + d)` with score `sp`. */
-    private def relation(r: Int, p: Array[Double], po: Int, sp: Double): Int = {
-      val c = coords
-      val qo = r * d
-      val sq = scores(r)
-      // Score gate. If q dominates p, then q(i) <= p(i) in every oriented
-      // dimension, and rounded addition is monotone in each operand, so
-      // every partial sum of q is <= the matching one of p: sq <= sp.
-      // Equal points have equal sums. Hence sq < sp rules out p
-      // dominating or equalling q, sq > sp rules out the converse, and
-      // one one-sided test decides. A NaN coordinate, or +Inf meeting
-      // -Inf, makes a sum NaN; NaN compares false both ways and falls
-      // through to the full test, as do tied sums.
-      if (sq < sp) {
-        // No NaN on this path, and q(i) <= p(i) everywhere with sq < sp
-        // makes one dimension strict. The count runs without an early
-        // exit: a fixed-length loop and one rarely-taken branch beat a
-        // data-dependent exit on frontier-heavy data.
-        var k = 0
-        var i = 0
-        while (i < d) { if (c(qo + i) <= p(po + i)) k += 1; i += 1 }
-        if (k == d) Rejects else Keeps
-      } else if (sq > sp) {
-        var k = 0
-        var i = 0
-        while (i < d) { if (p(po + i) <= c(qo + i)) k += 1; i += 1 }
-        if (k == d) Dropped else Keeps
-      } else tie(c, qo, p, po, d)
-    }
+    private def relation(r: Int, p: Array[Double], po: Int, sp: Double): Int =
+      gated(coords, r * d, scores(r), p, po, sp, d)
 
     private def moveMember(from: Int, to: Int): Unit = if (to < from) {
       System.arraycopy(coords, from * d, coords, to * d, d)
@@ -393,23 +367,16 @@ object SkylineCore {
     /** True iff member `i` is in the skyline of the members under
       * [[Frontier]]'s set semantics: no member dominates it, and no member
       * of a lower origin equals it (bitwise, NaN equal to NaN). The scan
-      * ends where [[dominators]]'s does. A member scoring strictly below
-      * `i` can only dominate it, so one count decides, as in the
-      * [[Frontier]] gate; tied and unbounded scores take the full test. */
+      * ends where [[dominators]]'s does; each member is tested through
+      * the [[Frontier]] gate ([[gated]]). */
     def survives(i: Int): Boolean = {
       val po = i * d
       val sp = scores(i)
       val end = if (sp.isNaN || sp == Double.PositiveInfinity) size else firstFrom(sp, inclusive = false)
       var c = 0
       while (c < end) {
-        val qo = c * d
-        if (scores(c) < sp) {
-          var k = 0
-          var j = 0
-          while (j < d) { if (coords(qo + j) <= coords(po + j)) k += 1; j += 1 }
-          if (k == d) return false
-        } else if (c != i) {
-          val rel = tie(coords, qo, coords, po, d)
+        if (c != i) {
+          val rel = gated(coords, c * d, scores(c), coords, po, sp, d)
           if (rel == Rejects || (rel == Equal && origins(c) < origins(i))) return false
         }
         c += 1
@@ -445,23 +412,60 @@ object SkylineCore {
   }
 
   object ScoreSorted {
-    /** The points of `flat` (stride `d`, MIN-oriented, no -0.0), sorted,
-      * with their `origins` when given. */
-    def apply(d: Int, flat: Array[Double], origins: Array[Int] = null): ScoreSorted = {
-      val n = flat.length / d
-      val s = Array.tabulate(n)(r => score(flat, r * d, d))
-      val order = Array.range(0, n).sortBy(s(_))(Ordering.Double.TotalOrdering)
-      val coords = new Array[Double](n * d)
-      var i = 0
-      while (i < n) { System.arraycopy(flat, order(i) * d, coords, i * d, d); i += 1 }
-      new ScoreSorted(d, coords, order.map(s), if (origins == null) null else order.map(origins))
+    /** The points of `flat` (stride `d`, MIN-oriented, no -0.0), sorted. */
+    def apply(d: Int, flat: Array[Double]): ScoreSorted = union(d, Array(flat))
+
+    /** The points of all `parts` (each as in [[apply]], read in place),
+      * sorted, each with the index of its part as its origin. */
+    def union(d: Int, parts: Array[Array[Double]]): ScoreSorted = {
+      // each point's part (high word) and offset in it (low word)
+      val at = parts.indices.toArray.flatMap(o => Array.tabulate(parts(o).length / d)(j => o.toLong << 32 | j * d))
+      val s = at.map(a => score(parts((a >>> 32).toInt), a.toInt, d))
+      val order = at.indices.toArray.sortBy(s(_))(Ordering.Double.TotalOrdering)
+      val coords = new Array[Double](at.length * d)
+      var r = 0
+      while (r < at.length) {
+        val a = at(order(r))
+        System.arraycopy(parts((a >>> 32).toInt), a.toInt, coords, r * d, d)
+        r += 1
+      }
+      new ScoreSorted(d, coords, order.map(s), order.map(i => (at(i) >>> 32).toInt))
     }
   }
 
-  /** How the point at `q(qo until qo + d)` relates to the one at
-    * `p(po until po + d)` as a [[Frontier]] member to a new point, in one
-    * fused pass: strict-better flags both ways, NaN incomparability, and
-    * equality (NaN equal to NaN). The full test behind the score gate. */
+  /** How the point at `q(qo until qo + d)`, with score `sq`, relates to
+    * the one at `p(po until po + d)`, with score `sp`, as a [[Frontier]]
+    * member to a new point.
+    *
+    * Score gate. If q dominates p, then q(i) <= p(i) in every oriented
+    * dimension, and rounded addition is monotone in each operand, so
+    * every partial sum of q is <= the matching one of p: sq <= sp. Equal
+    * points have equal sums. Hence sq < sp rules out p dominating or
+    * equalling q, sq > sp rules out the converse, and one one-sided test
+    * decides. A NaN coordinate, or +Inf meeting -Inf, makes a sum NaN;
+    * NaN compares false both ways and falls through to the full test
+    * ([[tie]]), as do tied sums. */
+  private def gated(q: Array[Double], qo: Int, sq: Double, p: Array[Double], po: Int, sp: Double,
+      d: Int): Int =
+    if (sq < sp) {
+      // No NaN on this path, and q(i) <= p(i) everywhere with sq < sp
+      // makes one dimension strict. The count runs without an early
+      // exit: a fixed-length loop and one rarely-taken branch beat a
+      // data-dependent exit on frontier-heavy data.
+      var k = 0
+      var i = 0
+      while (i < d) { if (q(qo + i) <= p(po + i)) k += 1; i += 1 }
+      if (k == d) Rejects else Keeps
+    } else if (sq > sp) {
+      var k = 0
+      var i = 0
+      while (i < d) { if (p(po + i) <= q(qo + i)) k += 1; i += 1 }
+      if (k == d) Dropped else Keeps
+    } else tie(q, qo, p, po, d)
+
+  /** The full test behind the score gate, in one fused pass:
+    * strict-better flags both ways, NaN incomparability, and equality
+    * (NaN equal to NaN). */
   private def tie(q: Array[Double], qo: Int, p: Array[Double], po: Int, d: Int): Int = {
     var qBetter = false
     var pBetter = false

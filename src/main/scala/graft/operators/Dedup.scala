@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -604,9 +605,10 @@ object Dedup {
    * fixpoint and a loud failure at the round cap. Each round's labels
    * are checkpointed (reliably when the context has a checkpoint dir,
    * locally otherwise), so a round's plan does not grow with the rounds
-   * before it. The distributed path is EAGER like the pair finders
-   * (result persisted, iteration caches released) — `unpersist()` the
-   * result when looping.
+   * before it; each round frees the previous round's checkpoint (its
+   * blocks, or its files under the checkpoint dir). The distributed
+   * path is EAGER like the pair finders (result persisted, every
+   * round's labels freed) — `unpersist()` the result when looping.
    */
   def labelComponents(
       df: DataFrame, idCol: String, pairsRaw: DataFrame,
@@ -680,14 +682,14 @@ object Dedup {
             // 6 GB driver out of heap at diameter 5. A checkpoint's plan
             // is one RDD scan. Reliable when the session has a
             // checkpoint dir (it survives executor loss); otherwise
-            // local, kept in executor storage like the cache it replaces
-            // and released by the context cleaner once unreachable.
+            // local, kept in executor storage like the cache it replaces.
+            // Either way the previous round's data is freed here.
             val step = joined.select(col("id"),
               least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
             val next =
               if (step.sparkSession.sparkContext.getCheckpointDir.isDefined) step.checkpoint()
               else step.localCheckpoint()
-            labels.unpersist()
+            release(labels)
             labels = next
           }
         } finally joined.unpersist()
@@ -700,18 +702,32 @@ object Dedup {
         s"connected components did not converge within $maxRounds rounds " +
           "(component diameter exceeds the cap); raise maxRounds")
     } catch {
-      case t: Throwable => labels.unpersist(blocking = false); throw t
+      case t: Throwable => release(labels); throw t
     } finally edges.unpersist(blocking = false)
-    // materialize the labeling and release the iteration cache — a lazy
-    // return would pin `labels` forever with no handle for the caller
+    // materialize the labeling and release the last round's labels — a
+    // lazy return would pin them forever with no handle for the caller
     // (the same accumulation materializeThenRelease prevents for the
     // pair finders). Like them, the RESULT stays persisted: unpersist()
     // it when looping.
-    materializeThenRelease(
+    try materializeThenRelease(
       df.select(col(idCol).cast("long").as("id"))
         .join(labels, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id")),
-      labels)
+        .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id")))
+    finally release(labels)
+  }
+
+  /** Frees a round's labels. The first round's are cached; later rounds'
+    * are checkpoints, which `unpersist()` does not free (they are no
+    * CacheManager entry), so their RDD's blocks (local) and checkpoint
+    * files (reliable) are freed directly. */
+  private def release(labels: DataFrame): Unit = labels.queryExecution.logical match {
+    case r: LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(labels.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+      }
+    case _ => labels.unpersist(blocking = false)
   }
 
   /**

@@ -233,17 +233,22 @@ object SkylineOps {
         }
       }
     val sky = local.repartition(p, col("_1")).mapPartitions { it =>
-      val recs = it.toArray
-      // every key received carries all origins; the task runs its slices
-      val origins = recs.filter(_._1 == recs.head._1).sortBy(r => (r._2, r._3))
-      val sizes = origins.map(_._4.length / d)
-      val n = sizes.sum
-      if (n > cap) throw SkylineAggExpr.skylineCapTrip(cap)
-      val u = SkylineCore.ScoreSorted(d, origins.flatMap(_._4),
-        sizes.indices.toArray.flatMap(o => Array.fill(sizes(o))(o)))
-      val rank = (j: Int) => (n * math.sqrt(j.toDouble / p)).toInt
-      recs.iterator.map(r => keys.indexOf(r._1)).distinct
-        .flatMap(j => (rank(j) until rank(j + 1)).iterator.filter(u.survives))
+      // a task receives the key of its own slice j (see `sliceKeys`) once
+      // from every origin. U is counted as it arrives, so an oversized
+      // union trips the cap before the task holds it.
+      var j = -1
+      var n = 0L
+      val origins = mutable.ArrayBuffer.empty[(Int, Long, Array[Double])]
+      it.foreach { r =>
+        j = keys.indexOf(r._1)
+        n += r._4.length / d
+        if (n > cap) throw SkylineAggExpr.skylineCapTrip(cap)
+        origins += ((r._2, r._3, r._4))
+      }
+      // origin ids must agree across tasks: sorted, not arrival order
+      val u = SkylineCore.ScoreSorted.union(d, origins.sortBy(o => (o._1, o._2)).map(_._3).toArray)
+      val rank = (s: Int) => (n * math.sqrt(s.toDouble / p)).toInt
+      (if (j < 0) Iterator.empty else (rank(j) until rank(j + 1)).iterator.filter(u.survives))
         .map(i => u.coords.slice(i * d, i * d + d))
     }
     sky.select((0 until d).map(i => col("value")(i).as(s"_d$i")): _*)
@@ -698,7 +703,9 @@ object SkylineOps {
      * of U; a skyline point is dominated by nothing. The equality rule
      * keeps one copy of a point found by several origins. The buffer cap
      * (`spark.graft.skyline.maxBufferPoints`) bounds a partition's
-     * frontiers together and U, and trips loudly past either.
+     * frontiers together and U, and trips loudly past either; a verify
+     * task counts U as it arrives. It bounds one task: an executor
+     * holds one U per running verify task.
      *
      * @param dims   (column, direction) per skyline dimension
      * @param hint   optional cell scheme for the local stage (see [[PartitionHint]])

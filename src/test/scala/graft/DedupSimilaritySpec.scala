@@ -1018,14 +1018,21 @@ class DedupSimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     // a path 0-1-...-L needs L propagation rounds plus one to see the
     // fixpoint; L = 19 is the deepest the default 20 rounds allow. Each
-    // round's plan must stay constant-size for these to finish.
+    // round's plan must stay constant-size for these to finish, and once
+    // the result is unpersisted no round's checkpoint may stay behind.
+    val sc = spark.sparkContext
     for (len <- Seq(8, 19)) {
       val ids = (0L to len).toDF("id")
       val pairs = (0L until len).map(i => (i + 1, i)).toDF("id1", "id2")
       def labels(driverMaxEdges: Int) = {
+        val before = sc.getPersistentRDDs.keySet
         val out = Dedup.labelComponents(ids, "id", pairs, driverMaxEdges = driverMaxEdges)
         try out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        finally out.unpersist()
+        finally {
+          out.unpersist(blocking = true)
+          // block removal is asynchronous; the driver-side registry is not
+          assert(sc.getPersistentRDDs.keySet.subsetOf(before), s"path of length $len")
+        }
       }
       val viaDriver = labels(1000000)
       assert(viaDriver == (0L to len).map(_ -> 0L).toSet)

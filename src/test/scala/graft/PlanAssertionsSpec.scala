@@ -84,6 +84,19 @@ class PlanAssertionsSpec extends AnyFunSuite {
       s"top-k heap must aggregate map-side first:\n$topk")
   }
 
+  test("batch skylines verify on defaultParallelism tasks: a set-count exchange, no single partition") {
+    // the local frontiers reach the verify tasks through a repartition
+    // to a set count, which AQE never coalesces; a SinglePartition
+    // exchange would be a one-task global merge
+    val p = spark.sparkContext.defaultParallelism
+    for (name <- Seq("sky_li_2d", "sky_hint_dim", "sky_hint_angle")) {
+      val sky = plan(name)
+      assert(s"hashpartitioning\\(_1#\\d+, $p\\), REPARTITION_BY_NUM".r.findFirstIn(sky).isDefined,
+        s"$name: the verify exchange must be a repartition into $p partitions:\n$sky")
+      assert(!sky.contains("SinglePartition"), s"$name: no stage may run on one partition:\n$sky")
+    }
+  }
+
   test("ann_pq / ann_topk_bq: compressed scans broadcast the QUERY side, keep the " +
       "partial top-k split, and never fall to CartesianProduct") {
     for (name <- Seq("ann_pq", "ann_topk_bq")) {

@@ -99,24 +99,26 @@ class SkylineSparkSpec extends AnyFunSuite {
   }
 
   test("the verify stage trips the buffer cap when the union of local frontiers exceeds it") {
-    // a 2-D anti-chain of 320 points over 8 partitions: each local
-    // frontier holds 40 points, under the cap of 100, but their union
-    // U holds 320
-    val rows = (0 until 320).map(i => Row(i.toDouble, (320 - i).toDouble))
-    val schema = StructType(Seq(StructField("x1", DoubleType, false), StructField("x2", DoubleType, false)))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
-    val dims = Seq("x1" -> Min, "x2" -> Min)
-    spark.conf.set("spark.graft.skyline.maxBufferPoints", "100")
-    try {
-      val e = intercept[Exception] { df.skyline(dims).collect() }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).take(10)
-        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
-      assert(msgs.contains("skyline buffer exceeded 100 points (spark.graft.skyline.maxBufferPoints)"), msgs)
-      // each partition's 40 points are its local frontier, within the
-      // cap: the trip is the verify stage's
-      assert(df.rdd.glom().map(_.length).collect().forall(_ == 40))
-    } finally spark.conf.unset("spark.graft.skyline.maxBufferPoints")
-    assert(df.skyline(dims).count() == 320)
+    // 2-D anti-chains of `per` points in each of `parts` partitions: each
+    // local frontier is its partition's points, under the cap of 100,
+    // but their union U holds 3.2 times the cap, then about 32 times it
+    for ((parts, per) <- Seq((8, 40), (32, 99))) {
+      val n = parts * per
+      val rows = (0 until n).map(i => Row(i.toDouble, (n - i).toDouble))
+      val schema = StructType(Seq(StructField("x1", DoubleType, false), StructField("x2", DoubleType, false)))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+      val dims = Seq("x1" -> Min, "x2" -> Min)
+      spark.conf.set("spark.graft.skyline.maxBufferPoints", "100")
+      try {
+        val e = intercept[Exception] { df.skyline(dims).collect() }
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+          .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+        assert(msgs.contains("skyline buffer exceeded 100 points (spark.graft.skyline.maxBufferPoints)"), msgs)
+        // the trip is the verify stage's, not a local frontier's
+        assert(df.rdd.glom().map(_.length).collect().forall(_ == per))
+      } finally spark.conf.unset("spark.graft.skyline.maxBufferPoints")
+      assert(df.skyline(dims).count() == n)
+    }
   }
 
   test("under-covering explicit bounds stay correct and don't overflow the key cast") {
