@@ -321,7 +321,8 @@ object SkylineCore {
   /**
    * MIN-oriented points held flat (stride `d`) in ascending score order
    * (the [[Frontier]] score, NaN last): the dominance-count kernels of
-   * `kSkybandJoin` and `topKDominating`. `q` dominates `p` iff
+   * `kSkybandJoin` and `topKDominating`, and the dominance filter of
+   * `skylineExternal`. `q` dominates `p` iff
    * `q(i) <= p(i)` everywhere and `<` somewhere, in Java semantics, so a
    * point with a NaN coordinate neither dominates nor is dominated.
    *

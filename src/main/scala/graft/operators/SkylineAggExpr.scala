@@ -21,11 +21,12 @@ import graft.core.SkylineCore.Frontier
  * buffers at the final stage; only skyline buffers ever cross the wire,
  * serialized as a flat double payload.
  *
- * It serves the grouped skyline (`skylineBy`), the streaming skyline,
- * SQL `skyline_agg` and `skylineExternal`'s sample frontier, where an
- * aggregate is what the surrounding plan needs. The batch `skyline`
- * runs as a parallel verify instead (`SkylineOps`), since this
- * aggregate's final merge is one task.
+ * It serves the grouped skyline (`skylineBy`), the streaming skyline
+ * and SQL `skyline_agg`, where an aggregate is what the surrounding
+ * plan needs. The batch `skyline` runs as a parallel verify instead,
+ * and `skylineExternal` as filters against a broadcast
+ * `SkylineCore.ScoreSorted` (`SkylineOps`), since this aggregate's
+ * final merge is one task.
  *
  * Output: array<array<double>> of the skyline points, sorted
  * lexicographically for determinism.

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.expressions.{KnownNotNull, Literal}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
@@ -210,10 +210,7 @@ object SkylineOps {
     val d = minDir.length
     val keys = sliceKeys(spark.sparkContext.defaultParallelism)
     val p = keys.length
-    // the columns hold no null (see `prepared`); saying so lets the
-    // encoder read each row's array with one primitive copy, not boxing
-    val coords = (0 until d).map(i => ColumnShim.column(KnownNotNull(ColumnShim.expression(col(s"_d$i")))))
-    val local = pts.select(array(coords: _*).as("_pt")).as[Array[Double]]
+    val local = pointsOf(pts, d)
       .mapPartitions { rows =>
         val part = TaskContext.getPartitionId()
         val cells = new mutable.LongMap[Frontier]
@@ -252,6 +249,29 @@ object SkylineOps {
         .map(i => u.coords.slice(i * d, i * d + d))
     }
     sky.select((0 until d).map(i => col("value")(i).as(s"_d$i")): _*)
+  }
+
+  /** The `_d{i}` columns of `pts` as one array column `_pt` per row. The
+    * columns hold no null (see `prepared`); saying so lets the encoder
+    * read each row's array with one primitive copy, not boxing. */
+  private def pointsOf(pts: DataFrame, d: Int): Dataset[Array[Double]] = {
+    import pts.sparkSession.implicits._
+    val coords = (0 until d).map(i => ColumnShim.column(KnownNotNull(ColumnShim.expression(col(s"_d$i")))))
+    pts.select(array(coords: _*).as("_pt")).as[Array[Double]]
+  }
+
+  /** Writes to `path`, as `_d{i}` columns, the rows of `pts` that no
+    * row of `refs` dominates (both as MIN-oriented `_d{i}` columns, in
+    * Java semantics; see [[SkylineCore.ScoreSorted]]). `refs` is
+    * collected to the driver and reaches the tasks as a broadcast,
+    * which is dropped once the write is done. */
+  private def writeUndominated(pts: DataFrame, refs: DataFrame, d: Int, path: String): Unit = {
+    val sorted = SkylineCore.ScoreSorted(d, pointsOf(refs, d).collect().flatten)
+    val b = pts.sparkSession.sparkContext.broadcast(sorted)
+    try pointsOf(pts, d).filter(x => b.value.dominators(x, 0, 1) == 0)
+      .select((0 until d).map(i => col("_pt")(i).as(s"_d$i")): _*)
+      .write.parquet(path)
+    finally b.destroy()
   }
 
   /** For each slice j < p, an Int key that Spark's hash partitioning
@@ -448,9 +468,8 @@ object SkylineOps {
      * cap (`spark.graft.skyline.maxBufferPoints`) trips because the
      * Pareto frontier itself approaches the input size (high-d or
      * anti-correlated data; see SKYBENCH_r7.json's `cap_trip` outcome).
-     * The standard path holds the whole global frontier in ONE
-     * aggregation buffer; here no single buffer ever holds more than a
-     * window of it.
+     * The standard path holds the union of the local frontiers in each
+     * verify task; here no task ever holds more than a window of it.
      *
      * Algorithm — an external sort-filter-skyline cascade (the monotone
      * score of SFS, Chomicki et al. ICDE'03, + the window-and-temp-file
@@ -461,41 +480,44 @@ object SkylineOps {
      *     the output directly (NaN is incomparable under dominance —
      *     never dominated, never dominating — exactly the in-memory
      *     aggregate's treatment);
-     *  2. score each point E = Σ_i (v_i - lo_i)/(hi_i - lo_i). IEEE
-     *     add/sub/div are monotone, so p dominates q ⟹ E(p) <= E(q)
-     *     — possibly EQUAL under rounding, which is why every boundary
-     *     below is E-closed;
-     *  3. pre-filter (round 9): drop every point strictly dominated by
-     *     the frontier of a bounded random sample — sound because
-     *     dominance by ANY point disqualifies, and the dominators
+     *  2. score each point E = Σ_i (v_i - lo_i)/(hi_i - lo_i), with lo_i
+     *     and hi_i taken over the finite values and v_i clamped into
+     *     them. The clamp and IEEE add/sub/div are monotone, so p
+     *     dominates q ⟹ E(p) <= E(q) — possibly EQUAL under rounding,
+     *     which is why every boundary below is E-closed;
+     *  3. pre-filter (round 9): drop every point that a point of a
+     *     bounded random sample strictly dominates — sound because
+     *     dominance by ANY point disqualifies, and the sample points
      *     themselves remain candidates; on correlated/low-d data this
      *     alone removes almost everything before the first pass;
      *  4. loop until no survivors: take eT = the pass window-th
      *     smallest E (a TakeOrdered over the score column only; the
      *     window GROWS geometrically from `windowSize` per pass, capped
-     *     a sixteenth under the aggregate buffer cap so frontier-heavy
-     *     inputs finish in O(n/cap) passes without ever risking a cap
-     *     trip); the
-     *     HEAD block {E <= eT} contains every possible dominator of any
-     *     of its own points, so its frontier — computed as a broadcast
-     *     self ANTI join of the head (a head point stays iff no head
-     *     point strictly dominates it) — is a subset of the global
-     *     skyline: append it to the on-disk result, then broadcast it
-     *     against the strictly-greater tail as a nested-loop ANTI join
-     *     (dominance = conjunction of d column comparisons + one strict
-     *     disjunct — codegen-friendly, no HOFs), and recurse on the
-     *     filtered tail. Transitivity makes filtering against the head
-     *     FRONTIER (not the whole head) sufficient: a dominated
-     *     dominator implies a surviving one.
+     *     a sixteenth under the buffer cap so frontier-heavy inputs
+     *     finish in O(n/cap) passes); the HEAD block {E <= eT} contains
+     *     every possible dominator of any of its own points, so its
+     *     frontier — the head points no head point strictly dominates,
+     *     kept by a parallel filter over the head's partitions — is a
+     *     subset of the global skyline: append it to the on-disk result,
+     *     then drop every point of the strictly-greater tail that a
+     *     head-frontier point dominates, and recurse on the filtered
+     *     tail. Transitivity makes filtering against the head FRONTIER
+     *     (not the whole head) sufficient: a dominated dominator implies
+     *     a surviving one.
+     *
+     * All three dominance steps are one filter: the reference set (the
+     * sample, the head, the head frontier) is collected to the driver as
+     * a [[SkylineCore.ScoreSorted]] and broadcast, and a row stays iff
+     * no reference point dominates it ([[SkylineCore.ScoreSorted.dominators]]),
+     * so dominance keeps the kernels' Java semantics.
      *
      * Memory shape at 100 TB: the TakeOrdered carries 8-byte scores
-     * only; the head frontier needs no aggregate buffer, so no cap can
-     * trip there — its self anti-join broadcasts the head itself (the
-     * pass window, kept a sixteenth under the buffer cap, plus any
-     * E-tie spill past it: w·d doubles); the tail's broadcast is the
-     * head frontier; only the step-3 sample's frontier runs through the
-     * bounded aggregate, on at most 8192 points; survivors and
-     * per-pass frontiers round-trip through parquet RUNS on disk (the
+     * only; no aggregate buffer is involved, so no cap can trip. The
+     * driver and every executor hold one reference set at a time: the
+     * sample (at most 8192 points) or the head (the pass window, kept a
+     * sixteenth under the buffer cap, plus any E-tie spill past it: w·d
+     * doubles), whose frontier is no larger; survivors and per-pass
+     * frontiers round-trip through parquet RUNS on disk (the
      * external-BNL temp files — which also resets plan lineage each
      * pass: a persist()-based cascade compounds the logical plan
      * exponentially, since each pass references the previous one from
@@ -529,6 +551,7 @@ object SkylineOps {
         windowSize: Int = 1 << 16,
         maxPasses: Int = 1 << 20): DataFrame = {
       require(windowSize >= 1, s"windowSize must be >= 1, got $windowSize")
+      SkylineOps.lastExternalPassCount = 0
       val spark = df.sparkSession
       val d = dims.length
       val dim = (i: Int) => col(s"_d$i")
@@ -563,64 +586,50 @@ object SkylineOps {
       clean.limit(0).write.mode("append").parquet(s"$resultDir/pass=0")
       projected.filter(anyNaN).write.mode("append").parquet(s"$resultDir/pass=0")
 
-      val stats = dims.indices.flatMap(i => Seq(min(dim(i)), max(dim(i)))) :+
+      // E's bounds are taken over finite values and each coordinate is
+      // clamped into them: one infinity would otherwise make hi - lo
+      // infinite and E NaN, and a NaN E turns the window schedule off. A
+      // clamp is monotone, so dominance still implies E <=.
+      val finite = (i: Int) => when(abs(dim(i)) < Double.PositiveInfinity, dim(i))
+      val stats = dims.indices.flatMap(i => Seq(min(finite(i)), max(finite(i)))) :+
         count(lit(1)).as("_n")
       val statsRow = clean.agg(stats.head, stats.tail: _*).head()
-      if (!statsRow.isNullAt(0)) {
+      val nClean = statsRow.getLong(2 * d)
+      if (nClean > 0) {
         val e = dims.indices.map { i =>
-          val lo = statsRow.getDouble(2 * i)
-          val hi = statsRow.getDouble(2 * i + 1)
-          if (hi > lo) (dim(i) - lit(lo)) / lit(hi - lo) else lit(0.0)
+          (statsRow.get(2 * i), statsRow.get(2 * i + 1)) match {
+            case (lo: Double, hi: Double) if hi > lo =>
+              (least(greatest(dim(i), lit(lo)), lit(hi)) - lit(lo)) / lit(hi - lo)
+            case _ => lit(0.0)
+          }
         }.reduce(_ + _)
-        val nClean = statsRow.getLong(2 * d)
         val cap = SkylineAggExpr.configuredCap(spark)
-        // dominance predicate of a broadcast frontier (_w*) against
-        // candidate rows (_d*): componentwise <=, somewhere < — shared
-        // by the sampled pre-filter and the per-pass tail anti-join
-        val allLe = dims.indices.map(i => col(s"_w$i") <= dim(i)).reduce(_ && _)
-        val oneLt = dims.indices.map(i => col(s"_w$i") < dim(i)).reduce(_ || _)
-        def frontierOf(src: DataFrame, as: Int => String): DataFrame =
-          src.agg(skyAgg(dims.indices.map(dim), Array.fill(d)(true)).as("_sky"))
-            .select(explode(col("_sky")).as("_pt"))
-            .select(dims.indices.map(i =>
-              element_at(col("_pt"), i + 1).as(as(i))): _*)
         // Geometric window growth: pass p takes the min(windowSize *
         // 2^(p-1), maxWindow)-smallest scores, so frontier-heavy inputs
         // (where each pass removes little beyond its own head) finish in
         // O(log + n/maxWindow) passes instead of n/windowSize. maxWindow
-        // stays a sixteenth under the aggregate's buffer cap: the head
-        // frontier is at most head-sized, so growth can never turn the
-        // bounded-memory completion path into a cap trip (the 1/16
+        // stays a sixteenth under the buffer cap, so the head the driver
+        // collects stays in the magnitude the cap allows (the 1/16
         // headroom absorbs E-tie spill past the window).
         val maxWindow = math.max(windowSize, cap - (cap >>> 4))
         try {
           var survPath = s"$workDir/surv_0"
-          // Sampled pre-filter: the frontier of a driver-bounded random
-          // sample dominates most of a correlated input, and dominance
-          // by ANY point disqualifies — so anti-joining the full set
-          // against the sample's frontier before pass 1 is sound (the
-          // frontier points themselves pass: a point never strictly
+          // Sampled pre-filter: a driver-bounded random sample dominates
+          // most of a correlated input, and dominance by ANY point
+          // disqualifies — so dropping every point a sample point
+          // dominates before pass 1 is sound (a point never strictly
           // dominates itself) and cuts the cascade to 1-2 passes on
           // low-d data. Skipped when the input already fits one window.
           // 8k sample: survival odds of a uniform point against an
-          // m-sample's frontier scale ~(ln m)^(d-1)/((d-1)!·m) — already
-          // ~0.1% at d=2 and ~13% at d=10 for m=8192, and growing m 8x
-          // buys almost nothing more while the pre-filter's nested-loop
-          // cost (n × |sample frontier|) scales linearly with m. On
-          // frontier-heavy data the pre-filter removes little either
+          // m-sample scale ~(ln m)^(d-1)/((d-1)!·m) — already ~0.1% at
+          // d=2 and ~13% at d=10 for m=8192, and growing m 8x buys almost
+          // nothing more while the scan against the sample grows with m.
+          // On frontier-heavy data the pre-filter removes little either
           // way, so small m also bounds the wasted work there.
           val sampleTarget = math.min(math.min(windowSize, maxWindow), 1 << 13)
-          val candidates =
-            if (nClean <= 2L * sampleTarget) clean.withColumn("_e", e)
-            else {
-              val frac = math.min(1.0, sampleTarget.toDouble / nClean)
-              val sampleFront = frontierOf(
-                clean.sample(withReplacement = false, frac, seed = 42L),
-                i => s"_w$i")
-              clean.withColumn("_e", e)
-                .join(broadcast(sampleFront), allLe && oneLt, "left_anti")
-            }
-          candidates.write.parquet(survPath)
+          if (nClean <= 2L * sampleTarget) clean.write.parquet(survPath)
+          else writeUndominated(clean, clean.sample(withReplacement = false,
+            math.min(1.0, sampleTarget.toDouble / nClean), seed = 42L), d, survPath)
           var nLeft = spark.read.parquet(survPath).count()
           var pass = 0
           while (nLeft > 0) {
@@ -633,38 +642,20 @@ object SkylineOps {
               windowSize.toLong << math.min(pass - 1, 30), maxWindow.toLong).toInt
             val surv = spark.read.parquet(survPath)
             // the passWindow-th smallest score; scores only cross the wire
-            val eT = surv.select(col("_e")).orderBy(col("_e").asc)
+            val eT = surv.select(e.as("_e")).orderBy(col("_e").asc)
               .limit(passWindow).agg(max(col("_e"))).head().getDouble(0)
             // E-closed head: contains every possible dominator of its own
             // points even when rounding collapses a strict dominance into
-            // an E-tie. Its frontier goes straight to this pass's result
-            // run; the tail anti-join reads it back — a constant-size
-            // plan per pass, no recomputation, no lineage growth.
+            // an E-tie, so its frontier is the set of head points no head
+            // point dominates (exact duplicates collapsed up front, so
+            // equality never eliminates). The frontier goes straight to
+            // this pass's result run and the tail filter reads it back:
+            // a constant-size plan per pass, no lineage growth.
             val passDir = s"$resultDir/pass=$pass"
-            // Head frontier via SELF broadcast anti-join, NOT the
-            // aggregate: the aggregate's final merge re-inserts the
-            // whole head into one buffer on ONE thread — O(w·f) serial,
-            // the measured wall on frontier-heavy data where f ≈ w. The
-            // anti-join does the identical set arithmetic (a point is in
-            // the frontier iff no head point strictly dominates it;
-            // exact duplicates collapsed up front, so equality never
-            // eliminates) as a codegen'd nested loop, parallel across
-            // the head's partitions with early exit on first dominator.
-            // Memory: the broadcast head is w·d doubles — the same
-            // magnitude as the buffer the in-memory cap already allows.
-            val head = surv.filter(col("_e") <= eT)
-              .select(dims.indices.map(i => dim(i)): _*)
-            val headW = head
-              .select(dims.indices.map(i => dim(i).as(s"_w$i")): _*)
-            head.join(broadcast(headW), allLe && oneLt, "left_anti")
-              .write.parquet(passDir)
-            // dominance anti-join of the tail against the head frontier
-            val front = spark.read.parquet(passDir)
-              .select(dims.indices.map(i => dim(i).as(s"_w$i")): _*)
+            val head = surv.filter(e <= eT)
+            writeUndominated(head, head, d, passDir)
             val nextPath = s"$workDir/surv_$pass"
-            surv.filter(col("_e") > eT)
-              .join(broadcast(front), allLe && oneLt, "left_anti")
-              .write.parquet(nextPath)
+            writeUndominated(surv.filter(e > eT), spark.read.parquet(passDir), d, nextPath)
             rm(survPath)
             survPath = nextPath
             nLeft = spark.read.parquet(nextPath).count()

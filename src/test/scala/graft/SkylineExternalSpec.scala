@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Direction, SkylineCore}
@@ -86,7 +88,57 @@ class SkylineExternalSpec extends AnyFunSuite {
     val dims: Seq[(String, Direction)] = Seq("c0" -> Min, "c1" -> Min)
     val got = toDf(pts, 2).skylineExternal(dims, windowSize = 1)
     assert(got.count() == 2, "duplicates must collapse (set semantics)")
+    // (1,1) alone heads pass 1; the two others tie in pass 2
+    toDf(Vector(Array(0.0, 10.0), Array(1.0, 1.0), Array(10.0, 0.0)), 2)
+      .skylineExternal(dims, windowSize = 1)
+    assert(SkylineOps.lastExternalPassCount == 2)
     assert(toDf(Vector.empty, 2).skylineExternal(dims).count() == 0)
+    assert(SkylineOps.lastExternalPassCount == 0, "an empty input must not keep the last pass count")
+  }
+
+  test("an infinite coordinate keeps the window schedule") {
+    val rnd = new scala.util.Random(5L)
+    // anti-correlated: every point is on the frontier, so each pass
+    // takes one window; a NaN score would put every point in pass 1
+    val base = Vector.fill(50) {
+      val raw = Array.fill(2)(rnd.nextDouble() + 0.01); val s = raw.sum
+      raw.map(_ / s)
+    }
+    val dims: Seq[(String, Direction)] = Seq("c0" -> Min, "c1" -> Min)
+    for (inf <- Seq(Array(Double.NegativeInfinity, 100.0), Array(Double.PositiveInfinity, -1.0))) {
+      val pts = base :+ inf
+      val got = collectSet(toDf(pts, 2).skylineExternal(dims, windowSize = 1), 2)
+      assert(got == brute(pts, Array(true, true)), s"with ${inf.toSeq}")
+      assert(SkylineOps.lastExternalPassCount > 1,
+        s"with ${inf.toSeq}: ${SkylineOps.lastExternalPassCount} pass(es)")
+    }
+  }
+
+  test("the cascade plans no broadcast nested-loop join") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "graft_sentinel")) sentinelSeen.countDown()
+        else plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val rnd = new scala.util.Random(13L)
+      // enough points for the sampled pre-filter, and a window small
+      // enough for several passes
+      val pts = Vector.fill(400)(Array.fill(3)(rnd.nextDouble()))
+      val dims: Seq[(String, Direction)] = Seq("c0" -> Min, "c1" -> Max, "c2" -> Min)
+      toDf(pts, 3).skylineExternal(dims, windowSize = 4)
+      assert(SkylineOps.lastExternalPassCount > 1)
+      // listener events arrive in order, so once this query's event is
+      // in, so is every earlier query's
+      spark.range(1).toDF("graft_sentinel").collect()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(!plans.isEmpty)
+      plans.forEach(p => assert(!p.contains("BroadcastNestedLoopJoin"), p))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("NaN rows are incomparable and survive, matching the in-memory operator") {

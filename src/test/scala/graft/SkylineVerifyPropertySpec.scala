@@ -10,8 +10,9 @@ import graft.operators.{AngleHint, DimHint, GridHint, NoHint, PartitionHint}
 import graft.operators.SkylineOps._
 
 /**
- * The batch skyline's local stage and parallel verify against
- * `SkylineCore.skylineOf`, under every hint: 1 to 8 input partitions,
+ * The batch skyline's local stage and parallel verify, under every
+ * hint, and the external cascade (`skylineExternal`, windows of 1 to 8
+ * points) against `SkylineCore.skylineOf`: 1 to 8 input partitions,
  * empty ones included; d = 1..7 with MIN/MAX mixes (MIN only for
  * `AngleHint`); NaN, signed zeros and infinities drawn; and exact
  * duplicates, some of them copied into another partition, so that equal
@@ -21,8 +22,8 @@ import graft.operators.SkylineOps._
 object SkylineVerifyPropertySpec extends Properties("skylineVerify") {
   private lazy val spark = SparkTestSession.spark
 
-  // each case runs two Spark stages (three under Dim/Grid); 30 cases a
-  // property keep the spec short
+  // each case runs two Spark stages (three under Dim/Grid; a few jobs a
+  // pass for the cascade); 30 cases a property keep the spec short
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(30)
 
@@ -80,4 +81,8 @@ object SkylineVerifyPropertySpec extends Properties("skylineVerify") {
   property("GridHint matches skylineOf") = matches(Gen.choose(1, 3).map(GridHint(_)))
   property("AngleHint matches skylineOf") =
     matches(Gen.choose(1, 4).map(AngleHint(_)), minOnly = true)
+  property("skylineExternal matches skylineOf") =
+    forAll(caseGen(minOnly = false), Gen.choose(1, 8)) { (c, w) =>
+      c.check(c.frame.skylineExternal(c.dims, windowSize = w))
+    }
 }
